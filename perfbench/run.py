@@ -1,14 +1,16 @@
 """Benchmark entry point: one workload, one seed, one fresh process.
 
-    python3 perfbench/run.py --workload geo_variogram_krige --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload geo_variogram_krige --seed 1 --seconds 10 --trace 0 \
+        --cores nproc --shuffle-partitions 64 --driver-memory-gb 2
 
 The run pins its settings, starts one ``local[nproc]`` Spark session
 (several times, to time set-up), makes the workload's inputs from the seed
-and stores them as parquet, warms up until the per-iteration time stops
-falling, then times repeated iterations for ``--seconds``.  Every
-iteration's output is checked outside the timed window.  The last stdout
-line is one JSON object: the end-to-end metrics with ``--trace 0``, the
-per-layer metrics of a separate traced pass with ``--trace 1``.
+and stores them as parquet, runs a fixed number of warm-up iterations, then
+a fixed number of timed iterations (set by ``--seconds``, never by how fast
+the code runs).  Every iteration's output is checked outside the timed
+window.  The last stdout line is one JSON object: the end-to-end metrics
+with ``--trace 0``, the per-layer metrics of a separate traced pass with
+``--trace 1``.
 See perfbench/README.md.
 """
 
@@ -27,13 +29,14 @@ import traceback
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
-# A run stops starting iterations once the next one would end past this many
-# seconds after start (TIMED_MIN_ITERS timed iterations always run), so that
-# the 4 + 22 x 2 runs of a full benchmark pass stay within an hour.
-RUN_BUDGET_S = 62
-WARM_MIN_ITERS = 2
+# The end-to-end medians always come from the same iteration indices (the
+# JIT is still speeding iterations up, so a speed-dependent count would
+# credit the faster side with extra warm-up): WARM_ITERS warm-up
+# iterations, then round(--seconds / ITER_BUDGET_S) timed ones, at least
+# TIMED_MIN_ITERS.
+WARM_ITERS = 2
 TIMED_MIN_ITERS = 3
-WARM_SETTLED = 0.95  # warm-up ends once an iteration is no faster than 95% of the best so far
+ITER_BUDGET_S = 3.0
 TRACE_ITERS = 2
 SETUPS = 3  # session set-ups timed per run; setup_s is their median
 
@@ -42,11 +45,14 @@ def parse_args(argv=None) -> argparse.Namespace:
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     p.add_argument("--workload", required=True)
     p.add_argument("--seed", type=int, required=True)
-    p.add_argument("--seconds", type=float, required=True, help="timed iteration seconds to collect (at least TIMED_MIN_ITERS iterations)")
-    p.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    p.add_argument("--cores", default="nproc", help="local[N] cores; 'nproc' = CPUs this process may use")
-    p.add_argument("--shuffle-partitions", type=int, default=64)
-    p.add_argument("--driver-memory-gb", type=int, default=2)
+    p.add_argument("--seconds", type=float, required=True,
+                   help=f"timed iterations = round(seconds / {ITER_BUDGET_S}), at least {TIMED_MIN_ITERS}")
+    p.add_argument("--trace", type=int, choices=(0, 1), required=True)
+    # the run settings live only in BENCHMARK.json's command
+    p.add_argument("--cores", choices=("nproc",), required=True,
+                   help="local[N] with N = the CPUs this process may use")
+    p.add_argument("--shuffle-partitions", type=int, required=True)
+    p.add_argument("--driver-memory-gb", type=int, required=True)
     return p.parse_args(argv)
 
 
@@ -145,24 +151,9 @@ class Runner:
         cpu = {k: cpu1[k] - cpu0[k] for k in cpu0}
         return {"wall": wall, "cpu": sum(cpu.values()), "cpu_kind": cpu, "jobs": jobs}
 
-    def loop(self, until, deadline: float, min_iters: int) -> list[dict]:
-        """Iterate until ``until(done)``, or until the next iteration (taken
-        to last as long as the previous one) would end past ``deadline``
-        with at least ``min_iters`` done, or after three failures in a row."""
-        done: list[dict] = []
-        streak = 0
-        last = 0.0
-        while streak < 3:
-            if len(done) >= min_iters and time.perf_counter() + last > deadline:
-                break
-            r = self.iteration()
-            streak = 0 if r else streak + 1
-            if r:
-                done.append(r)
-                last = r["wall"]
-                if until(done):
-                    break
-        return done
+    def iterations(self, n: int) -> list[dict]:
+        """Attempt ``n`` iterations; return the ones that passed."""
+        return [r for r in (self.iteration() for _ in range(n)) if r]
 
 
 def main(argv=None) -> int:
@@ -172,7 +163,7 @@ def main(argv=None) -> int:
         print(f"perfbench: no gstools_core_spark package next to {ROOT / 'perfbench'}", file=sys.stderr)
         return 2
     spec = json.loads((ROOT / "BENCHMARK.json").read_text())
-    cores = len(os.sched_getaffinity(0)) if args.cores == "nproc" else int(args.cores)
+    cores = len(os.sched_getaffinity(0))
     work = ROOT / ".perfbench_work" / f"{args.workload}-{args.seed}-{os.getpid()}"
     pin_environment(work)
 
@@ -200,22 +191,9 @@ def main(argv=None) -> int:
         wl.prepare()
         prepare_s = time.perf_counter() - t_prep
         run = Runner(spark, wl)
-        deadline = t_begin + RUN_BUDGET_S
-
         with procstat.RssSampler() as rss:
-            warm_cap = time.perf_counter() + args.seconds
-
-            def settled(done):
-                walls = [d["wall"] for d in done]
-                return len(walls) >= WARM_MIN_ITERS and walls[-1] >= WARM_SETTLED * min(walls[:-1])
-
-            warm = run.loop(settled, min(warm_cap, deadline), WARM_MIN_ITERS)
-            timed_budget = args.seconds
-
-            def full(done):
-                return sum(d["wall"] for d in done) >= timed_budget and len(done) >= TIMED_MIN_ITERS
-
-            timed = run.loop(full, deadline, TIMED_MIN_ITERS)
+            warm = run.iterations(WARM_ITERS)
+            timed = run.iterations(max(TIMED_MIN_ITERS, round(args.seconds / ITER_BUDGET_S)))
         if not timed:
             print(f"perfbench: no successful timed iteration of {args.workload}", file=sys.stderr)
             return 1

@@ -4,13 +4,13 @@ and compare each end-to-end metric against its bound in BENCHMARK.json.
     python3 perfbench/steady.py --runs 10            # 2 sets x 10 seeds x each workload
     python3 perfbench/steady.py --runs 5 --sets 1 --workloads pages_pipeline_write
 
-Set k runs seeds seed0 .. seed0+runs-1 (the same seeds in every set), with
-the workloads interleaved.  Per workload and metric it prints each set's
+Every set runs seeds 1 .. runs with the workloads interleaved, for
+BENCHMARK.json's run_seconds.  Per workload and metric it prints each set's
 median and quartiles, the spread (third minus first quartile, over the
 median) and, for two sets, how much worse the second median is than the
-first.  A spread must stay within the metric's bound (setup_s excepted) and
-the set-to-set change within the bound; "steady" means every spread is
-below a third of its bound.
+first.  Every spread, and the size of the set-to-set change in either
+direction, must stay within the metric's bound; "steady" means every spread
+is below a third of its bound.
 """
 
 from __future__ import annotations
@@ -26,9 +26,9 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 
 
-def one_run(spec: dict, workload: str, seed: int, seconds: int) -> dict | None:
+def one_run(spec: dict, workload: str, seed: int) -> dict | None:
     cmd = [*spec["command"], "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", "0"]
+           "--seconds", str(spec["run_seconds"]), "--trace", "0"]
     t0 = time.perf_counter()
     p = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True, timeout=900)
     took = time.perf_counter() - t0
@@ -57,8 +57,6 @@ def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     p.add_argument("--runs", type=int, default=10, help="seeds per set")
     p.add_argument("--sets", type=int, default=2)
-    p.add_argument("--seed0", type=int, default=1)
-    p.add_argument("--seconds", type=int, default=spec["run_seconds"])
     p.add_argument("--workloads", nargs="*", default=names)
     args = p.parse_args(argv)
 
@@ -68,7 +66,7 @@ def main(argv=None) -> int:
         print(f"set {k + 1}/{args.sets}", flush=True)
         for i in range(args.runs):
             for w in args.workloads:
-                r = one_run(spec, w, args.seed0 + i, args.seconds)
+                r = one_run(spec, w, i + 1)
                 if r:
                     results[w][k].append(r)
     print(f"total {time.perf_counter() - t0:.0f}s for "
@@ -97,11 +95,10 @@ def main(argv=None) -> int:
                 a, b = sets[0]["median"], sets[-1]["median"]
                 worse = (b - a) if m["better"] == "lower" else (a - b)
                 change = worse / a if a else 0.0
-            spread_ok = name == "setup_s" or all(s["spread"] <= bound for s in sets)
-            change_ok = change is None or change <= bound
+            spread_ok = all(s["spread"] <= bound for s in sets)
+            change_ok = change is None or abs(change) <= bound
             ok &= spread_ok and change_ok
-            if name != "setup_s":
-                steady &= all(s["spread"] < bound / 3 for s in sets)
+            steady &= all(s["spread"] < bound / 3 for s in sets)
             flag = "" if spread_ok and change_ok else "  OUT OF BOUND"
             print(f"  {name:12s} {bound:6.3f} {cells}"
                   + (f"  {change:+.3f}" if change is not None else "") + flag)

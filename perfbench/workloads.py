@@ -329,7 +329,9 @@ class GeoVariogramKrige(Workload):
         outside its wall time: the directional variogram over the same
         points as planar (lon, lat), checked like the timed outputs, then
         the hot-cell figures, the Arrow boundary and the numpy kernels.
-        Raises ProbeCheckFailed when the directional bins miss the reference."""
+        Raises ProbeCheckFailed when the directional bins miss the reference,
+        when a variogram plan hands rows to Python workers, or when no cell
+        exceeds the fair share (the hot-cell split would not run)."""
         spark = self.spark
         pts, cond, kriged = self._probe_inputs
         nb = len(self.EDGES_DEG) - 1
@@ -343,6 +345,10 @@ class GeoVariogramKrige(Workload):
             with tr.span("variogram_directional.exec"):
                 noop_sink(dirv)
         tr.count("variogram.python_nodes", python_nodes(dirv))
+        if tr.counters["variogram.python_nodes"]:
+            raise ProbeCheckFailed(
+                f"{tr.counters['variogram.python_nodes']:.0f} Python plan nodes in the variogram plans"
+            )
         ref = self._reference(directional=True)
         for i in range(len(self.DIRS)):
             for b, ((c, g), (wc, wg)) in enumerate(zip(observed_bins(do.get, nb, i), ref[i])):
@@ -365,8 +371,12 @@ class GeoVariogramKrige(Workload):
         counts = t.groupBy(*keys).count()
         shp = int(spark.conf.get("spark.sql.shuffle.partitions"))
         total = t.count()
-        tr.count("krige.fair_share", max(256, int(total / max(shp, spark.sparkContext.defaultParallelism))))
-        tr.count("krige.max_cell_targets", counts.agg(F.max("count")).first()[0])
+        fair = max(256, int(total / max(shp, spark.sparkContext.defaultParallelism)))
+        largest = counts.agg(F.max("count")).first()[0]
+        tr.count("krige.fair_share", fair)
+        tr.count("krige.max_cell_targets", largest)
+        if largest <= fair:
+            raise ProbeCheckFailed(f"largest cell {largest} targets <= fair share {fair}: no hot-cell split")
         c = C.explode_ring(
             cond.select("lat", "lon", "val", *[e.alias(k) for e, k in zip(cells, keys)]),
             "jc0", "jc1", "rc0", "rc1",
