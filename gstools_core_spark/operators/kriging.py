@@ -171,12 +171,15 @@ def _literal_cells(df: DataFrame, cols: Sequence[str]) -> DataFrame | None:
     (possibly persisted) stats DF; materializing them (cheap — the row
     count is capped) lets krige unpersist the stats DF at
     plan-construction time and make plan-shape decisions from the actual
-    set."""
-    rows = [tuple(r[c] for c in cols) for r in df.collect()]
+    set.  Built JVM-side from literals, not ``createDataFrame(list)`` (a
+    Python RDD that Python workers serve on every execution)."""
+    rows = [
+        F.struct(*(F.lit(r[c]).cast("long").alias(c) for c in cols))
+        for r in df.collect()
+    ]
     if not rows:
         return None
-    schema = ", ".join(f"{c} long" for c in cols)
-    return df.sparkSession.createDataFrame(rows, schema)
+    return df.sparkSession.range(1).select(F.inline(F.array(*rows)))
 
 
 def cell_count_df(t: DataFrame, fine_keys: Sequence[str]) -> DataFrame:

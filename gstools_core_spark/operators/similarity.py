@@ -22,6 +22,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 from pyspark.sql.window import Window
 
 
@@ -308,6 +309,7 @@ def ivf_ann(
     relational, used by the differential-oracle gate; training quality is
     pinned by recall tests instead.
     """
+    _check_arrow_ids(rerank, (queries, query_id), (base, base_id))
     b = base.select(F.col(base_id).alias("bid"), F.col(vec_col).alias("v")).persist()
     n_clusters, centroids = _ivf_train(b, n_clusters, iters, assign)
 
@@ -323,6 +325,20 @@ def ivf_ann(
         probes, lists.select("cluster", "bid", "v"), queries, k, query_id,
         vec_col, impl=rerank,
     )
+
+
+def _check_arrow_ids(rerank: str, *id_cols: tuple[DataFrame, str]) -> None:
+    """rerank='arrow' emits ``qid long, bid long``: reject non-integer id
+    columns here, naming them, instead of deep inside a Python worker."""
+    if rerank != "arrow":
+        return
+    for df, col in id_cols:
+        dtype = df.schema[col].dataType
+        if not isinstance(dtype, IntegralType):
+            raise ValueError(
+                f"rerank='arrow' needs integer ids: column {col!r} is "
+                f"{dtype.simpleString()}"
+            )
 
 
 def _ivf_train(
@@ -506,6 +522,8 @@ def ivf_ann_from_index(
     Results match ivf_ann called with the same quantizer parameters
     (pytest-pinned with the deterministic iters=0 quantizer)."""
     spark = queries.sparkSession
+    lists = spark.read.parquet(f"{path}/lists")
+    _check_arrow_ids(rerank, (queries, query_id), (lists, "bid"))
     cents = (
         spark.read.parquet(f"{path}/centroids").orderBy("cluster").collect()
     )
@@ -519,9 +537,7 @@ def ivf_ann_from_index(
     probed = sorted(
         r["cluster"] for r in probes.select("cluster").distinct().collect()
     )
-    lists = spark.read.parquet(f"{path}/lists").where(
-        F.col("cluster").isin([int(c) for c in probed])
-    )
+    lists = lists.where(F.col("cluster").isin([int(c) for c in probed]))
     out = _ivf_score(probes, lists, queries, k, query_id, vec_col, impl=rerank)
     from gstools_core_spark.operators.cache import track
 

@@ -29,11 +29,16 @@ from gstools_core_spark.operators.pair_join import pair_join
 
 
 def bins_df(spark: SparkSession, bin_edges: Sequence[float]) -> DataFrame:
+    """(bin_id long, lo double, hi double) built JVM-side from literals:
+    ``createDataFrame(list)`` is a Python RDD that Python workers serve on
+    every execution of the otherwise pure-JVM variogram plan."""
     rows = [
-        (i, float(lo), float(hi))
+        F.struct(F.lit(i), F.lit(float(lo)), F.lit(float(hi)))
         for i, (lo, hi) in enumerate(zip(bin_edges[:-1], bin_edges[1:]))
     ]
-    return spark.createDataFrame(rows, "bin_id long, lo double, hi double")
+    # the cast names the fields and types an empty array (one edge, no bins)
+    bins = F.array(*rows).cast("array<struct<bin_id:bigint,lo:double,hi:double>>")
+    return spark.range(1).select(F.inline(bins))
 
 
 def bin_id_col(dist, bin_edges: Sequence[float]):

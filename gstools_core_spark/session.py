@@ -3,6 +3,15 @@
 Settings chosen for the 100 TB design point (AQE on, skew-join splitting,
 Arrow batches for the pandas-UDF kernels) while remaining correct on
 local[N]; see SURVEY.md §4.3.
+
+Python workers start through ``gstools_core_spark.worker_daemon``
+(``spark.python.daemon.module``): pyspark's stock daemon, except that a
+task no longer re-reads ``pyspark.zip``'s directory ~16 times on start
+(see that module).  Workers therefore import this package before their
+first task, so ``get_session`` puts the package's parent directory on
+``PYTHONPATH`` before the JVM launches; the engine's own UDF closures need
+it too when the driver's cwd is not the checkout.  A caller can still
+override the daemon through ``extra_conf``.
 """
 
 from __future__ import annotations
@@ -31,6 +40,15 @@ def _pin_blas_threads() -> None:
         os.environ[var] = "1"
 
 
+def _export_package_path() -> None:
+    # workers inherit the JVM's environment, so this must also happen
+    # before the JVM launches
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    if root not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [root, *paths]))
+
+
 def get_session(
     app_name: str = "gstools-core-spark",
     cores: int | None = None,
@@ -39,6 +57,7 @@ def get_session(
     memory_gb: int = 16,
 ) -> SparkSession:
     _pin_blas_threads()
+    _export_package_path()
     master = f"local[{cores}]" if cores else "local[*]"
     if shuffle_partitions is None:
         shuffle_partitions = cores or 32
@@ -59,6 +78,7 @@ def get_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", f"{memory_gb}g")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "gstools_core_spark.worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -204,6 +204,28 @@ def test_ivf_rerank_arrow_matches_expr(spark):
         assert abs(a[key][1] - cs) < 1e-12
 
 
+def test_ivf_rerank_arrow_rejects_non_integer_ids(spark, tmp_path):
+    """rerank='arrow' emits long ids: string ids fail at the API boundary
+    with a ValueError naming the column, not inside a Python worker."""
+    import pytest
+
+    rng = np.random.default_rng(17)
+    base_v = rng.normal(size=(40, 6))
+    base = _emb_df(spark, base_v)
+    queries = _emb_df(spark, base_v[:4]).withColumn("vec_id", F.col("vec_id").cast("string"))
+    kw = dict(k=2, query_id="vec_id", n_probe=2)
+    with pytest.raises(ValueError, match="'vec_id' is string"):
+        SIM.ivf_ann(queries, base, base_id="vec_id", n_clusters=4, iters=0, rerank="arrow", **kw)
+    with pytest.raises(ValueError, match="'vec_id' is string"):
+        SIM.ivf_ann(base, queries, base_id="vec_id", n_clusters=4, iters=0, rerank="arrow", **kw)
+
+    idx = str(tmp_path / "idx")
+    str_base = base.withColumn("vec_id", F.col("vec_id").cast("string"))
+    SIM.ivf_index_write(str_base, idx, base_id="vec_id", n_clusters=4, iters=0)
+    with pytest.raises(ValueError, match="'bid' is string"):
+        SIM.ivf_ann_from_index(_emb_df(spark, base_v[:4]), idx, rerank="arrow", **kw)
+
+
 def test_ivf_ann_partial_probe_recall(spark):
     rng = np.random.default_rng(9)
     base_v = rng.normal(size=(200, 8))

@@ -140,3 +140,34 @@ def test_ivf_init_no_global_sort(spark):
     )
     assert "TakeOrderedAndProject" in plan
     assert "+- Sort" not in plan and "rangepartitioning" not in plan.lower()
+
+
+def _python_served_scans(df) -> list[str]:
+    """Plan lines that scan a Python RDD (``createDataFrame(list)``) or hand
+    rows to Python workers."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    markers = ("ExistingRDD", "PythonRDD", "EvalPython", "InPandas", "InArrow")
+    return [ln for ln in plan.splitlines() if any(m in ln for m in markers)]
+
+
+def test_small_literal_tables_are_jvm_side(spark, sf_dir):
+    """The bins table and krige's collected hot set are built from JVM
+    literals: ``createDataFrame(list)`` is a Python RDD that Python workers
+    serve on every execution.  The variogram plans hold no Python node at
+    all; the salted krige's only Python node is its solver cogroup."""
+    from gstools_core_spark.operators.kriging import GaussianModel, krige
+
+    pts = _pts(spark, sf_dir)
+    edges = [0.0, 1.0, 2.0]
+    assert _python_served_scans(V.variogram_unstructured(pts, edges)) == []
+    assert _python_served_scans(
+        V.variogram_directional(pts, edges, [(1.0, 0.0), (0.0, 1.0)])
+    ) == []
+    salted = krige(
+        pts, pts.where(F.col("id") % 3 == 0), GaussianModel(var=1.0, len_scale=1.0),
+        radius=2.0, salt_hot=4, hot_threshold=2,
+    )
+    plan = salted._jdf.queryExecution().executedPlan().toString()
+    assert "_ksalt" in plan  # the hot set is non-empty: salting engaged
+    served = _python_served_scans(salted)
+    assert served and all("FlatMapCoGroupsInArrow" in ln for ln in served), served

@@ -210,6 +210,13 @@ def test_variogram_degenerate_inputs(spark):
     rows = V.variogram_unstructured(same, edges).orderBy("bin_id").collect()
     assert rows[0]["counts"] == 6 and rows[0]["gamma"] == 0.0
 
+    # one edge: no bins → empty output with the usual schema
+    out = V.variogram_unstructured(same, [1.0])
+    assert out.collect() == []
+    assert out.schema.simpleString() == (
+        "struct<bin_id:bigint,lo:double,hi:double,gamma:double,counts:bigint>"
+    )
+
 
 def test_pair_join_exact_pairs(spark):
     """Blocked pair join returns exactly the pairs within max_dist."""

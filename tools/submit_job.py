@@ -9,6 +9,14 @@ Package the library and run any registered query against a table directory:
         --out /tmp/variogram_out
 
 Writes the result as parquet and prints row count + wall time as JSON.
+
+This path builds its own session, not ``session.get_session``, so its
+Python workers keep pyspark's stock daemon rather than
+``gstools_core_spark.worker_daemon``: the ``--py-files`` zip is fetched
+into each task's working directory and is not importable yet when the
+daemon process launches, so a daemon module inside the package could not
+start.  Tasks on this path still pay the per-task ``pyspark.zip``
+directory re-read that module avoids.
 """
 
 from __future__ import annotations
