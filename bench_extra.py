@@ -1,18 +1,19 @@
-"""Round-6 isolation benchmarks (guide §1.4 noop-sink method).
+"""Round-6 isolation benchmark (guide §1.4 noop-sink method).
 
 NOT the driver bench — bench.py is frozen for measurement.  This file holds
-the reproducible probes behind OPTIMIZATION_r06.md's numbers:
+the reproducible probe behind OPTIMIZATION_r06.md's IVF numbers:
 
 * ``ivf``      — IVF exact-rerank A/B at 200k×64-d vectors: the oracle-parity
                  interpreted ``F.aggregate(F.zip_with(...))`` fold
                  (rerank='expr') vs the round-6 vectorized numpy row-dot
                  mapInArrow path (rerank='arrow').
-* ``geo``      — sphere-chain phase isolation (count / localCheckpoint /
-                 krige plan construction incl. stats jobs / cogroup exec).
-* ``cogroup``  — identity-kernel cogroup control for the sphere chain
-                 (shuffle+dispatch floor without the solves).
 
-Usage: ``python bench_extra.py [ivf|geo|cogroup ...]`` (default: all).
+The sphere-chain phases (krige plan construction and its jobs, cogroup
+execution, the Arrow boundary) are measured by perfbench's traced mode:
+``krige.build_s``, ``krige.build_jobs``, ``krige.exec_s``,
+``arrow_boundary.s``.
+
+Usage: ``python bench_extra.py [ivf ...]`` (default: all).
 Fresh JVM per invocation; each probe prints label + seconds.
 """
 
@@ -29,7 +30,6 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from gstools_core_spark.session import get_session  # noqa: E402
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
@@ -97,91 +97,7 @@ def probe_ivf():
     spark.stop()
 
 
-def _sphere_inputs(spark):
-    from gstools_core_spark.functions import text as T
-    from gstools_core_spark.sources.pages import geocode, synthesize_pages
-
-    n = spark.read.parquet(f"{SF_DIR}/events.parquet").count()
-    pages = geocode(synthesize_pages(spark, n))
-    pts = pages.select(
-        F.xxhash64("url").alias("id"), "lat", "lon",
-        T.quality_score(F.col("text")).alias("val"),
-    ).localCheckpoint(eager=True)
-    cond = pts.where(F.pmod(F.col("id"), F.lit(10)) == 0)
-    return pts, cond
-
-
-def probe_geo():
-    from gstools_core_spark.operators.kriging import GaussianModel, krige
-
-    spark = _spark("bench-extra-geo")
-    spark.sparkContext.setJobDescription("sphere chain phase isolation")
-    model = GaussianModel(var=1.0, len_scale=0.05, nugget=0.01)
-    kw = dict(radius=0.05, method="ordinary", coords=("lat", "lon"), knn=16,
-              haversine=True, max_abs_lat=61.0, salt_hot=8, group_cells=1)
-    _t(spark, "count(events)", lambda: spark.read.parquet(f"{SF_DIR}/events.parquet").count())
-    holder = {}
-
-    def build():
-        holder["pts"], holder["cond"] = _sphere_inputs(spark)
-
-    _t(spark, "pts build + localCheckpoint", build)
-    pts, cond = holder["pts"], holder["cond"]
-    _t(spark, "krige() plan construction (stats jobs)",
-       lambda: krige(pts, cond, model, **kw), reps=3)
-    out = krige(pts, cond, model, **kw)
-    _t(spark, "cogroup execution (noop)",
-       lambda: out.write.format("noop").mode("overwrite").save(), reps=3)
-    spark.stop()
-
-
-def probe_cogroup():
-    import pyarrow as pa
-
-    from gstools_core_spark.operators import kriging as KM
-    from gstools_core_spark.operators import pair_join as PJ
-
-    spark = _spark("bench-extra-cogroup")
-    spark.sparkContext.setJobDescription("identity cogroup control")
-    pts, cond = _sphere_inputs(spark)
-    cell_lat, n_lon, lon_w = PJ.haversine_grid(0.05, 61.0)
-    t_cells = PJ.geo_cell_exprs("lat", "lon", cell_lat, n_lon, lon_w)
-    jkeys = ["jc0", "jc1"]
-    tt = pts.select(
-        F.col("id").alias("tid"), F.col("lat").alias("t0"),
-        F.col("lon").alias("t1"),
-        *[e.alias(jkeys[k]) for k, e in enumerate(t_cells)],
-    )
-    c_sel = cond.select(
-        F.col("lat").alias("c0"), F.col("lon").alias("c1"),
-        F.col("val").alias("cval"),
-    )
-    c_cells = PJ.geo_cell_exprs("c0", "c1", cell_lat, n_lon, lon_w)
-    cc = KM._ring_stamp(c_sel, c_cells, wrap_n=n_lon if n_lon > 1 else None)
-    hot = KM.top_hot_cells(
-        KM.cell_count_df(tt, jkeys), jkeys, 1562, 576
-    ).select(*jkeys)
-    hot_lit = KM._literal_cells(hot, jkeys)
-    t2, c2, jk2 = KM.salt_cogroup_keys(tt, cc, jkeys, "tid", 8, 1562, hot=hot_lit)
-    schema = ("tid long, t0 double, t1 double, krige_mean double, "
-              "krige_var double, n_cond long")
-
-    def ident_arrow(left, right):
-        nt = left.num_rows
-        z = pa.array(np.zeros(nt), type=pa.float64())
-        return pa.Table.from_arrays(
-            [left.column("tid"), left.column("t0"), left.column("t1"), z, z,
-             pa.array(np.full(nt, right.num_rows), type=pa.int64())],
-            names=["tid", "t0", "t1", "krige_mean", "krige_var", "n_cond"],
-        )
-
-    ident = t2.groupBy(*jk2).cogroup(c2.groupBy(*jk2)).applyInArrow(ident_arrow, schema)
-    _t(spark, "identity ARROW cogroup (shuffle+dispatch floor)",
-       lambda: ident.write.format("noop").mode("overwrite").save(), reps=3)
-    spark.stop()
-
-
-PROBES = {"ivf": probe_ivf, "geo": probe_geo, "cogroup": probe_cogroup}
+PROBES = {"ivf": probe_ivf}
 
 
 if __name__ == "__main__":

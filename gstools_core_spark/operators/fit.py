@@ -144,7 +144,7 @@ def conditional_field(
     exactly (nugget=0), so the simulated field honors the data; away from
     them it has the model's spatial structure.  Entirely a composition of
     the engine's distributed operators — summate (mapInPandas, no shuffle)
-    and krige (cogrouped applyInPandas) — so it scales like they do.
+    and krige (cogrouped applyInArrow) — so it scales like they do.
     Returns (id, x, y, cond_field, krige_var, n_cond).
     """
     from gstools_core_spark.operators.field import summate_field

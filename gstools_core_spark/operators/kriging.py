@@ -7,10 +7,14 @@ Per the north star, this engine owns BOTH steps:
 
 * neighborhoods via the cell-ring blocking (conditioning points stamped onto
   the 3×3 ring of each target cell at cell_size = radius);
-* one ``cogroup().applyInPandas`` per cell assembles the covariance Gram
-  matrix with the model, inverts it once, and evaluates every target in the
-  cell through the numpy kernels (kernels.calc_field_krige_and_variance) —
-  i.e. the reference's matrix kernel runs verbatim on each neighborhood.
+* one ``cogroup().applyInArrow`` UDF iterates the fine cells of each
+  cogroup group (one cell, or a super-cell of them) and, per cell,
+  assembles the covariance Gram matrix with the model, inverts it once,
+  and evaluates every target through the numpy kernels
+  (kernels.calc_field_krige_and_variance) — i.e. the reference's matrix
+  kernel runs verbatim on each neighborhood;
+* ``plan_cells`` makes every skew decision (grouping factor, keep-fine
+  cells, salted hot cells) from one per-cell count aggregate.
 
 Covariance models: any functions/models.CovModel (Gaussian, Exponential,
 Spherical, Matérn, Stable); the nugget enters only the Gram diagonal.
@@ -20,6 +24,8 @@ drift) kriging are provided; anisotropy via functions.models.isotropize.
 
 from __future__ import annotations
 
+import math
+import numbers
 from collections.abc import Sequence
 
 import numpy as np
@@ -27,7 +33,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gstools_core_spark import kernels as K
-from gstools_core_spark.operators.pair_join import top_hot_cells
+from gstools_core_spark.operators.pair_join import (
+    check_int,
+    geo_cell_exprs,
+    haversine_grid,
+    hot_cap,
+    salt_hot_cells,
+    top_hot_cells,
+)
 from gstools_core_spark.functions.models import (  # noqa: F401 — re-exported API
     CovModel,
     Exponential,
@@ -68,239 +81,100 @@ def _grid_cells(coords: Sequence[str], radius: float) -> list:
     return [F.floor(F.col(c) / F.lit(radius)).cast("long") for c in coords]
 
 
-def salt_cogroup_keys(
-    t: DataFrame,
-    c: DataFrame,
-    jkeys: list[str],
-    tid_col: str,
-    salt_hot: int,
-    hot_threshold: int,
-    counts: DataFrame | None = None,
-    hot_cap: int | None = None,
-    hot: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, list[str]]:
-    """Split hot blocking cells across ``salt_hot`` cogroup sub-keys.
-
-    A pandas cogroup executes ONE task per key — AQE cannot split it — so a
-    hot cell (the north rule's dense-page scenario: lang-skewed geocoding
-    packs one city cell with 10^5+ targets) serializes the whole stage.
-    Mirroring pair_join's ``salt_hot`` recipe: cells whose TARGET count
-    exceeds ``hot_threshold`` are detected with a count aggregate and
-    broadcast onto both sides (no driver key list); the target side takes
-    ``pmod(xxhash64(tid), S)`` and the cond-ring side replicates across all
-    S salts, so each target still cogroups with its cell's FULL cond ring —
-    output invariant (pytest-pinned bitwise), one hot cell becomes S tasks.
-    Cold cells pay nothing (salt 0, no replication).
-
-    NOTE: pair_join.py:202-239 carries the sibling of this recipe for the
-    pair JOIN (detection over unstamped cells, salt name ``jsalt``); the
-    two differ in detection base and join-key structure, so they are kept
-    separate — a semantic fix to either (null keys, thresholds, salt hash)
-    must be mirrored in the other.
-
-    ``group_cells`` — SUPER-CELL grouping factor: cogroup on cells of
-    ``group_cells × radius`` and iterate the fine blocking cells inside
-    the pandas function.  Each cogroup GROUP costs ~2-3 ms of fixed
-    Arrow/pandas machinery regardless of size; with thousands of small
-    cells that fixed cost WAS the whole query (measured at sf0.1: the
-    headline krige spent 5.8 s of 7.1 s in a trivial-kernel cogroup over
-    1,600 groups of ~62 targets).  'auto' (default) sizes the factor
-    from one per-cell-count stats pass over the targets so that ~2 groups
-    land per core — UNLESS the counts are skewed (max above both 4× mean
-    and a Poisson extreme-value floor — see auto_group_factor), where
-    it keeps fine cells: merging adjacent hot-region cells re-serializes
-    exactly what ``salt_hot`` splits (sphere path at sf0.1: gc=1 7.5 s,
-    gc=8 10.1 s, gc=32 28.5 s).  Pass an int (1 disables) to skip the
-    stats pass when table stats are known.  Per-fine-cell results are bitwise
-    IDENTICAL under any grouping: the same fine (cell, targets, ring)
-    triples reach the same solver, whose internal orders are
-    canonicalized (the salting-invariance pins cover this property).
-
-    ``hot_cap`` — BOUND the broadcast hot set at the top-``hot_cap`` cells
-    by target count (deterministic tie-break on the cell keys).  The skew
-    threshold is absolute here but relative-to-mean in the auto-grouping
-    sibling; on a heavy-tailed (Zipfian city-cell) density at 100× the
-    above-threshold set can grow without bound — cells barely above it
-    gain nothing from salting but would each ship to every task.  Salting
-    fewer cells never changes the output (the invariance pin), only which
-    cells get split, so capping is free correctness-wise.
-    ``hot`` — a precomputed hot-cell DataFrame (``jkeys`` columns only);
-    overrides detection entirely (krige passes a collected literal so the
-    persisted stats DF behind it can be unpersisted immediately).
-    """
-    if hot is not None:
-        hot = hot.select(*jkeys, F.lit(True).alias("_hot"))
-    else:
-        if counts is None:
-            counts = cell_count_df(t, jkeys)
-        hot = top_hot_cells(counts, jkeys, hot_threshold, hot_cap).select(
-            *jkeys, F.lit(True).alias("_hot")
-        )
-    t = (
-        t.join(F.broadcast(hot), jkeys, "left")
-        .withColumn(
-            "_ksalt",
-            F.when(
-                F.col("_hot"),
-                F.pmod(F.xxhash64(F.col(tid_col)), F.lit(salt_hot)),
-            )
-            .otherwise(F.lit(0))
-            .cast("long"),
-        )
-        .drop("_hot")
-    )
-    c = (
-        c.join(F.broadcast(hot), jkeys, "left")
-        .withColumn(
-            "_ksalts",
-            F.when(
-                F.col("_hot"), F.sequence(F.lit(0), F.lit(salt_hot - 1))
-            ).otherwise(F.array(F.lit(0))),
-        )
-        .withColumn("_ksalt", F.explode("_ksalts"))
-        .withColumn("_ksalt", F.col("_ksalt").cast("long"))
-        .drop("_ksalts", "_hot")
-    )
-    return t, c, jkeys + ["_ksalt"]
-
-
-def _literal_cells(df: DataFrame, cols: Sequence[str]) -> DataFrame | None:
-    """Collect a BOUNDED (≤hot_cap-row) cell-key DataFrame into a literal
-    in-memory DataFrame; None when empty (lets callers skip the machinery
-    the set would drive).  The hot/keep-fine sets are lazy views over the
-    (possibly persisted) stats DF; materializing them (cheap — the row
-    count is capped) lets krige unpersist the stats DF at
-    plan-construction time and make plan-shape decisions from the actual
-    set.  Built JVM-side from literals, not ``createDataFrame(list)`` (a
-    Python RDD that Python workers serve on every execution)."""
-    rows = [
-        F.struct(*(F.lit(r[c]).cast("long").alias(c) for c in cols))
-        for r in df.collect()
-    ]
+def _literal_cells(spark, rows: list, cols: Sequence[str]) -> DataFrame | None:
+    """Collected cell-key rows → a literal DataFrame; None when empty (lets
+    callers skip the machinery the set would drive).  Built JVM-side from
+    literals, not ``createDataFrame(list)`` (a Python RDD that Python
+    workers serve on every execution)."""
     if not rows:
         return None
-    return df.sparkSession.range(1).select(F.inline(F.array(*rows)))
+    structs = [
+        F.struct(*(F.lit(r[c]).cast("long").alias(c) for c in cols)) for r in rows
+    ]
+    return spark.range(1).select(F.inline(F.array(*structs)))
 
 
-def cell_count_df(t: DataFrame, fine_keys: Sequence[str]) -> DataFrame:
-    """Per-fine-cell target counts → (fine_keys…, _hot_n) — the ONE stats
-    aggregate shared by ``auto_group_factor`` and ``salt_cogroup_keys``
-    hot detection (only (cell, count) pairs cross the exchange, with
-    map-side partial agg; the target rows never shuffle for this)."""
-    return t.groupBy(*fine_keys).agg(F.count(F.lit(1)).alias("_hot_n"))
-
-
-def auto_group_factor(
+def plan_cells(
     t: DataFrame,
-    fine_keys: Sequence[str],
-    parallelism: int,
-    groups_per_core: int = 2,
-    skew_cap: float = 4.0,
-    counts: DataFrame | None = None,
-) -> int:
-    """Pick the super-cell grouping factor from ONE stats pass over the
-    staged targets ``t`` (``group_cells='auto'``).
+    keys: list[str],
+    par: int,
+    cap: int | None,
+    group_cells: int | str = "auto",
+    salt_hot: int | None = None,
+    hot_threshold: int | str = "auto",
+) -> tuple[int, DataFrame | None, DataFrame | None]:
+    """The ONE skew planner → ``(mult, keep_fine, hot)``: the super-cell
+    grouping factor, the cells kept at fine granularity, and the cells
+    ``salt_hot`` splits — both sets literal ``keys``-only DataFrames
+    (None when empty), bounded at the top-``cap`` cells by target count
+    (``top_hot_cells``'s tie-break; None = uncapped).  Every decision
+    comes from ONE per-cell target count aggregate over ``t``; the jobs
+    below are the only ones krige runs at plan time.
 
-    A second-level aggregate over the per-fine-cell counts yields (number
-    of cells, max count, mean count) as one collected row.  Pass
-    ``counts`` (a ``cell_count_df`` result) to reuse an aggregate another
-    consumer already needs — krige does this when ``salt_hot`` is also
-    set, so salting's hot detection and this decision share one pass.
-    Production jobs that know their stats pass an explicit int and skip
-    the pass entirely.
+    ``group_cells='auto'`` — one summary job (cells, max, mean, total).
+    The factor targets 2 cogroup groups per core,
+    ``round((cells / (2·par))^(1/d))``: per-group Arrow dispatch is
+    near-serial, so fewer groups win until load balance bites.  Under
+    spatial SKEW (max above both 4× the mean and the Poisson extreme-value
+    allowance mean + 6·√mean + 10 — a pure ratio test degenerates on
+    sparse densities) super-grouping would merge adjacent hot-region cells
+    into one task and re-serialize exactly what ``salt_hot`` splits
+    (sphere path at sf0.1: gc=1 7.5 s, 8 10.1 s, 32 28.5 s).  So the
+    cells above the skew threshold stay FINE (one group each, further
+    splittable by salting) and the factor is re-derived from the
+    remaining cold cells, whose long tail still sheds its dispatch.
+    An int skips the summary job.
 
-    The factor targets ``groups_per_core`` cogroup groups per core (the
-    per-group Arrow/pandas dispatch is near-serial, so fewer groups win
-    until load balance bites), EXCEPT under spatial skew: super-grouping
-    merges ADJACENT cells into one cogroup task, so on a lopsided density
-    (the north-star geocoder concentrates pages in city cells by
-    construction) it re-serializes exactly the hot region ``salt_hot``
-    just split — measured at sf0.1 on the sphere path: group_cells=1
-    7.5 s, 8 10.1 s, 32 28.5 s.  Skew test: max count above BOTH
-    ``skew_cap``× the mean AND a Poisson extreme-value allowance
-    (mean + 6·√mean + 10) — the pure ratio test degenerates on sparse
-    densities (Poisson with mean ≤ ~1.5 has max/mean > 4 over enough
-    cells almost surely), which would silently forfeit grouping on
-    exactly the thousands-of-tiny-cells inputs it exists for."""
-    mult, keep_fine = auto_group_plan(
-        t, fine_keys, parallelism, groups_per_core, skew_cap, counts
-    )
-    # single-factor contract: under skew the only safe GLOBAL factor is 1
-    # (krige itself uses auto_group_plan's hybrid instead)
-    return 1 if keep_fine is not None else mult
+    ``salt_hot`` with ``hot_threshold='auto'`` — hot = above one shuffle
+    partition's FAIR SHARE, ``max(256, total / max(partitions, par))``:
+    a pandas cogroup runs one task per key, so such a cell is a straggler
+    at any cluster size.  The total is the summary's sum under 'auto'
+    grouping, else a map-only ``t.count()`` (summing shuffled counts
+    measured 0.7-1.6 s vs ~0.15 s at sf0.1).
 
-
-def auto_group_plan(
-    t: DataFrame,
-    fine_keys: Sequence[str],
-    parallelism: int,
-    groups_per_core: int = 2,
-    skew_cap: float = 4.0,
-    counts: DataFrame | None = None,
-    keep_cap: int | None = None,
-) -> tuple[int, DataFrame | None]:
-    """Full 'auto' grouping decision → ``(mult, keep_fine)``.
-
-    Uniform density → ``(factor from the groups_per_core rule, None)``:
-    every cell joins a super-cell.  Skewed density (see
-    ``auto_group_factor`` for the statistic) → HYBRID grouping: the
-    skew-causing cells (count above the skew threshold) are returned as
-    ``keep_fine`` — a broadcast-able (fine_keys…) DataFrame — and stay at
-    fine granularity (one cogroup group each, splittable further by
-    ``salt_hot``), while the factor is re-derived from the COLD cell
-    count so the long tail of tiny cells still sheds its near-serial
-    per-group dispatch.  At 100× the cold tail grows linearly with the
-    corpus while per-cell work stays bounded, so grouping only-the-cold
-    is the scale design: merging hot regions was measured 7.5 → 28.5 s
-    on the sphere path, while NOT grouping the tail pays thousands of
-    ~3 ms dispatches.  ``keep_fine`` is None when no cell clears the
-    threshold.  When ``counts`` spans >1 consumer the caller should
-    persist it (krige does).
-
-    ``keep_cap`` — BOUND ``keep_fine`` at the top-``keep_cap`` cells by
-    target count (deterministic tie-break on the cell keys): the skew
-    threshold is relative to the mean, so a heavy-tailed density at 100×
-    can push far more cells above it than there are cores — the tail of
-    barely-above-threshold cells gains nothing from fine granularity and
-    would bloat the broadcast.  Cells beyond the cap rejoin the grouped
-    cold tail (output bitwise-invariant under any split — the grouping
-    invariance pin); the grouping factor is re-derived counting them as
-    cold."""
-    d_block = len(fine_keys)
-    if counts is None:
-        counts = cell_count_df(t, fine_keys)
-    row = (
-        counts.agg(
+    One collect serves both sets: the top-``cap`` cells above the LOWER
+    of the two thresholds; each set is the part above its own threshold
+    (a prefix of the count-descending order, so identical to a separate
+    ``top_hot_cells`` per set)."""
+    spark = t.sparkSession
+    counts = t.groupBy(*keys).agg(F.count(F.lit(1)).alias("_hot_n"))
+    skew_t = hot_t = None
+    if group_cells == "auto":
+        row = counts.agg(
             F.count(F.lit(1)).alias("cells"),
             F.max("_hot_n").alias("mx"),
             F.avg("_hot_n").alias("av"),
+            F.sum("_hot_n").alias("total"),
         ).collect()[0]
+        n_cells = row["cells"] or 1
+        av = row["av"] or 1.0
+        thresh = max(4.0 * av, av + 6.0 * float(av) ** 0.5 + 10.0)
+        if row["mx"] is not None and row["mx"] > thresh:
+            skew_t = thresh
+        total = row["total"] or 0
+    if salt_hot:
+        hot_t = hot_threshold
+        if hot_threshold == "auto":
+            if group_cells != "auto":
+                total = t.count()
+            shp = int(spark.conf.get("spark.sql.shuffle.partitions"))
+            hot_t = max(256, int(total / max(shp, par, 1)))
+    ths = [th for th in (skew_t, hot_t) if th is not None]
+    rows = top_hot_cells(counts, keys, min(ths), cap).collect() if ths else []
+
+    def above(th):
+        return [r for r in rows if th is not None and r["_hot_n"] > th]
+
+    keep_rows = above(skew_t)
+    mult = group_cells
+    if group_cells == "auto":
+        n_cold = max(n_cells - len(keep_rows), 1)
+        mult = max(1, int(round((n_cold / max(2 * par, 1)) ** (1.0 / len(keys)))))
+    return (
+        mult,
+        _literal_cells(spark, keep_rows, keys),
+        _literal_cells(spark, above(hot_t), keys),
     )
-    n_cells = row["cells"] or 1
-    av = row["av"] or 1.0
-    skew_floor = av + 6.0 * float(av) ** 0.5 + 10.0
-    thresh = max(skew_cap * av, skew_floor)
-
-    def rule(n: int) -> int:
-        return max(
-            1,
-            int(
-                round(
-                    (n / max(groups_per_core * parallelism, 1)) ** (1.0 / d_block)
-                )
-            ),
-        )
-
-    if row["mx"] is None or row["mx"] <= thresh:
-        return rule(n_cells), None
-    # skewed: one more TINY aggregate over the (persisted) counts — how
-    # many cells are hot — plus the keep-fine set itself
-    n_hot = counts.where(F.col("_hot_n") > F.lit(thresh)).count()
-    keep_fine = top_hot_cells(
-        counts, list(fine_keys), thresh, keep_cap
-    ).select(*fine_keys)
-    kept = n_hot if keep_cap is None else min(n_hot, keep_cap)
-    return rule(max(n_cells - kept, 1)), keep_fine
 
 
 def _pairwise_hav(A: np.ndarray, B: np.ndarray) -> np.ndarray:
@@ -350,7 +224,6 @@ def krige(
     salt_hot: int | None = None,
     hot_threshold: int | str = "auto",
     group_cells: int | str = "auto",
-    hot_cap: int | None = None,
 ) -> DataFrame:
     """Krige ``cond`` onto ``targets`` → (id, <coords…>, krige_mean,
     krige_var, n_cond).  Any dimension (``coords`` of length d — blocking
@@ -402,42 +275,42 @@ def krige(
     a pandas cogroup runs one task per key and AQE cannot split it, so one
     dense cell serializes the stage at skewed scale.  Cells with more than
     ``hot_threshold`` TARGETS are split across S sub-keys (targets hashed,
-    cond ring replicated — see salt_cogroup_keys); the kriged output is
+    cond ring replicated — pair_join.salt_hot_cells); the kriged output is
     bitwise identical (pytest-pinned) because every target still sees its
-    cell's full cond ring and all per-group orders are canonicalized.
-    The hot set is detected at PLAN time (one tiny aggregate, shared with
-    'auto'); when it is empty the salting machinery is skipped entirely —
-    the cond-ring explode + broadcast joins cost ~35% of the sphere bench
-    at sf0.1 purely to salt zero cells — so ``salt_hot`` is free until
-    the data actually has hot cells.
+    cell's full cond ring and all per-group orders are canonicalized.  The
+    hot set is detected at PLAN time (``plan_cells``); when it is empty the
+    salting machinery is skipped entirely — the cond-ring explode +
+    broadcast joins cost ~35% of the sphere bench at sf0.1 purely to salt
+    zero cells — so ``salt_hot`` is free until the data has hot cells.
+    Both hot sets (salted, kept fine) hold at most ``pair_join.hot_cap``
+    cells; output is bitwise invariant under any cap (pinned).
 
-    ``hot_threshold='auto'`` (default) sizes the threshold from the same
-    stats pass: a cell is hot when its target count exceeds one shuffle
-    partition's FAIR SHARE (``total targets / shuffle partitions``, floor
-    256) — any such cell is a straggler task no matter the cluster size,
-    since a pandas cogroup runs one task per key.  Measured on the
+    ``hot_threshold='auto'`` (default): hot = above one shuffle partition's
+    FAIR SHARE of targets (floor 256, see ``plan_cells``).  Measured on the
     lang-skewed sphere bench (one 3,090-target cell over a 1,562 fair
     share): splitting it halved the query (10.1 → 5.2 s) even paying the
-    salting machinery.  Pass an int when table stats say otherwise; the
-    rule scales with the data (at 100× both the numerator and the
-    production partition count grow).
+    salting machinery.  Pass an int when table stats say otherwise.
 
-    ``hot_cap`` — bound on BOTH broadcast hot sets (salting's split set and
-    auto-grouping's keep-fine set): only the top-``hot_cap`` cells by
-    target count are treated as hot (default ``16 × defaultParallelism``,
-    min 64; pass 0 to disable).  On a heavy-tailed density at 100× the
-    relative-to-mean skew threshold can mark far more cells than there are
-    cores; the tail of barely-hot cells gains nothing from splitting/fine
-    granularity but would bloat the per-task broadcast.  Output is bitwise
-    invariant under any cap (the salting/grouping invariance pins).
+    ``group_cells`` — SUPER-CELL grouping factor: cogroup on cells of
+    ``group_cells × radius`` and iterate the fine cells inside the UDF
+    (each group costs ~2-3 ms of fixed Arrow dispatch; 1,600 tiny groups
+    WERE the sf0.1 headline krige).  'auto' (default) sizes it from the
+    per-cell counts and keeps skew-causing cells fine (``plan_cells``);
+    an int skips that job (1 disables grouping).  Per-fine-cell results
+    are bitwise identical under any grouping (pinned).
 
-    NOTE ``group_cells='auto'`` is EAGER: it runs 1-3 tiny Spark jobs at
-    DataFrame-CONSTRUCTION time (the per-cell stats aggregate + collect;
-    under skew also the hot-cell count and the ≤``hot_cap``-row hot-set
-    collects).  The stats DF is persisted only while the decision runs and
-    unpersisted before return — nothing stays cached.  Plan-only consumers
-    and repeated tiny interactive calls should pass an explicit int
-    (production jobs size it from table stats the same way).
+    Plan-time Spark jobs — run while the DataFrame is built, nothing stays
+    cached; plan-only consumers should pass ints:
+
+    * ``group_cells`` int, no ``salt_hot``: none.
+    * ``group_cells`` int + ``salt_hot``: the hot-set collect, plus a
+      map-only ``t.count()`` under ``hot_threshold='auto'``.  The targets
+      are then scanned twice (count + counts aggregate): cheap for
+      file-backed sources, but an expensive upstream plan is recomputed —
+      checkpoint it first.
+    * ``group_cells='auto'``: the summary collect, plus the hot-set collect
+      when the counts are skewed or ``salt_hot`` is set.
+    * ``haversine`` without ``max_abs_lat``: one max(|lat|) aggregate.
     """
     if method not in ("simple", "ordinary", "universal"):
         raise ValueError(
@@ -445,11 +318,18 @@ def krige(
             "'ordinary' or 'universal' (a typo would silently run the "
             "universal drift-extended solve)"
         )
+    check_int("knn", knn, 1, None)
+    check_int("max_cond", max_cond, 1)
+    check_int("salt_hot", salt_hot, 2, None)
+    check_int("hot_threshold", hot_threshold, 0, "auto")
+    check_int("group_cells", group_cells, 1, "auto")
+    if not (
+        isinstance(radius, numbers.Real) and math.isfinite(radius) and radius > 0
+    ):
+        raise ValueError(f"radius must be finite and > 0, got {radius!r}")
     d = len(coords)
     wrap_n: int | None = None
     if haversine:
-        from gstools_core_spark.operators.pair_join import haversine_grid
-
         if d != 2:
             raise ValueError("haversine kriging requires coords=(lat, lon)")
         lat_c, lon_c = coords
@@ -464,9 +344,6 @@ def krige(
         cell_lat, n_lon, lon_w = haversine_grid(radius, max_abs_lat)
         if n_lon > 1:
             wrap_n = n_lon
-
-        from gstools_core_spark.operators.pair_join import geo_cell_exprs
-
         t_cells = geo_cell_exprs(lat_c, lon_c, cell_lat, n_lon, lon_w)
         d_block = len(t_cells)  # 1 when lon blocking is disabled
     else:
@@ -497,77 +374,19 @@ def krige(
         c_cells = _grid_cells(tuple(f"c{k}" for k in range(d)), radius)
     c = _ring_stamp(c_sel, c_cells, wrap_n=wrap_n)
 
-    # ONE shared per-cell-count aggregate feeds both the 'auto' grouping
-    # decision and salting's hot detection (they need the same counts;
-    # persist only when both consume it — auto's collect populates the
-    # cache, the later tiny aggregates reuse it instead of re-scanning the
-    # targets).  Both hot sets are bounded by ``hot_cap`` and collected to
-    # literal DataFrames while the cache is warm, so the stats DF is
-    # unpersisted BEFORE return — nothing survives plan construction.
-    par = targets.sparkSession.sparkContext.defaultParallelism
-    if hot_cap is None:
-        hot_cap = max(64, 16 * par)
-    cap = hot_cap if hot_cap > 0 else None
-
-    cell_counts = None
-    keep_fine = None
-    persisted = False
-    if salt_hot or group_cells == "auto":
-        cell_counts = cell_count_df(t, jkeys)
-        # persist when ≥2 plan-time consumers will aggregate it (auto
-        # grouping's summary/keep-fine + salting's hot-set collect) —
-        # each would otherwise re-scan the targets.  The auto fair-share
-        # threshold no longer consumes it (its total comes from t.count(),
-        # see below), so an explicit group_cells int + salt_hot runs ONE
-        # aggregate over the counts and skips the persist round-trip.
-        if group_cells == "auto":
-            cell_counts = cell_counts.persist()
-            persisted = True
-    if group_cells == "auto":
-        mult, keep_fine = auto_group_plan(
-            t, jkeys, par, counts=cell_counts, keep_cap=cap
-        )
-    else:
-        mult = max(1, int(group_cells))
-
-    hot_df = None
-    if salt_hot:
-        # build + collect the (≤cap-row) salting hot set NOW (one tiny
-        # aggregate job — the broadcast side of the lazy form was its own
-        # stage anyway, so this moves cost, not adds it; under 'auto' the
-        # stats DF is already cached).  Knowing the hot set at plan time
-        # lets the EMPTY case skip the salting machinery entirely — the
-        # cond-ring explode/broadcast-join/_ksalt key otherwise cost
-        # ~2.7 s at sf0.1 on the sphere bench purely to salt zero cells.
-        # At 100× densities the set is non-empty and salting engages
-        # unchanged: the decision is data-driven, not scale-tuned.
-        if hot_threshold == "auto":
-            # fair-share rule (see docstring): hot = bigger than one
-            # shuffle partition's average target load.  `total` is the sum
-            # of the per-cell counts ≡ the target ROW COUNT, so take it
-            # from a single-stage t.count() (64 map tasks, no exchange)
-            # instead of aggregating the shuffled counts DF — the tiny-row
-            # exchange dominated that job (measured 0.7-1.6 s vs ~0.15 s
-            # at sf0.1; round-6 stats-pass profile)
-            spark = targets.sparkSession
-            shp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            total = t.count()
-            hot_threshold = max(256, int(total / max(shp, par, 1)))
-        hot_df = _literal_cells(
-            top_hot_cells(cell_counts, jkeys, hot_threshold, cap).select(*jkeys),
-            jkeys,
-        )
-    if persisted and keep_fine is not None:
-        keep_fine = _literal_cells(keep_fine, jkeys)
-    if persisted:
-        cell_counts.unpersist(blocking=False)
-
-    if salt_hot and hot_df is not None:
-        # hot= short-circuits detection entirely: counts/hot_cap would be
-        # dead arguments here (and cell_counts is already unpersisted)
-        t, c, jkeys = salt_cogroup_keys(
-            t, c, jkeys, "tid", salt_hot, hot_threshold, hot=hot_df
-        )
+    fine = list(jkeys)
+    spark = targets.sparkSession
+    mult, keep_fine, hot = plan_cells(
+        t,
+        jkeys,
+        spark.sparkContext.defaultParallelism,
+        hot_cap(spark),
+        group_cells,
+        salt_hot,
+        hot_threshold,
+    )
+    if hot is not None:
+        t, c, jkeys = salt_hot_cells(t, c, hot, jkeys, "tid", salt_hot)
 
     nugget = model.nugget
     sill = model.sill
@@ -577,24 +396,21 @@ def krige(
     geo = haversine
     _pw = _pairwise_hav if geo else _pairwise_dist
     geo_grid = (cell_lat, n_lon, lon_w) if geo else None
-    n_block_keys = d_block  # salted groups append _ksalt AFTER the cell keys
     # monomial drift basis: ordinary kriging = constant drift only
     n_drift_order = 0 if method == "ordinary" else int(drift_order)
 
-    def drift_basis(P: np.ndarray, D: np.ndarray | None = None) -> np.ndarray:
-        # P: (n, d) coords; D: (n, ext_n) external drift values
-        rows = [np.ones(P.shape[0])]
+    def drift_basis_b(P: np.ndarray, D: np.ndarray | None = None) -> np.ndarray:
+        # (m, n, d) [+ (m, n, ext_n)] → (m, nd, n); both solvers' one
+        # drift-basis builder (m = 1 for the shared-neighborhood path)
+        m, n, _ = P.shape
+        rows = [np.ones((m, n))]
         if n_drift_order >= 1:
-            rows += [P[:, k] for k in range(d)]
+            rows += [P[:, :, kk] for kk in range(d)]
         if n_drift_order >= 2:
-            rows += [
-                P[:, i] * P[:, j]
-                for i in range(d)
-                for j in range(i, d)
-            ]
+            rows += [P[:, :, i] * P[:, :, j] for i in range(d) for j in range(i, d)]
         if ext_n:
-            rows += [D[:, j] for j in range(ext_n)]
-        return np.stack(rows)  # (nd, n)
+            rows += [D[:, :, j] for j in range(ext_n)]
+        return np.stack(rows, axis=1)
 
     t_cols = [f"t{k}" for k in range(d)]
     c_cols = [f"c{k}" for k in range(d)]
@@ -660,7 +476,6 @@ def krige(
         return np.stack([dd[cn].astype(np.float64, copy=False) for cn in cols], axis=1)
 
     def solve_cell(key, tdat: dict, cdat: dict) -> dict:
-        key = key[:n_block_keys]  # drop the _ksalt component when salted
         nt0 = tdat["tid"].shape[0]
         if nt0 == 0:
             return _empty_out()
@@ -756,8 +571,8 @@ def krige(
             # ordinary/universal kriging: drift-extended (Lagrange) solve.
             # Ordinary = constant drift {1}; universal adds monomials —
             # the unbiasedness constraints F·w = f(target) per drift fn.
-            Fd = drift_basis(C_pts, C_ext)  # (nd, nc)
-            Ft = drift_basis(T, T_ext)  # (nd, nt)
+            Fd = drift_basis_b(C_pts[None], C_ext[None] if ext_n else None)[0]
+            Ft = drift_basis_b(T[None], T_ext[None] if ext_n else None)[0]
             nd = Fd.shape[0]
             A = np.zeros((nc + nd, nc + nd))
             A[:nc, :nc] = C
@@ -798,18 +613,6 @@ def krige(
             "krige_var": kvar,
             "n_cond": np.full(len(T), nc, dtype=np.int64),
         }
-
-    def drift_basis_b(P: np.ndarray, D: np.ndarray | None = None) -> np.ndarray:
-        # (m, n, d) [+ (m, n, ext_n)] → (m, nd, n)
-        m, n, _ = P.shape
-        rows = [np.ones((m, n))]
-        if n_drift_order >= 1:
-            rows += [P[:, :, kk] for kk in range(d)]
-        if n_drift_order >= 2:
-            rows += [P[:, :, i] * P[:, :, j] for i in range(d) for j in range(i, d)]
-        if ext_n:
-            rows += [D[:, :, j] for j in range(ext_n)]
-        return np.stack(rows, axis=1)
 
     def solve_cell_knn(key, tdat: dict, cdat: dict) -> dict:
         if tdat["tid"].shape[0] == 0:
@@ -901,9 +704,13 @@ def krige(
                     else:
                         E_b = C_ext[idx] if ext_n else None  # (m, q, ext_n)
                         Fd_b = drift_basis_b(P_b, E_b)  # (m, nd, q)
-                        Ft_b = drift_basis(
-                            Tc[S], T_ext[lo : lo + chunk][S] if ext_n else None
-                        ).T  # (m, nd)
+                        # (m, nd) as the transpose of a C-ordered (nd, m):
+                        # einsum's reduction order follows the memory layout,
+                        # so a C-ordered (m, nd) would shift ulps
+                        Ft_b = drift_basis_b(
+                            Tc[S][None],
+                            T_ext[lo : lo + chunk][S][None] if ext_n else None,
+                        )[0].T
                         ndr = Fd_b.shape[1]
                         m = len(S)
                         A_b = np.zeros((m, q + ndr, q + ndr))
@@ -931,14 +738,11 @@ def krige(
 
     base_fn = solve_cell_knn if knn is not None else solve_cell
 
-    def _as_py_key(key) -> tuple:
-        # applyInArrow passes pyarrow Scalars; the solvers do arithmetic
-        # on the key components (geo cell centers)
-        return tuple(k.as_py() if hasattr(k, "as_py") else k for k in key)
-
+    group_keys = jkeys  # fine cells (+ _salt): one cell per group
     if mult > 1:
-        fine = jkeys[:d_block]
         skeys = [f"sc{k}" for k in range(d_block)]
+        sexprs = [F.floor(F.col(f) / F.lit(mult)) for f in fine]
+        flag_cols = []
         if keep_fine is not None:
             # HYBRID grouping (auto under skew): the skew-causing cells —
             # broadcast onto both cogroup sides, same pattern as salting's
@@ -960,104 +764,75 @@ def krige(
                 "left",
             )
             flag = F.coalesce(F.col("_gfine"), F.lit(False))
-            sexprs = [
-                F.when(flag, F.col(fine[k]))
-                .otherwise(F.floor(F.col(fine[k]) / F.lit(mult)))
-                .cast("long")
-                for k in range(d_block)
-            ]
+            sexprs = [F.when(flag, F.col(f)).otherwise(e) for f, e in zip(fine, sexprs)]
             flag_cols = [flag.alias("_scf")]
-            flag_keys = ["_scf"]
-        else:
-            sexprs = [
-                F.floor(F.col(fine[k]) / F.lit(mult)).cast("long")
-                for k in range(d_block)
-            ]
-            flag_cols = []
-            flag_keys = []
         # drop the join helper AFTER the select evaluates flag/sexprs: it
         # would otherwise ride into the cogrouped Arrow frames (an extra
-        # boolean per row through the exchange, unused by solve_super)
-        t = t.select(
-            "*", *[e.alias(s) for e, s in zip(sexprs, skeys)], *flag_cols
-        ).drop("_gfine")
-        c = c.select(
-            "*", *[e.alias(s) for e, s in zip(sexprs, skeys)], *flag_cols
-        ).drop("_gfine")
-        # _ksalt (and the fine/super disambiguation flag) stay group keys
-        group_keys = skeys + flag_keys + jkeys[d_block:]
-
-        def _cell_slices(dd: dict):
-            # stable lexsort by the fine keys: cells ascend by key, rows
-            # keep arrival order within a cell — exactly the iteration
-            # order pandas groupby(fine, sort=True) produced, so per-cell
-            # inputs (and the output row order) are bitwise unchanged
-            n = dd[fine[0]].shape[0]
-            order = np.lexsort(tuple(dd[f] for f in reversed(fine)))
-            change = np.zeros(max(n - 1, 0), dtype=bool)
-            for f in fine:
-                kf = dd[f][order]
-                change |= kf[1:] != kf[:-1]
-            starts = np.flatnonzero(np.concatenate(([True], change)))
-            ends = np.append(starts[1:], n)
-            return order, starts, ends
-
-        def solve_super(key, t_tbl, c_tbl):
-            # iterate the fine blocking cells inside ONE cogroup group:
-            # identical (cell, targets, ring) triples reach base_fn, so
-            # the per-cell outputs are bitwise the mult=1 outputs.  All
-            # slicing is numpy (no per-cell pandas frames, no pd.concat).
-            if t_tbl.num_rows == 0:
-                return _out_table(_empty_out())
-            tdat = _tbl_cols(t_tbl, in_t_cols + fine)
-            t_ord, t_st, t_en = _cell_slices(tdat)
-            c_index: dict = {}
-            cdat = None
-            if c_tbl.num_rows:
-                cdat = _tbl_cols(c_tbl, in_c_cols + fine)
-                c_ord, c_st, c_en = _cell_slices(cdat)
-                for i in range(len(c_st)):
-                    r0 = c_ord[c_st[i]]
-                    kk = tuple(int(cdat[f][r0]) for f in fine)
-                    c_index[kk] = c_ord[c_st[i] : c_en[i]]
-            empty_c = {cn: np.empty(0, np.float64) for cn in in_c_cols}
-            outs = []
-            for i in range(len(t_st)):
-                rows = t_ord[t_st[i] : t_en[i]]
-                kk = tuple(int(tdat[f][rows[0]]) for f in fine)
-                tsub = {cn: tdat[cn][rows] for cn in in_t_cols}
-                crows = c_index.get(kk)
-                csub = (
-                    empty_c
-                    if crows is None
-                    else {cn: cdat[cn][crows] for cn in in_c_cols}
-                )
-                outs.append(base_fn(kk, tsub, csub))
-            return _out_table(
-                {cn: np.concatenate([o[cn] for o in outs]) for cn in out_names}
-            )
-
-        out = (
-            t.groupBy(*group_keys)
-            .cogroup(c.groupBy(*group_keys))
-            .applyInArrow(solve_super, out_schema)
+        # boolean per row through the exchange, unused by solve_cells)
+        scols = [e.cast("long").alias(s) for e, s in zip(sexprs, skeys)]
+        t = t.select("*", *scols, *flag_cols).drop("_gfine")
+        c = c.select("*", *scols, *flag_cols).drop("_gfine")
+        # _salt (and the fine/super disambiguation flag) stay group keys
+        group_keys = (
+            skeys + (["_scf"] if flag_cols else []) + jkeys[d_block:]
         )
-    else:
 
-        def run_cell(key, t_tbl, c_tbl):
-            return _out_table(
-                base_fn(
-                    _as_py_key(key),
-                    _tbl_cols(t_tbl, in_t_cols),
-                    _tbl_cols(c_tbl, in_c_cols),
-                )
+    def _cell_slices(dd: dict):
+        # stable lexsort by the fine keys: cells ascend by key, rows
+        # keep arrival order within a cell — exactly the iteration
+        # order pandas groupby(fine, sort=True) produced, so per-cell
+        # inputs (and the output row order) are bitwise unchanged
+        n = dd[fine[0]].shape[0]
+        order = np.lexsort(tuple(dd[f] for f in reversed(fine)))
+        change = np.zeros(max(n - 1, 0), dtype=bool)
+        for f in fine:
+            kf = dd[f][order]
+            change |= kf[1:] != kf[:-1]
+        starts = np.flatnonzero(np.concatenate(([True], change)))
+        ends = np.append(starts[1:], n)
+        return order, starts, ends
+
+    def solve_cells(key, t_tbl, c_tbl):
+        # iterate the fine blocking cells inside ONE cogroup group (one
+        # cell when mult == 1): identical (cell, targets, ring) triples
+        # reach base_fn under any grouping or salting, so the per-cell
+        # outputs are bitwise invariant.  All slicing is numpy (no
+        # per-cell pandas frames, no pd.concat).
+        if t_tbl.num_rows == 0:
+            return _out_table(_empty_out())
+        tdat = _tbl_cols(t_tbl, in_t_cols + fine)
+        t_ord, t_st, t_en = _cell_slices(tdat)
+        c_index: dict = {}
+        cdat = None
+        if c_tbl.num_rows:
+            cdat = _tbl_cols(c_tbl, in_c_cols + fine)
+            c_ord, c_st, c_en = _cell_slices(cdat)
+            for i in range(len(c_st)):
+                r0 = c_ord[c_st[i]]
+                kk = tuple(int(cdat[f][r0]) for f in fine)
+                c_index[kk] = c_ord[c_st[i] : c_en[i]]
+        empty_c = {cn: np.empty(0, np.float64) for cn in in_c_cols}
+        outs = []
+        for i in range(len(t_st)):
+            rows = t_ord[t_st[i] : t_en[i]]
+            kk = tuple(int(tdat[f][rows[0]]) for f in fine)
+            tsub = {cn: tdat[cn][rows] for cn in in_t_cols}
+            crows = c_index.get(kk)
+            csub = (
+                empty_c
+                if crows is None
+                else {cn: cdat[cn][crows] for cn in in_c_cols}
             )
-
-        out = (
-            t.groupBy(*jkeys)
-            .cogroup(c.groupBy(*jkeys))
-            .applyInArrow(run_cell, out_schema)
+            outs.append(base_fn(kk, tsub, csub))
+        return _out_table(
+            {cn: np.concatenate([o[cn] for o in outs]) for cn in out_names}
         )
+
+    out = (
+        t.groupBy(*group_keys)
+        .cogroup(c.groupBy(*group_keys))
+        .applyInArrow(solve_cells, out_schema)
+    )
     return out.select(
         F.col("tid").alias(target_id),
         *[F.col(f"t{k}").alias(c) for k, c in enumerate(coords)],

@@ -38,15 +38,15 @@ Haversine blocking (lat/lon degrees, max_dist a central angle in radians):
 Skew: hot cells (the north rule's dense pages) are handled by (a) AQE skew
 join splitting — the join is a plain shuffle equi-join, so AQE can split
 oversized partitions — and (b) optional explicit salting: hot cells are
-detected with a count aggregate and flagged onto both join sides via a
-BROADCAST join (no driver-side key list, no plan-size blowup), the stamped
-side takes a hash salt and the right side replicates across all salts.
+detected with a count aggregate and split by ``salt_hot_cells`` (the recipe
+kriging's cogroup shares).
 """
 
 from __future__ import annotations
 
 import itertools
 import math
+import numbers
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -108,6 +108,16 @@ def geo_cell_exprs(
     return cells
 
 
+def hot_cap(spark) -> int:
+    """Bound on every broadcast hot set: the top ``max(64, 16 ×
+    defaultParallelism)`` cells by count.  A heavy-tailed density can push
+    unboundedly many cells over a threshold; the barely-hot tail gains
+    nothing from splitting but would ship to every task.  Output is
+    invariant under any cap (pinned) — it only moves cells between the
+    split and plain treatments."""
+    return max(64, 16 * spark.sparkContext.defaultParallelism)
+
+
 def top_hot_cells(
     counts: DataFrame,
     keys: Sequence[str],
@@ -125,6 +135,67 @@ def top_hot_cells(
     return hot
 
 
+def check_int(name: str, value, lo: int, *allowed) -> None:
+    """Reject ``value`` at the API boundary with a ValueError naming the
+    parameter, unless it is one of ``allowed`` or an int ≥ ``lo``."""
+    if isinstance(value, str) or value is None:
+        if value in allowed:
+            return
+    elif isinstance(value, numbers.Integral) and not isinstance(value, bool):
+        if value >= lo:
+            return
+    want = " or ".join([*map(repr, allowed), f"an int >= {lo}"])
+    raise ValueError(f"{name} must be {want}, got {value!r}")
+
+
+def salt_hot_cells(
+    hashed: DataFrame,
+    replicated: DataFrame,
+    hot: DataFrame,
+    keys: list[str],
+    id_col: str,
+    salt_hot: int,
+) -> tuple[DataFrame, DataFrame, list[str]]:
+    """Split every cell of ``hot`` (a ``keys``-only DataFrame) across
+    ``salt_hot`` sub-keys → ``(hashed, replicated, keys + ["_salt"])`` —
+    the ONE salting recipe (pair_join's join, kriging's cogroup).
+
+    A hot cell serializes its reducer (a pandas cogroup even runs ONE task
+    per key, which AQE cannot split).  The hot set is flagged onto both
+    sides by a BROADCAST join (no driver-side key list, no plan-size
+    blowup); ``hashed`` rows take ``pmod(xxhash64(id_col), salt_hot)`` and
+    ``replicated`` rows are copied to all salts, so every hashed row still
+    meets its cell's full replicated side exactly once.  Cold cells pay
+    nothing (salt 0, no replication)."""
+    hot = hot.select(*keys, F.lit(True).alias("_hot"))
+    hashed = (
+        hashed.join(F.broadcast(hot), keys, "left")
+        .withColumn(
+            "_salt",
+            F.when(
+                F.col("_hot"), F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_hot))
+            )
+            .otherwise(F.lit(0))
+            .cast("long"),
+        )
+        .drop("_hot")
+    )
+    replicated = (
+        replicated.join(F.broadcast(hot), keys, "left")
+        .withColumn(
+            "_salt",
+            F.explode(
+                F.when(
+                    F.col("_hot"), F.sequence(F.lit(0), F.lit(salt_hot - 1))
+                ).otherwise(F.array(F.lit(0)))
+            ),
+        )
+        .withColumn("_salt", F.col("_salt").cast("long"))
+        .drop("_hot")
+    )
+    return hashed, replicated, [*keys, "_salt"]
+
+
 def pair_join(
     points: DataFrame,
     max_dist: float,
@@ -136,7 +207,6 @@ def pair_join(
     salt_partitions: int | None = None,
     salt_hot: int | None = None,
     hot_threshold: int = 50_000,
-    hot_cap: int | None = None,
 ) -> DataFrame:
     """Return one row per unordered pair (a, b) with dist(a,b) < max_dist.
 
@@ -149,17 +219,15 @@ def pair_join(
     latitude bound (skipping the max(|lat|) aggregate), and longitude cells
     wrap at the antimeridian (see module docstring).
 
-    ``salt_hot=S`` enables EXPLICIT hot-cell salting (north rule): cells
-    whose point count exceeds ``hot_threshold`` get their join key extended
-    with a salt — the stamped (left) side takes ``pmod(xxhash64(id), S)``,
-    the right side is replicated across all S salts — splitting one hot
-    cell's pair work across S reducers.  Each pair is still produced exactly
-    once (the left row's salt selects one of the S replicas).  Cold cells
-    pay nothing (salt 0, no replication).  ``hot_cap`` bounds the broadcast
-    hot set at the top-``hot_cap`` cells by count (see the inline note);
-    the pair output is identical under any cap — only which cells get the
-    salt treatment changes.
+    ``salt_hot=S`` enables EXPLICIT hot-cell salting (north rule): the
+    top-``hot_cap`` cells whose point count exceeds ``hot_threshold`` get
+    their join key extended with a salt (``salt_hot_cells``: the stamped
+    left side is hashed, the right side replicated across all S salts),
+    splitting one hot cell's pair work across S reducers.  Each pair is
+    still produced exactly once (the left row's salt selects one of the S
+    replicas).  Unsalted hot-tail cells are still split by AQE skew join.
     """
+    check_int("salt_hot", salt_hot, 2, None)
     wrap_n: int | None = None
     if haversine:
         lat_c, lon_c = coords
@@ -221,50 +289,15 @@ def pair_join(
 
     join_keys = list(jkeys)
     if salt_hot:
-        # hot-cell detection stays distributed: the (tiny) hot-cell table is
-        # broadcast onto both sides — no driver collect, no isin literal
-        # list.  kriging.salt_cogroup_keys carries the cogroup sibling of
-        # this recipe — semantic fixes here must be mirrored there.
-        # hot_cap bounds the broadcast: only the top-hot_cap cells by count
-        # get salted — on a heavy-tailed density the above-threshold set is
-        # unbounded while the cells that matter are the few biggest;
-        # unsalted hot-tail cells are still split by AQE skew-join
         hot = top_hot_cells(
             pts.groupBy(*cell_names).agg(F.count(F.lit(1)).alias("_hot_n")),
             cell_names,
             hot_threshold,
-            hot_cap,
+            hot_cap(points.sparkSession),
+        ).select(*[F.col(cell_names[k]).alias(jkeys[k]) for k in range(d)])
+        left, right, join_keys = salt_hot_cells(
+            left, right, hot, join_keys, f"a_{id_col}", salt_hot
         )
-        hot = hot.select(
-            *[F.col(cell_names[k]).alias(jkeys[k]) for k in range(d)],
-            F.lit(True).alias("_hot"),
-        )
-        left = (
-            left.join(F.broadcast(hot), join_keys, "left")
-            .withColumn(
-                "jsalt",
-                F.when(
-                    F.col("_hot"),
-                    F.pmod(F.xxhash64(F.col(f"a_{id_col}")), F.lit(salt_hot)),
-                )
-                .otherwise(F.lit(0))
-                .cast("long"),
-            )
-            .drop("_hot")
-        )
-        right = (
-            right.join(F.broadcast(hot), join_keys, "left")
-            .withColumn(
-                "_salts",
-                F.when(
-                    F.col("_hot"), F.sequence(F.lit(0), F.lit(salt_hot - 1))
-                ).otherwise(F.array(F.lit(0))),
-            )
-            .withColumn("jsalt", F.explode("_salts"))
-            .withColumn("jsalt", F.col("jsalt").cast("long"))
-            .drop("_salts", "_hot")
-        )
-        join_keys = join_keys + ["jsalt"]
 
     if salt_partitions:
         # explicit co-partitioning before the join; AQE still splits skew

@@ -646,6 +646,27 @@ def test_krige_external_drift_reproduces_covariate(spark):
         krige(targets, cond, model, radius=4.0, method="simple",
               drift_cols=("elev",))
 
+    # bad arguments fail at the API boundary, naming the parameter, before
+    # any Spark job runs (knn=0 / max_cond=0 used to krige every target to
+    # the prior; 'Auto' strings failed deep inside int() or a Spark job)
+    sc = spark.sparkContext
+    sc.setJobGroup("krige-bad-args", "krige-bad-args")
+    try:
+        for name, bad in [
+            ("knn", 0), ("knn", 2.5), ("max_cond", 0), ("max_cond", None),
+            ("salt_hot", 1), ("salt_hot", 0), ("hot_threshold", "Auto"),
+            ("hot_threshold", -1), ("group_cells", "Auto"),
+            ("group_cells", 0), ("radius", 0.0), ("radius", float("nan")),
+            ("radius", float("inf")), ("radius", -1.0),
+        ]:
+            kw = {"radius": 4.0, name: bad}
+            with pytest.raises(ValueError, match=name):
+                krige(targets, cond, model, **kw)
+        assert len(sc.statusTracker().getJobIdsForGroup("krige-bad-args")) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
 
 def test_full_size_universal_and_geo_query_functions(spark, sf_dir):
     """The unregistered full-size query functions (q_krige_universal,

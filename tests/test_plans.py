@@ -168,6 +168,6 @@ def test_small_literal_tables_are_jvm_side(spark, sf_dir):
         radius=2.0, salt_hot=4, hot_threshold=2,
     )
     plan = salted._jdf.queryExecution().executedPlan().toString()
-    assert "_ksalt" in plan  # the hot set is non-empty: salting engaged
+    assert "_salt" in plan  # the hot set is non-empty: salting engaged
     served = _python_served_scans(salted)
     assert served and all("FlatMapCoGroupsInArrow" in ln for ln in served), served

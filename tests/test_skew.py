@@ -48,15 +48,18 @@ def test_pair_join_explicit_salting_exact(spark):
     # hot-cell detection is a broadcast join, not a driver-collected isin
     # literal list (plan-size-safe when thousands of cells are hot)
     plan = pairs._jdf.queryExecution().toString()
-    assert " IN (" not in plan and "jsalt" in plan
+    assert " IN (" not in plan and "_salt" in plan
 
 
-def test_pair_join_hot_cap_exact(spark):
+def test_pair_join_hot_cap_exact(spark, monkeypatch):
     """pair_join's hot_cap bounds WHICH cells get the salt treatment, not
     the result: with cap=1 only the single biggest cell is salted and the
     pair set is still exact."""
+    from gstools_core_spark.operators import pair_join as PJ
+
+    monkeypatch.setattr(PJ, "hot_cap", lambda spark: 1)
     df, pos, _ = _skewed_points(spark)
-    pairs = pair_join(df, max_dist=1.0, salt_hot=8, hot_threshold=100, hot_cap=1)
+    pairs = pair_join(df, max_dist=1.0, salt_hot=8, hot_threshold=100)
     got = {(r["a_id"], r["b_id"]) for r in pairs.select("a_id", "b_id").collect()}
     ii, jj = np.triu_indices(pos.shape[1], k=1)
     d = np.sqrt(np.sum((pos[:, ii] - pos[:, jj]) ** 2, axis=0))
@@ -121,7 +124,7 @@ def test_krige_salting_bitwise_invariant_simple_universal(spark):
 
 
 def test_krige_salting_geo_bitwise_invariant(spark):
-    """Sphere path: the _ksalt key component must not be mistaken for the
+    """Sphere path: the _salt key component must not be mistaken for the
     lon cell index inside solve_cell's max_cond center ranking."""
     from gstools_core_spark.operators.kriging import GaussianModel, krige
 
@@ -185,7 +188,7 @@ def test_auto_group_factor_skew_guard(spark):
     cells on a skewed density: merging adjacent hot-region cells would
     re-serialize exactly what salt_hot splits (measured 7.5→28.5 s on the
     sphere path as the factor grows)."""
-    from gstools_core_spark.operators.kriging import auto_group_factor
+    from gstools_core_spark.operators.kriging import plan_cells
 
     # uniform 40×40 cell grid, one point per cell → no skew, factor from
     # the 2-groups/core rule: sqrt(1600 / (2·par))
@@ -193,16 +196,23 @@ def test_auto_group_factor_skew_guard(spark):
         (F.col("id") % 40).alias("cx"), (F.col("id") / 40).cast("long").alias("cy")
     )
     par = 8
-    got = auto_group_factor(grid, ["cx", "cy"], par)
+    got, kf_u, _ = plan_cells(grid, ["cx", "cy"], par, None)
     assert got == max(1, int(round((1600 / (2 * par)) ** 0.5)))
+    assert kf_u is None
 
     # 80% of rows in ONE cell → max/mean ≫ 4 AND above the Poisson floor
-    # → guard keeps fine cells
+    # → guard keeps that cell fine (HYBRID): the factor is re-derived from
+    # the COLD cell count (the tail still sheds its dispatch; at 100× the
+    # tail grows linearly, the hot set doesn't)
     skewed = spark.range(1000).select(
         F.when(F.col("id") < 800, F.lit(0)).otherwise(F.col("id")).alias("cx"),
         F.lit(0).alias("cy"),
     )
-    assert auto_group_factor(skewed, ["cx", "cy"], par) == 1
+    m_s, kf_s, _ = plan_cells(skewed, ["cx", "cy"], par, None)
+    fine_rows = {(r["cx"], r["cy"]) for r in kf_s.collect()}
+    assert fine_rows == {(0, 0)}
+    # 200 cold single-row cells → rule over 200, not 201
+    assert m_s == max(1, int(round((200 / (2 * par)) ** 0.5)))
 
     # SPARSE-uniform: mean ~1 per cell with one 8-row cell — max/mean > 4
     # but max is ordinary Poisson jitter (below mean + 6·√mean + 10), and
@@ -212,30 +222,9 @@ def test_auto_group_factor_skew_guard(spark):
         F.when(F.col("id") < 8, F.lit(0)).otherwise(F.col("id")).alias("cx"),
         F.lit(0).alias("cy"),
     )
-    got_sparse = auto_group_factor(sparse, ["cx", "cy"], par)
+    got_sparse, kf_sp, _ = plan_cells(sparse, ["cx", "cy"], par, None)
     assert got_sparse == max(1, int(round((1593 / (2 * par)) ** 0.5)))
-
-    # precomputed-counts path (shared with salting's hot detection) gives
-    # the identical decision
-    from gstools_core_spark.operators.kriging import (
-        auto_group_plan,
-        cell_count_df,
-    )
-
-    counts = cell_count_df(skewed, ["cx", "cy"])
-    assert auto_group_factor(skewed, ["cx", "cy"], par, counts=counts) == 1
-
-    # the full plan: uniform → (rule factor, no keep-fine set); skewed →
-    # HYBRID — the skew-causing cell keeps fine granularity while the
-    # factor is re-derived from the COLD cell count (the tail still sheds
-    # its dispatch; at 100× the tail grows linearly, the hot set doesn't)
-    m_u, kf_u = auto_group_plan(grid, ["cx", "cy"], par)
-    assert kf_u is None and m_u == got
-    m_s, kf_s = auto_group_plan(skewed, ["cx", "cy"], par)
-    fine_rows = {(r["cx"], r["cy"]) for r in kf_s.collect()}
-    assert fine_rows == {(0, 0)}
-    # 200 cold single-row cells → rule over 200, not 201
-    assert m_s == max(1, int(round((200 / (2 * par)) ** 0.5)))
+    assert kf_sp is None
 
 
 def test_hot_set_caps_bounded(spark):
@@ -243,10 +232,8 @@ def test_hot_set_caps_bounded(spark):
     a Zipfian tail can push unboundedly many cells above it — both
     broadcast hot sets (auto-grouping keep-fine, salting split set) must
     be bounded at the top-K cells by count, deterministically."""
-    from gstools_core_spark.operators.kriging import (
-        auto_group_plan,
-        salt_cogroup_keys,
-    )
+    from gstools_core_spark.operators.kriging import plan_cells
+    from gstools_core_spark.operators.pair_join import salt_hot_cells
 
     # 300 'hot' cells of 40 rows + 3000 single-row tail cells: mean ≈ 4.5,
     # Poisson floor ≈ 27 → every 40-row cell clears the threshold, far
@@ -260,40 +247,42 @@ def test_hot_set_caps_bounded(spark):
     df = hot.unionByName(tail)
 
     cap = 16
-    m, kf = auto_group_plan(df, ["cx", "cy"], 8, keep_cap=cap)
+    m, kf, _ = plan_cells(df, ["cx", "cy"], 8, cap)
     assert kf is not None and kf.count() == cap
     # deterministic top-K: equal counts tie-break on cell keys ascending
     assert {r["cx"] for r in kf.collect()} == set(range(cap))
     # the factor counts the beyond-cap hot cells as cold: 3300-16 cells
     assert m == max(1, int(round(((3300 - cap) / (2 * 8)) ** 0.5)))
     # uncapped: all 300 hot cells stay fine, factor from the 3000 cold
-    m_u, kf_u = auto_group_plan(df, ["cx", "cy"], 8)
+    m_u, kf_u, _ = plan_cells(df, ["cx", "cy"], 8, None)
     assert kf_u.count() == 300
     assert m_u == max(1, int(round((3000 / (2 * 8)) ** 0.5)))
 
-    # salting: with hot_cap only the top-K cells get salted/replicated
+    # salting: with the cap only the top-K cells get salted/replicated
     t = df.select(
         F.monotonically_increasing_id().alias("tid"),
         F.col("cx").alias("jc0"),
         F.col("cy").alias("jc1"),
     )
     c = t.select(F.col("tid").alias("cid"), "jc0", "jc1")
-    ts, cs, keys = salt_cogroup_keys(
-        t, c, ["jc0", "jc1"], "tid", 4, 30, hot_cap=cap
+    _, _, hot_set = plan_cells(
+        t, ["jc0", "jc1"], 8, cap, group_cells=1, salt_hot=4, hot_threshold=30
     )
+    ts, cs, keys = salt_hot_cells(t, c, hot_set, ["jc0", "jc1"], "tid", 4)
     salted_cells = (
         cs.groupBy("jc0", "jc1")
-        .agg(F.countDistinct("_ksalt").alias("ns"))
+        .agg(F.countDistinct("_salt").alias("ns"))
         .where(F.col("ns") > 1)
         .count()
     )
     assert salted_cells == cap
 
 
-def test_krige_hot_cap_bitwise_invariant(spark):
+def test_krige_hot_cap_bitwise_invariant(spark, monkeypatch):
     """Capping which cells are salted / kept fine must not change a bit of
     the kriged output (it only moves cells between the split/fine and
     grouped treatments, both output-invariant)."""
+    from gstools_core_spark.operators import kriging as KM
     from gstools_core_spark.operators.kriging import GaussianModel, krige
 
     df, _, _ = _skewed_points(spark)
@@ -307,14 +296,46 @@ def test_krige_hot_cap_bitwise_invariant(spark):
         krige(df, cond, model, radius=1.0, method="ordinary", knn=8,
               group_cells=1)
     )
-    for cap in (0, 1, 4):  # disabled / tighter-than-hot-set / roomy
-        got = _collect_krige(krige(df, cond, model, hot_cap=cap, **kw))
+    for cap in (None, 1, 4):  # uncapped / tighter-than-hot-set / roomy
+        monkeypatch.setattr(KM, "hot_cap", lambda spark, cap=cap: cap)
+        got = _collect_krige(krige(df, cond, model, **kw))
         assert got == want, f"hot_cap={cap}"
+
+
+def test_krige_plan_time_jobs(spark):
+    """krige's plan-time Spark jobs per skew config, counted by the status
+    tracker around construction: explicit ints run only what they need,
+    and 'auto' serves grouping and both hot sets from one summary collect
+    plus one hot-set collect (7 / 8 / 10 jobs before the single planner)."""
+    from gstools_core_spark.operators.kriging import GaussianModel, krige
+
+    df, _, _ = _skewed_points(spark)
+    cond = df.where(F.col("id") % 3 == 0)
+    model = GaussianModel(var=1.0, len_scale=0.4, nugget=0.01)
+    sc = spark.sparkContext
+    configs = [
+        ("auto", {}, 5),
+        ("auto_salt300", dict(salt_hot=4, hot_threshold=300), 5),
+        ("auto_salt_auto", dict(salt_hot=4), 5),
+        ("gc1_salt8", dict(group_cells=1, salt_hot=8), 4),
+        ("gc2", dict(group_cells=2), 0),
+    ]
+    got = {}
+    try:
+        for name, kw, _ in configs:
+            group = f"krige-plan-jobs-{name}"
+            sc.setJobGroup(group, group)
+            krige(df, cond, model, radius=1.0, method="ordinary", knn=8, **kw)
+            got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == {name: n for name, _, n in configs}
 
 
 def test_krige_salting_skipped_when_no_hot_cells(spark):
     """Plan-time hot-set detection: when no cell clears hot_threshold the
-    salting machinery (cond-ring explode, broadcast joins, _ksalt key)
+    salting machinery (cond-ring explode, broadcast joins, _salt key)
     must not appear in the plan at all — it cost ~35% of the sphere bench
     at sf0.1 to salt zero cells — and the output must equal the unsalted
     run bitwise.  With a low threshold the machinery still engages."""
@@ -327,8 +348,8 @@ def test_krige_salting_skipped_when_no_hot_cells(spark):
     plain = krige(df, cond, model, **kw)
     skipped = krige(df, cond, model, salt_hot=8, hot_threshold=10_000, **kw)
     engaged = krige(df, cond, model, salt_hot=8, hot_threshold=300, **kw)
-    assert "_ksalt" not in skipped._jdf.queryExecution().toString()
-    assert "_ksalt" in engaged._jdf.queryExecution().toString()
+    assert "_salt" not in skipped._jdf.queryExecution().toString()
+    assert "_salt" in engaged._jdf.queryExecution().toString()
     want = _collect_krige(plain)
     assert _collect_krige(skipped) == want
     assert _collect_krige(engaged) == want
@@ -348,14 +369,15 @@ def test_krige_hot_threshold_auto_fair_share(spark):
     kw = dict(radius=1.0, method="ordinary", knn=8, group_cells=1)
     plain = krige(df, cond, model, **kw)
     auto = krige(df, cond, model, salt_hot=4, **kw)  # hot_threshold='auto'
-    assert "_ksalt" in auto._jdf.queryExecution().toString()
+    assert "_salt" in auto._jdf.queryExecution().toString()
     assert _collect_krige(auto) == _collect_krige(plain)
 
 
 def test_krige_salting_splits_hot_cell(spark):
     """One hot cell becomes S cogroup sub-keys (targets hashed across all S
     salts, cond ring replicated ×S); cold cells keep salt 0 unreplicated."""
-    from gstools_core_spark.operators.kriging import salt_cogroup_keys
+    from gstools_core_spark.operators.kriging import plan_cells
+    from gstools_core_spark.operators.pair_join import salt_hot_cells
 
     # 600 targets in cell (0,0) (hot), 50 in cell (5,5) (cold)
     rows = [(i, 0.1 + (i % 10) * 0.08, 0.1 + (i // 10 % 10) * 0.08) for i in range(600)]
@@ -368,10 +390,13 @@ def test_krige_salting_splits_hot_cell(spark):
         F.col("tid").alias("cid"), "t0", "t1", "jc0", "jc1"
     )  # stand-in for the ring-stamped cond side
     S = 8
-    ts, cs, keys = salt_cogroup_keys(t, c, ["jc0", "jc1"], "tid", S, 300)
-    assert keys == ["jc0", "jc1", "_ksalt"]
-    hot_salts = ts.where(F.col("jc0") == 0).select("_ksalt").distinct().count()
-    cold_salts = ts.where(F.col("jc0") == 5).select("_ksalt").distinct().count()
+    _, _, hot = plan_cells(
+        t, ["jc0", "jc1"], 8, None, group_cells=1, salt_hot=S, hot_threshold=300
+    )
+    ts, cs, keys = salt_hot_cells(t, c, hot, ["jc0", "jc1"], "tid", S)
+    assert keys == ["jc0", "jc1", "_salt"]
+    hot_salts = ts.where(F.col("jc0") == 0).select("_salt").distinct().count()
+    cold_salts = ts.where(F.col("jc0") == 5).select("_salt").distinct().count()
     assert hot_salts == S and cold_salts == 1
     # cond side: hot cell replicated across all S salts, cold cell once
     hot_rep = cs.where(F.col("jc0") == 0).count()

@@ -41,7 +41,7 @@ def main():
         "variogram_directional (plan-time literal cone tests, explode of passing dirs — no BNLJ, no window)":
             V.variogram_directional(pts, [0.0, 1.0, 2.0, 3.0],
                                     [(1.0, 0.0), (0.0, 1.0)]),
-        "krige ordinary (cogroup applyInPandas per cell)":
+        "krige ordinary (cogroup applyInArrow per cell)":
             krige(pts, pts.where(F.col("id") % 5 == 0),
                   GaussianModel(1.0, 2.0, 0.01), radius=3.0),
         "krige moving-window (knn=8: same cogroup shape, per-target batched solves)":
