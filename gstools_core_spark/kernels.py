@@ -395,21 +395,90 @@ def stable_solve(A: np.ndarray, B: np.ndarray, block: int = 512) -> np.ndarray:
     """``np.linalg.solve(A, B)`` with every underlying LAPACK call at
     EXACTLY ``block`` RHS columns (zero-padded): per-column results are
     then a pure function of ``(A, that column)`` — see stable_matmul for
-    why plain multi-RHS getrs/trsm is width-dependent.  Re-factors A once
-    per chunk, so for nt ≤ block (every bench/production cell batch) the
-    cost is ONE getrf + one fixed-width trsm — measured 1.09× plain solve
-    at (1025, 500), vs 1.6× for inv + stable_matmul (getri's extra n³
-    dominates at large n with narrow target batches).  Raises
-    LinAlgError on singular input like np.linalg.solve."""
+    why plain multi-RHS getrs/trsm is width-dependent.  ``A`` is
+    ``(..., n, n)`` and ``B`` ``(..., n, nt)``: leading dims are a batch of
+    independent systems, each solved by its own LAPACK call exactly as a
+    2-D call would solve it.  Re-factors A once per chunk, so for
+    nt ≤ block (every bench/production cell batch) the cost is ONE getrf +
+    one fixed-width trsm — measured 1.09× plain solve at (1025, 500), vs
+    1.6× for inv + stable_matmul (getri's extra n³ dominates at large n
+    with narrow target batches).  Raises LinAlgError when any system is
+    singular, like np.linalg.solve."""
     A = np.ascontiguousarray(A)
-    n, nt = B.shape
-    out = np.empty((n, nt))
+    nt = B.shape[-1]
+    out = np.empty(B.shape)
     for s in range(0, nt, block):
         e = min(s + block, nt)
-        Bp = np.zeros((n, block))
-        Bp[:, : e - s] = B[:, s:e]
-        out[:, s:e] = np.linalg.solve(A, Bp)[:, : e - s]
+        Bp = np.zeros(B.shape[:-1] + (block,))
+        Bp[..., : e - s] = B[..., s:e]
+        out[..., s:e] = np.linalg.solve(A, Bp)[..., : e - s]
     return out
+
+
+def krige_batch(
+    C: np.ndarray,
+    V: np.ndarray,
+    v: np.ndarray,
+    Fd: np.ndarray | None,
+    Ft: np.ndarray | None,
+    mean: float,
+    sill: float,
+    block: int = 512,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Krige ``m`` neighborhoods of ``n`` points onto ``t`` targets each
+    → ``(est, kvar)``, both ``(m, t)``.
+
+    ``C`` ``(m, n, n)`` is the Gram matrix (nugget on its diagonal), ``V``
+    ``(m, n, t)`` the point-target covariances and ``v`` ``(m, n)`` the
+    conditioning values.  ``Fd`` ``(m, nd, n)`` / ``Ft`` ``(m, nd, t)`` are
+    the drift basis at the points / targets: the system is bordered by
+    the unbiasedness rows ``Fd·w = Ft`` (ordinary = the constant row,
+    universal/KED add more).  ``Fd=None`` is simple kriging about the
+    known ``mean`` (ignored otherwise).
+
+    Every target's result is a pure function of its own neighborhood and
+    column — independent of ``t``, of its position among the targets and
+    of the other systems in the batch (the salting/grouping bitwise pins
+    rest on this):
+
+    * the solve is ``stable_solve`` at ``block`` columns per LAPACK call;
+      a batch holding a singular system is re-solved item by item, and
+      the singular items take the minimum-norm ``pinv(A)·B`` (e.g.
+      coincident samples with zero nugget);
+    * the reductions run over one C-contiguous row per target.  A
+      reduction over the point axis of an ``(n, t)`` block changes its
+      summation order with the block's layout: at ``t == 1`` it becomes
+      a contiguous pairwise sum, so a target alone in its salt sub-group
+      would get other bits than the same target solved among others."""
+    m, n, t = V.shape
+    if Fd is None:
+        A, B, v = C, V, v - mean
+    else:
+        nd = Fd.shape[1]
+        A = np.zeros((m, n + nd, n + nd))
+        A[:, :n, :n] = C
+        A[:, n:, :n] = Fd
+        A[:, :n, n:] = Fd.transpose(0, 2, 1)
+        B = np.concatenate([V, Ft], axis=1)
+    try:
+        W = stable_solve(A, B, block)
+    except np.linalg.LinAlgError:
+        W = np.empty(B.shape)
+        for i in range(m):
+            try:
+                W[i] = stable_solve(A[i], B[i], block)
+            except np.linalg.LinAlgError:
+                W[i] = stable_matmul(np.linalg.pinv(A[i]), B[i])
+    W = np.ascontiguousarray(W.transpose(0, 2, 1))  # (m, t, n [+ nd])
+    Vt = np.ascontiguousarray(V.transpose(0, 2, 1))
+    est = np.einsum("mti,mi->mt", W[:, :, :n], np.ascontiguousarray(v))
+    kvar = sill - np.einsum("mti,mti->mt", W[:, :, :n], Vt)
+    if Fd is None:
+        est = est + mean
+    else:
+        Ftt = np.ascontiguousarray(Ft.transpose(0, 2, 1))
+        kvar = kvar - np.einsum("mti,mti->mt", W[:, :, n:], Ftt)
+    return est, np.maximum(kvar, 0.0)
 
 
 def calc_field_krige(

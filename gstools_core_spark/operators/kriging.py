@@ -8,11 +8,12 @@ Per the north star, this engine owns BOTH steps:
 * neighborhoods via the cell-ring blocking (conditioning points stamped onto
   the 3×3 ring of each target cell at cell_size = radius);
 * one ``cogroup().applyInArrow`` UDF iterates the fine cells of each
-  cogroup group (one cell, or a super-cell of them) and, per cell,
-  assembles the covariance Gram matrix with the model, inverts it once,
-  and evaluates every target through the numpy kernels
-  (kernels.calc_field_krige_and_variance) — i.e. the reference's matrix
-  kernel runs verbatim on each neighborhood;
+  cogroup group (one cell, or a super-cell of them); per cell, a selector
+  picks the neighborhoods (the cell's shared ring, or each target's knn),
+  the model's covariances fill their Gram matrices, and
+  ``kernels.krige_batch`` solves them — the reference's
+  condᵀ·M·v / vᵀ·M·v products (krige.rs:24-118) taken through a
+  factorized solve instead of a pre-inverted M;
 * ``plan_cells`` makes every skew decision (grouping factor, keep-fine
   cells, salted hot cells) from one per-cell count aggregate.
 
@@ -178,31 +179,32 @@ def plan_cells(
 
 
 def _pairwise_hav(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    """(na, 2) × (nb, 2) (lat, lon degrees) → central angle in RADIANS,
-    broadcast through the golden-pinned kernel (operation order identical
-    to variogram.rs:107-118).  The per-point cos(lat) factors are hoisted
-    out of the pair broadcast (haversine_dist_coslat — bitwise identical,
-    ~2 of the ~7 transcendental ops per pair become O(points))."""
-    ca = np.cos(np.radians(A[:, 0]))[:, None]
-    cb = np.cos(np.radians(B[:, 0]))[None, :]
-    return K.haversine_dist_coslat(A.T[:, :, None], B.T[:, None, :], ca, cb)
+    """(..., na, 2) × (..., nb, 2) (lat, lon degrees) → (..., na, nb)
+    central angles in RADIANS, broadcast through the golden-pinned kernel
+    (operation order identical to variogram.rs:107-118).  The per-point
+    cos(lat) factors are hoisted out of the pair broadcast
+    (haversine_dist_coslat — bitwise identical, ~2 of the ~7
+    transcendental ops per pair become O(points))."""
+    A, B = np.moveaxis(A, -1, 0), np.moveaxis(B, -1, 0)
+    ca = np.cos(np.radians(A[0]))[..., :, None]
+    cb = np.cos(np.radians(B[0]))[..., None, :]
+    return K.haversine_dist_coslat(A[..., :, None], B[..., None, :], ca, cb)
 
 
-def _solve1(A: np.ndarray, y: np.ndarray) -> np.ndarray:
-    """Square solve with minimum-norm lstsq fallback for singular systems."""
-    try:
-        return np.linalg.solve(A, y)
-    except np.linalg.LinAlgError:
-        return np.linalg.lstsq(A, y, rcond=None)[0]
-
-
-def _pairwise_dist(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    """(na, d) × (nb, d) → (na, nb) Euclid; 2-D keeps np.hypot (bitwise
-    parity with the original 2-D implementation and its golden tests)."""
-    if A.shape[1] == 2:
-        return np.hypot(A[:, 0:1] - B[None, :, 0], A[:, 1:2] - B[None, :, 1])
-    diff = A[:, None, :] - B[None, :, :]
-    return np.sqrt(np.sum(diff * diff, axis=2))
+def _pairwise_euclid(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """(..., na, d) × (..., nb, d) → (..., na, nb) Euclidean distances,
+    accumulated per axis left to right with explicit mul/add, then sqrt:
+    bitwise equal to the SQL oracle's sqrt(dx*dx + dy*dy), so knn rank
+    order reproduces there (np.hypot does not)."""
+    sq = None
+    for k in range(A.shape[-1]):
+        dk = A[..., :, None, k] - B[..., None, :, k]
+        dk *= dk
+        if sq is None:
+            sq = dk
+        else:
+            sq += dk
+    return np.sqrt(sq, out=sq)
 
 
 def krige(
@@ -233,13 +235,13 @@ def krige(
     ``method`` — 'simple' (known ``mean``), 'ordinary' (constant unknown
     mean, one Lagrange row), or 'universal' (unknown polynomial drift: the
     Lagrange block generalizes to monomial drift functions up to
-    ``drift_order`` — order 1 = the coords, order 2 adds all quadratic
-    monomials; ordinary ≡ universal with order 0).  Universal kriging
-    reproduces any target function inside the drift space exactly
-    (pytest-pinned).  Targets whose 3^d cell ring holds no conditioning
-    points fall back to the prior (mean, sill).  Neighborhoods are capped
-    at ``max_cond`` points (nearest to the cell center) to bound the
-    per-cell solve.
+    ``drift_order`` ∈ {0, 1, 2} — order 1 = the coords, order 2 adds all
+    quadratic monomials; ordinary ≡ universal with order 0; any other
+    value raises).  Universal kriging reproduces any target function
+    inside the drift space exactly (pytest-pinned).  Targets whose 3^d
+    cell ring holds no conditioning points fall back to the prior (mean,
+    sill).  Neighborhoods are capped at ``max_cond`` points (nearest to
+    the cell center) to bound the per-cell solve.
 
     ``drift_cols`` — EXTERNAL-DRIFT kriging (KED): names of extra columns
     present on BOTH ``targets`` and ``cond`` (a covariate observed
@@ -253,13 +255,19 @@ def krige(
 
     ``knn`` — per-target MOVING-WINDOW kriging: each target is solved with
     its own ``knn`` nearest conditioning points within ``radius`` (rank
-    ties broken by coordinates ascending — deterministic under shuffle
-    reordering), one batched ``np.linalg.solve`` per (cell, neighborhood-
-    size) group instead of one shared per-cell neighborhood.  ``knn=None``
-    keeps the per-cell shared neighborhood (all ring points, ``max_cond``-
-    capped) — cheaper, but an approximation the moving window removes.
-    Ranking distances use explicit mul/add/sqrt (not np.hypot) so rank
-    order is bitwise-reproducible against the SQL oracle.
+    ties broken by coordinates, then value, then drift columns ascending —
+    deterministic under shuffle reordering), one batched
+    ``kernels.krige_batch`` call per (cell, neighborhood-size) group
+    instead of one shared per-cell neighborhood.  ``knn=None`` keeps the
+    per-cell shared neighborhood (all ring points, ``max_cond``-capped) —
+    cheaper, but an approximation the moving window removes.  Planar
+    distances use explicit mul/add/sqrt (not np.hypot) so rank order is
+    bitwise-reproducible against the SQL oracle.
+
+    A singular neighborhood system (coincident samples with zero nugget;
+    universal kriging with fewer points than drift functions) takes the
+    minimum-norm least-squares solution, ``pinv(A)·b``, for that
+    neighborhood alone; every other neighborhood keeps its plain solve.
 
     ``haversine`` — kriging ON THE SPHERE: ``coords`` must be
     ("lat", "lon") in DEGREES and ``radius`` (and the model's len_scale)
@@ -277,7 +285,9 @@ def krige(
     ``hot_threshold`` TARGETS are split across S sub-keys (targets hashed,
     cond ring replicated — pair_join.salt_hot_cells); the kriged output is
     bitwise identical (pytest-pinned) because every target still sees its
-    cell's full cond ring and all per-group orders are canonicalized.  The
+    cell's full cond ring, all per-group orders are canonicalized, and a
+    target's solve does not depend on how many targets share it (a target
+    alone in its sub-group included — ``kernels.krige_batch``).  The
     hot set is detected at PLAN time (``plan_cells``); when it is empty the
     salting machinery is skipped entirely — the cond-ring explode +
     broadcast joins cost ~35% of the sphere bench at sf0.1 purely to salt
@@ -323,6 +333,12 @@ def krige(
     check_int("salt_hot", salt_hot, 2, None)
     check_int("hot_threshold", hot_threshold, 0, "auto")
     check_int("group_cells", group_cells, 1, "auto")
+    if (
+        not isinstance(drift_order, numbers.Integral)
+        or isinstance(drift_order, bool)
+        or drift_order not in (0, 1, 2)
+    ):
+        raise ValueError(f"drift_order must be 0, 1 or 2, got {drift_order!r}")
     if not (
         isinstance(radius, numbers.Real) and math.isfinite(radius) and radius > 0
     ):
@@ -393,350 +409,103 @@ def krige(
     mcov = model.cov  # any functions.models.CovModel (tiny, picklable)
     simple = method == "simple"
     mu = float(mean)
-    geo = haversine
-    _pw = _pairwise_hav if geo else _pairwise_dist
-    geo_grid = (cell_lat, n_lon, lon_w) if geo else None
+    _pw = _pairwise_hav if haversine else _pairwise_euclid
+    geo_grid = (cell_lat, lon_w) if haversine else None
     # monomial drift basis: ordinary kriging = constant drift only
-    n_drift_order = 0 if method == "ordinary" else int(drift_order)
+    n_drift_order = 0 if method == "ordinary" else drift_order
 
-    def drift_basis_b(P: np.ndarray, D: np.ndarray | None = None) -> np.ndarray:
-        # (m, n, d) [+ (m, n, ext_n)] → (m, nd, n); both solvers' one
-        # drift-basis builder (m = 1 for the shared-neighborhood path)
+    def drift_basis_b(P: np.ndarray, D: np.ndarray) -> np.ndarray:
+        # (m, n, d) points + (m, n, ext_n) drift columns → (m, nd, n)
         m, n, _ = P.shape
         rows = [np.ones((m, n))]
         if n_drift_order >= 1:
             rows += [P[:, :, kk] for kk in range(d)]
         if n_drift_order >= 2:
             rows += [P[:, :, i] * P[:, :, j] for i in range(d) for j in range(i, d)]
-        if ext_n:
-            rows += [D[:, :, j] for j in range(ext_n)]
+        rows += [D[:, :, j] for j in range(ext_n)]
         return np.stack(rows, axis=1)
 
-    t_cols = [f"t{k}" for k in range(d)]
-    c_cols = [f"c{k}" for k in range(d)]
-    out_schema = (
-        "tid long, "
-        + ", ".join(f"{tc} double" for tc in t_cols)
-        + ", krige_mean double, krige_var double, n_cond long"
-    )
-    out_names = ["tid", *t_cols, "krige_mean", "krige_var", "n_cond"]
-    in_t_cols = ["tid", *t_cols, *td_cols]
-    in_c_cols = [*c_cols, *cd_cols, "cval"]
-
-    # ---- Arrow-native cogroup plumbing (round-6 optimization) ----------
-    # The solvers take/return plain dicts of numpy arrays; one Arrow→numpy
-    # conversion per GROUP replaces the per-group pandas DataFrame
-    # round-trip (applyInPandas) and — in the super-grouped path — the
-    # per-FINE-CELL pandas slicing + DataFrame construction + pd.concat,
-    # which at ~0.5-1 ms/cell was a measurable serial term (1,600 cells in
-    # the sf0.1 headline krige).  Values are bitwise unchanged: the float64
-    # buffers pass through untouched and every numeric path below is the
-    # same numpy code operating on the same arrays in the same order.
-
-    def _tbl_cols(tbl, cols) -> dict:
-        out = {}
-        for cn in cols:
-            col = tbl.column(cn)
-            if hasattr(col, "combine_chunks"):  # ChunkedArray → Array
-                col = col.combine_chunks()
-            out[cn] = col.to_numpy(zero_copy_only=False)
-        return out
-
-    def _empty_out() -> dict:
-        return {
-            "tid": np.empty(0, np.int64),
-            **{tc: np.empty(0, np.float64) for tc in t_cols},
-            "krige_mean": np.empty(0, np.float64),
-            "krige_var": np.empty(0, np.float64),
-            "n_cond": np.empty(0, np.int64),
-        }
-
-    def _out_table(dd: dict):
-        import pyarrow as pa
-
-        return pa.Table.from_arrays(
-            [
-                pa.array(np.ascontiguousarray(dd["tid"], dtype=np.int64), type=pa.int64()),
-                *[
-                    pa.array(
-                        np.ascontiguousarray(dd[tc], dtype=np.float64),
-                        type=pa.float64(),
-                    )
-                    for tc in t_cols
-                ],
-                pa.array(np.ascontiguousarray(dd["krige_mean"], dtype=np.float64), type=pa.float64()),
-                pa.array(np.ascontiguousarray(dd["krige_var"], dtype=np.float64), type=pa.float64()),
-                pa.array(np.ascontiguousarray(dd["n_cond"], dtype=np.int64), type=pa.int64()),
-            ],
-            names=out_names,
-        )
-
-    def _stack(dd: dict, cols) -> np.ndarray:
-        # (n, len(cols)) float64 — same values pandas .to_numpy() produced
-        return np.stack([dd[cn].astype(np.float64, copy=False) for cn in cols], axis=1)
-
-    def solve_cell(key, tdat: dict, cdat: dict) -> dict:
-        nt0 = tdat["tid"].shape[0]
-        if nt0 == 0:
-            return _empty_out()
-        T = _stack(tdat, t_cols)  # (nt, d)
-        base = {"tid": tdat["tid"]}
-        for k, tc in enumerate(t_cols):
-            base[tc] = T[:, k]
-        if cdat["cval"].shape[0] == 0:
-            return {
-                **base,
-                "krige_mean": np.full(len(T), mu),
-                "krige_var": np.full(len(T), sill),
-                "n_cond": np.zeros(len(T), dtype=np.int64),
-            }
-        C_pts = _stack(cdat, c_cols)  # (nc, d)
-        cv = cdat["cval"].astype(np.float64, copy=False)
-        C_ext = _stack(cdat, cd_cols) if ext_n else None
-        T_ext = _stack(tdat, td_cols) if ext_n else None
-        # canonical cond order (coords ascending, then value, then any
-        # external-drift columns — the knn path's rule extended), applied
-        # UNCONDITIONALLY: within-group row order is shuffle-arrival
-        # order, so two plans computing the same cell (plain vs salted,
-        # fine vs grouped) deliver the same cond SET in different orders —
-        # and a permuted Gram matrix shifts the LU solve by ulps.  Sorting
-        # makes the solve a pure function of the set.  Drift columns must
-        # join the keys: two rows tying on (coords, value) but differing
-        # in drift would otherwise keep arrival order (lexsort is stable)
-        # and permute the bordered Fd rows between plans.  (The max_cond
-        # trim below re-ranks by center distance; its lexsort breaks ties
-        # with the same full key set, so the trim is order-free too.)
-        _ext_keys = (
-            tuple(C_ext[:, j] for j in range(ext_n - 1, -1, -1)) if ext_n else ()
-        )
-        _co = np.lexsort(
-            _ext_keys
-            + (cv,)
-            + tuple(C_pts[:, k] for k in range(C_pts.shape[1] - 1, -1, -1))
-        )
-        C_pts, cv = C_pts[_co], cv[_co]
-        if ext_n:
-            C_ext = C_ext[_co]
-        if len(C_pts) > max_cond:
-            # keep the max_cond conditioning points nearest the cell center
-            if geo_grid is not None:
-                cl, nl, lw = geo_grid
-                if len(key) > 1:
-                    center = np.array(
-                        [(key[0] + 0.5) * cl, (key[1] + 0.5) * lw - 180.0]
-                    )
-                    d2 = _pairwise_hav(C_pts, center[None, :])[:, 0]
-                else:
-                    # lon blocking disabled: the cell is a full latitude
-                    # band with no lon extent — rank by latitude distance
-                    # only (a lon=0 'center' would bias the kept points
-                    # toward the prime meridian)
-                    d2 = np.abs(C_pts[:, 0] - (key[0] + 0.5) * cl)
-            else:
-                center = (np.asarray(key, dtype=np.float64) + 0.5) * radius
-                d2 = np.sum((C_pts - center) ** 2, axis=1)
-            # canonical order (center distance, coords…, value): a bare
-            # argpartition breaks distance ties by shuffle arrival order,
-            # making the kept neighborhood — and the kriged values —
-            # nondeterministic across runs (the knn path's lexsort rule).
-            # Rows tying on ALL keys keep their relative order from the
-            # unconditional canonical sort above (lexsort is stable), so
-            # drift columns need not repeat here.
-            order = np.lexsort(
-                (cv,)
-                + tuple(C_pts[:, k] for k in range(C_pts.shape[1] - 1, -1, -1))
-                + (d2,)
-            )
-            keep = order[:max_cond]
-            C_pts, cv = C_pts[keep], cv[keep]
-            if ext_n:
-                C_ext = C_ext[keep]
-        nc = len(C_pts)
-
-        dxx = _pw(C_pts, C_pts)
-        dxt = _pw(C_pts, T)
-        C = mcov(dxx) + nugget * np.eye(nc)  # nugget on the diagonal only
-        V = mcov(dxt)  # (nc, nt)
-
+    def assemble(P, Pe, T, Te):
+        # (m, n, d) neighborhoods [+ drift cols], (m, t, d) targets → the
+        # Gram matrices (nugget on the diagonal only) and the drift bases
+        # at points and targets (None for simple kriging)
+        C = mcov(_pw(P, P)) + nugget * np.eye(P.shape[1])
         if simple:
-            # pre-invert once per neighborhood, then run the reference kernel
-            try:
-                M = np.linalg.inv(C)
-            except np.linalg.LinAlgError:
-                M = np.linalg.pinv(C)  # coincident samples with zero nugget
-            field, err = K.calc_field_krige_and_variance(M, V, cv - mu)
-            est = field + mu
-            kvar = np.maximum(sill - err, 0.0)
+            return C, None, None
+        return C, drift_basis_b(P, Pe), drift_basis_b(T, Te)
+
+    def nearest_center(key, P: np.ndarray) -> np.ndarray:
+        # the shared selector: rows of the max_cond points nearest the
+        # cell center.  A stable sort breaks distance ties by the
+        # canonical order, never by shuffle arrival.
+        if geo_grid is None:
+            center = (np.asarray(key, dtype=np.float64) + 0.5) * radius
+            d2 = np.sum((P - center) ** 2, axis=1)
+        elif len(key) > 1:
+            cl, lw = geo_grid
+            center = np.array([(key[0] + 0.5) * cl, (key[1] + 0.5) * lw - 180.0])
+            d2 = _pairwise_hav(P, center[None, :])[:, 0]
         else:
-            # ordinary/universal kriging: drift-extended (Lagrange) solve.
-            # Ordinary = constant drift {1}; universal adds monomials —
-            # the unbiasedness constraints F·w = f(target) per drift fn.
-            Fd = drift_basis_b(C_pts[None], C_ext[None] if ext_n else None)[0]
-            Ft = drift_basis_b(T[None], T_ext[None] if ext_n else None)[0]
-            nd = Fd.shape[0]
-            A = np.zeros((nc + nd, nc + nd))
-            A[:nc, :nc] = C
-            A[nc:, :nc] = Fd
-            A[:nc, nc:] = Fd.T
-            B = np.vstack([V, Ft])
-            # width-stable solve — NOT plain np.linalg.solve(A, B):
-            # LAPACK's multi-RHS getrs/trsm is nrhs-blocked, so the same
-            # target column solved inside groups of different WIDTH (a
-            # salted sub-group vs the plain group; fine vs super-grouped)
-            # drifts by ulps (captured-array repro: identical A and B_j,
-            # different W_j at nrhs 801 vs 107).  K.stable_solve pins the
-            # per-call width so each target's weights are a pure function
-            # of (A, its own column) — the salting/grouping
-            # bitwise-invariance pins rest on this.
-            try:
-                W = K.stable_solve(A, B)  # weights + lagrange multipliers
-            except np.linalg.LinAlgError:
-                # singular (e.g. universal with fewer neighbors than drift
-                # functions): pinv = the minimum-norm lstsq solution,
-                # applied through the width-stable matmul
-                W = K.stable_matmul(np.linalg.pinv(A), B)
-            # multiply+sum over axis 0, NOT W[:nc].T @ cv: the gemv kernel
-            # BLAS picks depends on nt, so the same target solved in a
-            # salted sub-group (different nt) drifted 1 ulp; the pairwise
-            # axis-0 reduction depends only on nc — identical for every
-            # group size (the salting bitwise-invariance pin)
-            est = (W[:nc] * cv[:, None]).sum(axis=0)
-            kvar = np.maximum(
-                sill
-                - np.einsum("ij,ij->j", W[:nc], V)
-                - np.einsum("ij,ij->j", W[nc:], Ft),
-                0.0,
-            )
-        return {
-            **base,
-            "krige_mean": est,
-            "krige_var": kvar,
-            "n_cond": np.full(len(T), nc, dtype=np.int64),
-        }
+            # lon blocking disabled: the cell is a full latitude band with
+            # no lon extent — rank by latitude distance only (a lon=0
+            # 'center' would bias the kept points toward the prime meridian)
+            d2 = np.abs(P[:, 0] - (key[0] + 0.5) * geo_grid[0])
+        return np.argsort(d2, kind="stable")[:max_cond]
 
-    def solve_cell_knn(key, tdat: dict, cdat: dict) -> dict:
-        if tdat["tid"].shape[0] == 0:
-            return _empty_out()
-        T = _stack(tdat, t_cols)
-        nt = len(T)
-        base = {"tid": tdat["tid"]}
-        for kk, tc in enumerate(t_cols):
-            base[tc] = T[:, kk]
-        T_ext = _stack(tdat, td_cols) if ext_n else None
-        est = np.full(nt, mu)
-        kvar = np.full(nt, sill)
-        ncond = np.zeros(nt, dtype=np.int64)
-        if cdat["cval"].shape[0] != 0:
-            C_pts = _stack(cdat, c_cols)
-            cv = cdat["cval"].astype(np.float64, copy=False)
-            C_ext = _stack(cdat, cd_cols) if ext_n else None
-            # canonical cond order (coords ascending, then value): stable
-            # argsort then breaks distance ties by coordinates, not by
-            # shuffle arrival; cval is the final key so two conditioning
-            # points at bitwise-identical coords but different values still
-            # sort deterministically (mirrored by the oracle's
-            # ORDER BY dist, px, py, pv)
-            order = np.lexsort(
-                (cv,) + tuple(C_pts[:, kk] for kk in range(d - 1, -1, -1))
-            )
-            C_pts, cv = C_pts[order], cv[order]
-            if ext_n:
-                C_ext = C_ext[order]
-            nc = len(C_pts)
-            # TARGET-CHUNKED: every O(nc)-wide buffer (distance block +
-            # its argsort) is capped at ~64 MB, so peak task memory stays
-            # ~250 MB however hot the cell (skewed geocoding packs 10^4+
-            # points into one cell — the unchunked form allocated nc×nt
-            # and nc×nc matrices).  No floor on the chunk: a hotter cell
-            # just loops more.  Covariances are evaluated on GATHERED
-            # (m, q) / (m, q, q) neighbor blocks only, never the full cell.
-            chunk = int(max(1, min(nt, (1 << 23) // max(nc, 1) + 1)))
-            for lo in range(0, nt, chunk):
-                Tc = T[lo : lo + chunk]
-                if geo_grid is not None:
-                    dxt = _pairwise_hav(C_pts, Tc)  # (nc, m_c) central angles
-                else:
-                    # per-axis accumulation (no (nc, m, d) intermediate);
-                    # left-to-right axis order — bitwise == the SQL
-                    # oracle's dx*dx + dy*dy
-                    dxt = np.zeros((nc, len(Tc)))
-                    for kk in range(d):
-                        dk = C_pts[:, kk : kk + 1] - Tc[None, :, kk]
-                        dxt += dk * dk
-                    np.sqrt(dxt, out=dxt)
-                valid = dxt <= radius
-                counts = np.minimum(valid.sum(axis=0), knn)
-                # mask invalid entries in place: gathered (valid) cov
-                # inputs are untouched, no second (nc, m) float buffer
-                np.putmask(dxt, ~valid, np.inf)
-                sel = np.argsort(dxt, axis=0, kind="stable")[:knn]
-                for q in np.unique(counts):
-                    if q == 0:
-                        continue
-                    S = np.nonzero(counts == q)[0]
-                    G = lo + S  # global target rows
-                    idx = sel[:q, S].T  # (m, q) neighbor indices per target
-                    P_b = C_pts[idx]  # (m, q, d)
-                    if geo_grid is not None:
-                        A2 = P_b.transpose(2, 0, 1)  # (2, m, q)
-                        cb_q = np.cos(np.radians(A2[0]))  # (m, q) per-point
-                        D_b = K.haversine_dist_coslat(
-                            A2[:, :, :, None],
-                            A2[:, :, None, :],
-                            cb_q[:, :, None],
-                            cb_q[:, None, :],
-                        )
-                    else:
-                        dd = P_b[:, :, None, :] - P_b[:, None, :, :]
-                        D_b = np.sqrt(np.sum(dd * dd, axis=3))
-                    C_b = mcov(D_b) + nugget * np.eye(q)
-                    V_b = mcov(dxt[idx, S[:, None]])  # (m, q)
-                    v_b = cv[idx]  # (m, q)
-                    if simple:
-                        try:
-                            W = np.linalg.solve(C_b, V_b[:, :, None])[:, :, 0]
-                        except np.linalg.LinAlgError:
-                            W = np.stack([_solve1(A, y) for A, y in zip(C_b, V_b)])
-                        est[G] = np.einsum("mq,mq->m", W, v_b - mu) + mu
-                        kvar[G] = np.maximum(
-                            sill - np.einsum("mq,mq->m", W, V_b), 0.0
-                        )
-                    else:
-                        E_b = C_ext[idx] if ext_n else None  # (m, q, ext_n)
-                        Fd_b = drift_basis_b(P_b, E_b)  # (m, nd, q)
-                        # (m, nd) as the transpose of a C-ordered (nd, m):
-                        # einsum's reduction order follows the memory layout,
-                        # so a C-ordered (m, nd) would shift ulps
-                        Ft_b = drift_basis_b(
-                            Tc[S][None],
-                            T_ext[lo : lo + chunk][S][None] if ext_n else None,
-                        )[0].T
-                        ndr = Fd_b.shape[1]
-                        m = len(S)
-                        A_b = np.zeros((m, q + ndr, q + ndr))
-                        A_b[:, :q, :q] = C_b
-                        A_b[:, q:, :q] = Fd_b
-                        A_b[:, :q, q:] = np.transpose(Fd_b, (0, 2, 1))
-                        B_b = np.concatenate([V_b, Ft_b], axis=1)[:, :, None]
-                        try:
-                            W = np.linalg.solve(A_b, B_b)[:, :, 0]
-                        except np.linalg.LinAlgError:
-                            # only singular items take lstsq (e.g. universal
-                            # with fewer neighbors than drift fns)
-                            W = np.stack(
-                                [_solve1(A, y[:, 0]) for A, y in zip(A_b, B_b)]
-                            )
-                        est[G] = np.einsum("mq,mq->m", W[:, :q], v_b)
-                        kvar[G] = np.maximum(
-                            sill
-                            - np.einsum("mq,mq->m", W[:, :q], V_b)
-                            - np.einsum("mn,mn->m", W[:, q:], Ft_b),
-                            0.0,
-                        )
-                    ncond[G] = q
-        return {**base, "krige_mean": est, "krige_var": kvar, "n_cond": ncond}
+    def knn_groups(P: np.ndarray, T: np.ndarray):
+        # the knn selector → (target rows, (m, q) neighbor rows, (m, q)
+        # distances) per neighborhood size q.  Each target keeps its knn
+        # nearest points within radius; the stable argsort breaks ties by
+        # the canonical order (mirrored by the oracle's ORDER BY dist, px,
+        # py, pv).  TARGET-CHUNKED: the (nc, chunk) distance block and its
+        # argsort are capped at ~64 MB, so peak task memory stays ~250 MB
+        # however hot the cell (skewed geocoding packs 10^4+ points into
+        # one cell).  No floor on the chunk: a hotter cell just loops more.
+        nc, nt = len(P), len(T)
+        chunk = int(max(1, min(nt, (1 << 23) // max(nc, 1) + 1)))
+        for lo in range(0, nt, chunk):
+            dxt = _pw(P, T[lo : lo + chunk])  # (nc, chunk)
+            valid = dxt <= radius
+            counts = np.minimum(valid.sum(axis=0), knn)
+            # mask in place: the gathered (valid) distances are untouched
+            np.putmask(dxt, ~valid, np.inf)
+            sel = np.argsort(dxt, axis=0, kind="stable")[:knn]
+            for q in np.unique(counts):
+                if q == 0:
+                    continue
+                S = np.nonzero(counts == q)[0]
+                idx = sel[:q, S].T
+                yield lo + S, idx, dxt[idx, S[:, None]]
 
-    base_fn = solve_cell_knn if knn is not None else solve_cell
+    def krige_cell(key, Y, X, est, kvar, ncond) -> None:
+        # one fine cell: targets Y = (coords, drift cols) and the cell
+        # ring's cond rows X = (coords, value, drift cols); fills the
+        # cell's slices of the group outputs, which hold the prior
+        # (mean, sill) for targets no cond point reaches.
+        # Canonical cond order — coords, then value, then the drift
+        # columns: within-group row order is shuffle-arrival order, so two
+        # plans computing the same cell (plain vs salted, fine vs grouped)
+        # deliver the same cond SET in different orders, and a permuted
+        # Gram matrix shifts the LU solve by ulps.  Sorting on every
+        # column makes the solve a pure function of the set (rows tying
+        # on coords and value but not on drift would otherwise permute
+        # the bordered Fd rows between plans).
+        X = X[np.lexsort(X.T[::-1])]
+        if knn is None and len(X) > max_cond:
+            X = X[nearest_center(key, X[:, :d])]
+        P, cv, Pe = X[:, :d], X[:, d], X[:, d + 1 :]
+        T, Te = Y[:, :d], Y[:, d:]
+        if knn is None:
+            C, Fd, Ft = assemble(P[None], Pe[None], T[None], Te[None])
+            V = mcov(_pw(P, T))[None]
+            e, k = K.krige_batch(C, V, cv[None], Fd, Ft, mu, sill, 512)
+            est[:], kvar[:], ncond[:] = e[0], k[0], len(X)
+            return
+        for G, idx, dist in knn_groups(P, T):
+            C, Fd, Ft = assemble(P[idx], Pe[idx], T[G][:, None], Te[G][:, None])
+            V = mcov(dist)[:, :, None]
+            e, k = K.krige_batch(C, V, cv[idx], Fd, Ft, mu, sill, 1)
+            est[G], kvar[G], ncond[G] = e[:, 0], k[:, 0], idx.shape[1]
 
     group_keys = jkeys  # fine cells (+ _salt): one cell per group
     if mult > 1:
@@ -777,55 +546,73 @@ def krige(
             skeys + (["_scf"] if flag_cols else []) + jkeys[d_block:]
         )
 
+    t_cols = [f"t{k}" for k in range(d)]
+    y_cols = [*t_cols, *td_cols]
+    x_cols = [*(f"c{k}" for k in range(d)), "cval", *cd_cols]
+    out_schema = (
+        "tid long, "
+        + ", ".join(f"{tc} double" for tc in t_cols)
+        + ", krige_mean double, krige_var double, n_cond long"
+    )
+
+    # Arrow-native cogroup plumbing: one Arrow→numpy conversion per GROUP
+    # and numpy slicing per fine cell (no per-cell pandas frames, no
+    # pd.concat — at ~0.5-1 ms/cell those were a measurable serial term).
+
+    def _tbl_cols(tbl, cols) -> dict:
+        out = {}
+        for cn in cols:
+            col = tbl.column(cn)
+            if hasattr(col, "combine_chunks"):  # ChunkedArray → Array
+                col = col.combine_chunks()
+            out[cn] = col.to_numpy(zero_copy_only=False)
+        return out
+
+    def _stack(dd: dict, cols) -> np.ndarray:
+        return np.stack([dd[cn].astype(np.float64, copy=False) for cn in cols], axis=1)
+
     def _cell_slices(dd: dict):
-        # stable lexsort by the fine keys: cells ascend by key, rows
-        # keep arrival order within a cell — exactly the iteration
-        # order pandas groupby(fine, sort=True) produced, so per-cell
-        # inputs (and the output row order) are bitwise unchanged
-        n = dd[fine[0]].shape[0]
+        # stable lexsort by the fine keys: cells ascend by key, rows keep
+        # arrival order within a cell → (order, cell bounds in it)
         order = np.lexsort(tuple(dd[f] for f in reversed(fine)))
-        change = np.zeros(max(n - 1, 0), dtype=bool)
+        edge = np.zeros(len(order) + 1, dtype=bool)
+        edge[[0, -1]] = True
         for f in fine:
             kf = dd[f][order]
-            change |= kf[1:] != kf[:-1]
-        starts = np.flatnonzero(np.concatenate(([True], change)))
-        ends = np.append(starts[1:], n)
-        return order, starts, ends
+            edge[1:-1] |= kf[1:] != kf[:-1]
+        return order, np.flatnonzero(edge)
 
     def solve_cells(key, t_tbl, c_tbl):
         # iterate the fine blocking cells inside ONE cogroup group (one
         # cell when mult == 1): identical (cell, targets, ring) triples
-        # reach base_fn under any grouping or salting, so the per-cell
-        # outputs are bitwise invariant.  All slicing is numpy (no
-        # per-cell pandas frames, no pd.concat).
-        if t_tbl.num_rows == 0:
-            return _out_table(_empty_out())
-        tdat = _tbl_cols(t_tbl, in_t_cols + fine)
-        t_ord, t_st, t_en = _cell_slices(tdat)
-        c_index: dict = {}
-        cdat = None
+        # reach krige_cell under any grouping or salting, so the per-cell
+        # outputs are bitwise invariant.  Cond rows are sliced lazily,
+        # only for cells that have targets.
+        import pyarrow as pa
+
+        tdat = _tbl_cols(t_tbl, ["tid", *y_cols, *fine])
+        t_ord, t_b = _cell_slices(tdat)
+        Y = _stack(tdat, y_cols)[t_ord]
+        n = len(Y)
+        est, kvar, ncond = np.full(n, mu), np.full(n, sill), np.zeros(n, np.int64)
+        c_rows: dict = {}
         if c_tbl.num_rows:
-            cdat = _tbl_cols(c_tbl, in_c_cols + fine)
-            c_ord, c_st, c_en = _cell_slices(cdat)
-            for i in range(len(c_st)):
-                r0 = c_ord[c_st[i]]
-                kk = tuple(int(cdat[f][r0]) for f in fine)
-                c_index[kk] = c_ord[c_st[i] : c_en[i]]
-        empty_c = {cn: np.empty(0, np.float64) for cn in in_c_cols}
-        outs = []
-        for i in range(len(t_st)):
-            rows = t_ord[t_st[i] : t_en[i]]
-            kk = tuple(int(tdat[f][rows[0]]) for f in fine)
-            tsub = {cn: tdat[cn][rows] for cn in in_t_cols}
-            crows = c_index.get(kk)
-            csub = (
-                empty_c
-                if crows is None
-                else {cn: cdat[cn][crows] for cn in in_c_cols}
-            )
-            outs.append(base_fn(kk, tsub, csub))
-        return _out_table(
-            {cn: np.concatenate([o[cn] for o in outs]) for cn in out_names}
+            cdat = _tbl_cols(c_tbl, [*x_cols, *fine])
+            X = _stack(cdat, x_cols)
+            c_ord, c_b = _cell_slices(cdat)
+            for lo, hi in zip(c_b[:-1], c_b[1:]):
+                r = c_ord[lo]
+                c_rows[tuple(int(cdat[f][r]) for f in fine)] = c_ord[lo:hi]
+        for lo, hi in zip(t_b[:-1], t_b[1:]):
+            kk = tuple(int(tdat[f][t_ord[lo]]) for f in fine)
+            rows = c_rows.get(kk)
+            if rows is not None:
+                s = slice(lo, hi)
+                krige_cell(kk, Y[s], X[rows], est[s], kvar[s], ncond[s])
+        cols = [tdat["tid"][t_ord].astype(np.int64), *Y[:, :d].T, est, kvar, ncond]
+        return pa.Table.from_arrays(
+            [pa.array(np.ascontiguousarray(a)) for a in cols],
+            names=["tid", *t_cols, "krige_mean", "krige_var", "n_cond"],
         )
 
     out = (

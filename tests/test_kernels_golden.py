@@ -229,8 +229,8 @@ def test_stable_matmul_width_and_position_independent():
         B = rng.normal(size=(n, 801))
         ref = K.stable_matmul(M, B)
         np.testing.assert_allclose(ref, M @ B, rtol=1e-12)
-        for _ in range(4):
-            idx = rng.permutation(801)[: rng.integers(3, 801)]
+        for width in (1, *rng.integers(1, 801, size=4)):
+            idx = rng.permutation(801)[:width]
             got = K.stable_matmul(M, B[:, idx])
             for k, j in enumerate(idx[:50]):
                 np.testing.assert_array_equal(got[:, k], ref[:, j])
@@ -248,8 +248,91 @@ def test_stable_solve_width_and_position_independent():
         B = rng.normal(size=(n, 801))
         ref = K.stable_solve(A, B)
         np.testing.assert_allclose(ref, np.linalg.solve(A, B), rtol=1e-9)
-        for _ in range(4):
-            idx = rng.permutation(801)[: rng.integers(3, 801)]
+        for width in (1, *rng.integers(1, 801, size=4)):
+            idx = rng.permutation(801)[:width]
             got = K.stable_solve(A, B[:, idx])
             for k, j in enumerate(idx[:50]):
                 np.testing.assert_array_equal(got[:, k], ref[:, j])
+
+
+def _krige_system(rng, n, t, nd, nugget=0.01):
+    """One neighborhood as krige_batch takes it (m = 1): Gaussian Gram of
+    n random points, covariances to t targets, values, and the first nd
+    of the drift functions (1, x, y) — nd = 0 is simple kriging."""
+    P, T = rng.uniform(0, 3, (n, 2)), rng.uniform(0, 3, (t, 2))
+
+    def cov(A, B):
+        return np.exp(-np.sum((A[:, None] - B[None]) ** 2, axis=2))
+
+    def basis(X):
+        return np.stack([np.ones(len(X)), *X.T][:nd])[None] if nd else None
+
+    C = (cov(P, P) + nugget * np.eye(n))[None]
+    return C, cov(P, T)[None], rng.normal(size=(1, n)), basis(P), basis(T)
+
+
+def _direct_krige(C, V, v, Fd, Ft, mean, sill, solve=np.linalg.solve):
+    # textbook reference for one neighborhood
+    n = C.shape[0]
+    if Fd is None:
+        W = solve(C, V)
+        return W.T @ (v - mean) + mean, np.maximum(sill - np.sum(W * V, 0), 0.0)
+    nd = Fd.shape[0]
+    A = np.zeros((n + nd, n + nd))
+    A[:n, :n], A[n:, :n], A[:n, n:] = C, Fd, Fd.T
+    W = solve(A, np.vstack([V, Ft]))
+    kvar = sill - np.sum(W[:n] * V, 0) - np.sum(W[n:] * Ft, 0)
+    return W[:n].T @ v, np.maximum(kvar, 0.0)
+
+
+@pytest.mark.parametrize("nd", [0, 1, 3])
+def test_krige_batch_width_and_position_independent(nd):
+    """A target's (est, kvar) depends only on its neighborhood and its own
+    column — not on how many targets share the call (a salt sub-group,
+    including a target ALONE in one, vs the whole cell) or where it sits.
+    Width 1 is the case a reduction over an (n, t) block gets wrong."""
+    rng = np.random.default_rng(31 + nd)
+    C, V, v, Fd, Ft = _krige_system(rng, 40, 300, nd)
+    est, kvar = K.krige_batch(C, V, v, Fd, Ft, 0.3, 1.01, 512)
+    drift = (Fd[0], Ft[0]) if nd else (None, None)
+    want = _direct_krige(C[0], V[0], v[0], *drift, 0.3, 1.01)
+    np.testing.assert_allclose(est[0], want[0], rtol=1e-9, atol=1e-12)
+    np.testing.assert_allclose(kvar[0], want[1], rtol=1e-9, atol=1e-12)
+    for width in (1, 1, 2, 2, 300):
+        idx = rng.permutation(300)[:width]
+        e, k = K.krige_batch(
+            C, V[:, :, idx], v, Fd, Ft[:, :, idx] if nd else None, 0.3, 1.01, 512
+        )
+        np.testing.assert_array_equal(e[0], est[0, idx])
+        np.testing.assert_array_equal(k[0], kvar[0, idx])
+
+
+@pytest.mark.parametrize("nd", [0, 1])
+def test_krige_batch_singular_item(nd):
+    """A batch of one-target systems (the knn path's shape) holding one
+    singular system: every other item gets the bits it gets solved alone,
+    and the singular one gets the minimum-norm least-squares solution."""
+    rng = np.random.default_rng(41 + nd)
+    items = [_krige_system(rng, 6, 1, nd) for _ in range(5)]
+    C, V, v, Fd, Ft = _krige_system(rng, 6, 1, nd, nugget=0.0)
+    C[0, 1, :] = C[0, 0, :]  # point 1 coincides with point 0, no nugget
+    C[0, :, 1] = C[0, :, 0]
+    V[0, 1], v[0, 1] = V[0, 0], v[0, 0]
+    if nd:
+        Fd[0, :, 1] = Fd[0, :, 0]
+    items[2] = (C, V, v, Fd, Ft)
+    batch = [np.concatenate(x) if x[0] is not None else None for x in zip(*items)]
+    est, kvar = K.krige_batch(*batch, 0.3, 1.01, 1)
+    for i, item in enumerate(items):
+        if i != 2:
+            e, k = K.krige_batch(*item, 0.3, 1.01, 1)
+            np.testing.assert_array_equal(est[i], e[0])
+            np.testing.assert_array_equal(kvar[i], k[0])
+
+    def lstsq(A, B):
+        return np.linalg.lstsq(A, B, rcond=None)[0]
+
+    drift = (Fd[0], Ft[0]) if nd else (None, None)
+    want = _direct_krige(C[0], V[0], v[0], *drift, 0.3, 1.01, lstsq)
+    np.testing.assert_allclose(est[2], want[0], rtol=1e-7, atol=1e-9)
+    np.testing.assert_allclose(kvar[2], want[1], rtol=1e-7, atol=1e-9)

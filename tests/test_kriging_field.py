@@ -258,6 +258,37 @@ def test_krige_knn_tie_break_and_exactness(spark):
     assert got[1]["krige_var"] < 1e-10
 
 
+def test_krige_ked_knn_arrival_order_invariant(spark):
+    """External-drift kriging on the knn path is a pure function of the
+    cond SET: two cond rows tying on (x, y, val) but differing in the
+    drift column sort by it, not by shuffle arrival.  Before the drift
+    columns joined the knn canonical order, knn=1 picked whichever tied
+    row arrived first (krige_mean 2.0 vs 0.269) and knn=2/3 permuted the
+    bordered system, shifting the variances by ulps."""
+    rows = [
+        (0, 0.5, 0.5, 0.0, 1.0),
+        (1, 0.5, 0.5, 2.0, 1.0),
+        (2, 0.9, 0.1, 1.0, 0.5),
+        (3, 0.2, 0.8, -1.0, 2.0),
+    ]
+    schema = "id long, x double, y double, elev double, val double"
+    targets = spark.createDataFrame(
+        [(10, 0.55, 0.45, 1.0), (11, 0.4, 0.6, -0.5)],
+        "id long, x double, y double, elev double",
+    )
+    model = GaussianModel(var=1.0, len_scale=1.0, nugget=0.05)
+    for knn in (1, 2, 3):
+        got = []
+        for order in (rows, rows[::-1]):
+            cond = spark.createDataFrame(order, schema).coalesce(1)
+            out = krige(
+                targets, cond, model, radius=2.0, method="ordinary",
+                drift_cols=("elev",), knn=knn, group_cells=1,
+            )
+            got.append(sorted(tuple(r) for r in out.collect()))
+        assert got[0] == got[1], knn
+
+
 def test_krige_empty_neighborhood_prior(spark):
     cond = _df(spark, [0], [100.0], [100.0], [5.0])
     targets = _df(spark, [0], [0.0], [0.0])
@@ -658,6 +689,7 @@ def test_krige_external_drift_reproduces_covariate(spark):
             ("hot_threshold", -1), ("group_cells", "Auto"),
             ("group_cells", 0), ("radius", 0.0), ("radius", float("nan")),
             ("radius", float("inf")), ("radius", -1.0),
+            ("drift_order", 3), ("drift_order", -1), ("drift_order", 1.5),
         ]:
             kw = {"radius": 4.0, name: bad}
             with pytest.raises(ValueError, match=name):

@@ -105,10 +105,12 @@ def test_krige_salting_bitwise_invariant(spark):
 
 
 def test_krige_salting_bitwise_invariant_simple_universal(spark):
-    """The invariance promise is method-agnostic: the simple path goes
-    through the pre-inverted-matrix kernel (stable_matmul products) and
-    universal through the drift-extended stable_solve — both must be
-    bit-identical under salting, like the ordinary pin above."""
+    """The invariance promise is method-agnostic: simple kriging solves
+    the plain Gram system and universal the drift-bordered one, both
+    through kernels.krige_batch — both must be bit-identical under
+    salting, like the ordinary pin above.  Including a target ALONE in its
+    salt sub-group: a per-target reduction over an (n, 1) block used to
+    switch summation order and give such a target different bits."""
     from gstools_core_spark.operators.kriging import GaussianModel, krige
 
     df, _, _ = _skewed_points(spark)
@@ -122,10 +124,24 @@ def test_krige_salting_bitwise_invariant_simple_universal(spark):
         )
         assert _collect_krige(plain) == _collect_krige(salted), method
 
+    # 30 targets of one hot cell hashed over 64 sub-keys: many singletons
+    df, _, _ = _skewed_points(spark, n_hot=60, n_rest=100)
+    targets = df.where(F.col("id") % 2 == 1)
+    cond = df.where(F.col("id") % 2 == 0)
+    for method in ("simple", "ordinary", "universal"):
+        plain = krige(
+            targets, cond, model, radius=1.0, method=method, group_cells=1
+        )
+        salted = krige(
+            targets, cond, model, radius=1.0, method=method, group_cells=1,
+            salt_hot=64, hot_threshold=10,
+        )
+        assert _collect_krige(plain) == _collect_krige(salted), method
+
 
 def test_krige_salting_geo_bitwise_invariant(spark):
     """Sphere path: the _salt key component must not be mistaken for the
-    lon cell index inside solve_cell's max_cond center ranking."""
+    lon cell index inside the max_cond center ranking."""
     from gstools_core_spark.operators.kriging import GaussianModel, krige
 
     rng = np.random.default_rng(23)
