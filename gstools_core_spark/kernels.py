@@ -392,8 +392,8 @@ def stable_matmul(M: np.ndarray, B: np.ndarray, block: int = 128) -> np.ndarray:
 
 
 def stable_solve(A: np.ndarray, B: np.ndarray, block: int = 512) -> np.ndarray:
-    """``np.linalg.solve(A, B)`` with every underlying LAPACK call at
-    EXACTLY ``block`` RHS columns (zero-padded): per-column results are
+    """``np.linalg.solve(A, B)`` with every underlying LAPACK call at one
+    FIXED RHS width (``block`` data columns, zero-padded): per-column results are
     then a pure function of ``(A, that column)`` — see stable_matmul for
     why plain multi-RHS getrs/trsm is width-dependent.  ``A`` is
     ``(..., n, n)`` and ``B`` ``(..., n, nt)``: leading dims are a batch of
@@ -403,13 +403,25 @@ def stable_solve(A: np.ndarray, B: np.ndarray, block: int = 512) -> np.ndarray:
     one fixed-width trsm — measured 1.09× plain solve at (1025, 500), vs
     1.6× for inv + stable_matmul (getri's extra n³ dominates at large n
     with narrow target batches).  Raises LinAlgError when any system is
-    singular, like np.linalg.solve."""
+    singular, like np.linalg.solve.
+
+    A multi-column call is padded to ``block + 8`` columns, data in the
+    first ``block``: OpenBLAS (0.3.23, AVX-512 kernels) gives the columns
+    of a call's LAST 8-column panel other bits than the rest for some n
+    (483-511, 513, 1025, … at width 512), so no data column may sit
+    there.  Width-1 calls (``block == 1``, the knn path) stay unpadded.
+
+    Precondition: ONE BLAS thread, as in every Python worker
+    (session.py).  With more threads OpenBLAS splits the right-hand side
+    columns across threads by the call's width, and column bits depend on
+    the split."""
     A = np.ascontiguousarray(A)
     nt = B.shape[-1]
     out = np.empty(B.shape)
+    width = block + 8 if block > 1 else block
     for s in range(0, nt, block):
         e = min(s + block, nt)
-        Bp = np.zeros(B.shape[:-1] + (block,))
+        Bp = np.zeros(B.shape[:-1] + (width,))
         Bp[..., : e - s] = B[..., s:e]
         out[..., s:e] = np.linalg.solve(A, Bp)[..., : e - s]
     return out

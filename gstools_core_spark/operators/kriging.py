@@ -5,16 +5,25 @@ and computes field = condᵀ·Mᵀ·V, error = v_jᵀ·Mᵀ·v_j; the assembly +
 happens upstream in GSTools (reference benches/gen_benchmark_inputs.py:35-59).
 Per the north star, this engine owns BOTH steps:
 
-* neighborhoods via the cell-ring blocking (conditioning points stamped onto
-  the 3×3 ring of each target cell at cell_size = radius);
-* one ``cogroup().applyInArrow`` UDF iterates the fine cells of each
-  cogroup group (one cell, or a super-cell of them); per cell, a selector
-  picks the neighborhoods (the cell's shared ring, or each target's knn),
-  the model's covariances fill their Gram matrices, and
-  ``kernels.krige_batch`` solves them — the reference's
+* neighborhoods via the cell-ring blocking (a target cell's ring = the
+  conditioning points of its 3^d neighbor cells at cell_size = radius);
+* per fine cell, a selector picks the neighborhoods (the cell's shared
+  ring, or each target's knn), the model's covariances fill their Gram
+  matrices, and ``kernels.krige_batch`` solves them — the reference's
   condᵀ·M·v / vᵀ·M·v products (krige.rs:24-118) taken through a
-  factorized solve instead of a pre-inverted M;
-* ``plan_cells`` makes every skew decision (grouping factor, keep-fine
+  factorized solve instead of a pre-inverted M.
+
+Two physical plans deliver the rings (chosen in ``krige``, same bits):
+
+* BROADCAST (``knn`` set, cond under Spark's broadcast bound): cond and
+  its cell keys are collected once and captured in the UDF closure; one
+  ``mapInArrow`` over the round-robin-spread targets looks each cell's
+  ring up in a per-task cell index.  No planner job, no exchange of cond
+  rows, no cogroup — a small build side is broadcast, not partitioned.
+* PARTITIONED (everything else): cond rows are stamped onto the ring of
+  their cell and one ``cogroup().applyInArrow`` UDF iterates the fine
+  cells of each group (one cell, or a super-cell of them);
+  ``plan_cells`` makes every skew decision (grouping factor, keep-fine
   cells, salted hot cells) from one per-cell count aggregate.
 
 Covariance models: any functions/models.CovModel (Gaussian, Exponential,
@@ -25,6 +34,7 @@ drift) kriging are provided; anisotropy via functions.models.isotropize.
 
 from __future__ import annotations
 
+import itertools
 import math
 import numbers
 from collections.abc import Sequence
@@ -59,8 +69,6 @@ def _ring_stamp(
     """Stamp each row onto the full 3^d ring of its blocking cell
     (``cell_exprs`` = one cell-index Column per axis); the LAST axis wraps
     mod ``wrap_n`` when given (longitude at the antimeridian)."""
-    import itertools
-
     d = len(cell_exprs)
     cells = [e.alias(f"_c{k}") for k, e in enumerate(cell_exprs)]
     offsets = F.array(
@@ -95,6 +103,54 @@ def _literal_cells(spark, rows: list, cols: Sequence[str]) -> DataFrame | None:
     return spark.range(1).select(F.inline(F.array(*structs)))
 
 
+def _tbl_cols(tbl, cols) -> dict:
+    """Arrow table / record batch columns → numpy arrays by name."""
+    out = {}
+    for cn in cols:
+        col = tbl.column(cn)
+        if hasattr(col, "combine_chunks"):  # ChunkedArray → Array
+            col = col.combine_chunks()
+        out[cn] = col.to_numpy(zero_copy_only=False)
+    return out
+
+
+def _stack(dd: dict, cols) -> np.ndarray:
+    return np.stack([dd[cn].astype(np.float64, copy=False) for cn in cols], axis=1)
+
+
+def _small_cond(
+    c_sel: DataFrame,
+    x_cols: Sequence[str],
+    cell_exprs: Sequence,
+    keys: Sequence[str],
+    wrap_n: int | None,
+) -> dict | None:
+    """The conditioning rows as numpy columns — ``x_cols`` plus their
+    blocking-cell ``keys`` (the last one taken mod ``wrap_n`` when given) —
+    when they fit under Spark's own broadcast bound,
+    ``spark.sql.autoBroadcastJoinThreshold`` at 8 bytes per value; else
+    None.  One bounded collect (``limit(bound + 1)``); a threshold ≤ 0
+    disables broadcasting and runs no job."""
+    spark = c_sel.sparkSession
+    # the typed accessor: the string form of the setting varies ("10MB",
+    # "10485760b", "-1")
+    thresh = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if thresh <= 0:
+        return None
+    cells = list(cell_exprs)
+    if wrap_n is not None:
+        cells[-1] = F.pmod(cells[-1], F.lit(wrap_n))
+    bound = thresh // (8 * (len(x_cols) + len(keys)))
+    tbl = (
+        c_sel.select(*x_cols, *[e.alias(k) for e, k in zip(cells, keys)])
+        .limit(bound + 1)
+        .toArrow()
+    )
+    if tbl.num_rows > bound:
+        return None
+    return _tbl_cols(tbl, [*x_cols, *keys])
+
+
 def plan_cells(
     t: DataFrame,
     keys: list[str],
@@ -110,7 +166,7 @@ def plan_cells(
     (None when empty), bounded at the top-``cap`` cells by target count
     (``top_hot_cells``'s tie-break; None = uncapped).  Every decision
     comes from ONE per-cell target count aggregate over ``t``; the jobs
-    below are the only ones krige runs at plan time.
+    below are the only ones the partitioned plan adds at plan time.
 
     ``group_cells='auto'`` — one summary job (cells, max, mean, total).
     The factor targets 2 cogroup groups per core,
@@ -264,10 +320,29 @@ def krige(
     distances use explicit mul/add/sqrt (not np.hypot) so rank order is
     bitwise-reproducible against the SQL oracle.
 
-    A singular neighborhood system (coincident samples with zero nugget;
-    universal kriging with fewer points than drift functions) takes the
-    minimum-norm least-squares solution, ``pinv(A)·b``, for that
-    neighborhood alone; every other neighborhood keeps its plain solve.
+    A neighborhood with fewer points than drift functions (universal or
+    KED; shared path: the capped cell neighborhood, knn path: each
+    neighborhood size) is underdetermined: its targets keep the prior
+    (mean, sill) with ``n_cond`` 0, like an empty ring.  Another singular
+    system (coincident samples with zero nugget) takes the minimum-norm
+    least-squares solution, ``pinv(A)·b``, for that neighborhood alone;
+    every other neighborhood keeps its plain solve.
+
+    Physical plan — chosen at build time from an observable input size,
+    with identical output bits either way (pytest-pinned):
+
+    * BROADCAST when ``knn`` is set and the cond rows fit under Spark's
+      ``spark.sql.autoBroadcastJoinThreshold`` at 8 bytes per value
+      (coords, value, drift columns and cell keys): one bounded collect
+      of cond, then a ``mapInArrow`` over the targets (one round-robin
+      exchange, no cogroup).  A knn target's solve shares nothing with
+      the other targets of its cell, so splitting a cell across tasks
+      costs no solve work.  A threshold ≤ 0 turns it off.
+    * PARTITIONED otherwise, and always for ``knn=None``: the shared path
+      factorizes one system per cell, which every task holding some of
+      the cell's targets would repeat.  ``salt_hot``, ``hot_threshold``
+      and ``group_cells`` (validated on every call) apply to this plan
+      only.
 
     ``haversine`` — kriging ON THE SPHERE: ``coords`` must be
     ("lat", "lon") in DEGREES and ``radius`` (and the model's len_scale)
@@ -279,7 +354,8 @@ def krige(
     intact; all neighborhood distances are great-circle central angles
     through the golden-pinned kernel.
 
-    ``salt_hot=S`` — EXPLICIT hot-cell salting for the cogroup (north rule):
+    ``salt_hot=S`` — EXPLICIT hot-cell salting for the cogroup (north rule;
+    partitioned plan only):
     a pandas cogroup runs one task per key and AQE cannot split it, so one
     dense cell serializes the stage at skewed scale.  Cells with more than
     ``hot_threshold`` TARGETS are split across S sub-keys (targets hashed,
@@ -301,7 +377,8 @@ def krige(
     share): splitting it halved the query (10.1 → 5.2 s) even paying the
     salting machinery.  Pass an int when table stats say otherwise.
 
-    ``group_cells`` — SUPER-CELL grouping factor: cogroup on cells of
+    ``group_cells`` — SUPER-CELL grouping factor (partitioned plan only):
+    cogroup on cells of
     ``group_cells × radius`` and iterate the fine cells inside the UDF
     (each group costs ~2-3 ms of fixed Arrow dispatch; 1,600 tiny groups
     WERE the sf0.1 headline krige).  'auto' (default) sizes it from the
@@ -310,17 +387,23 @@ def krige(
     are bitwise identical under any grouping (pinned).
 
     Plan-time Spark jobs — run while the DataFrame is built, nothing stays
-    cached; plan-only consumers should pass ints:
+    cached; plan-only consumers should pass ints (partitioned plan) or set
+    the broadcast threshold to -1:
 
-    * ``group_cells`` int, no ``salt_hot``: none.
-    * ``group_cells`` int + ``salt_hot``: the hot-set collect, plus a
-      map-only ``t.count()`` under ``hot_threshold='auto'``.  The targets
-      are then scanned twice (count + counts aggregate): cheap for
-      file-backed sources, but an expensive upstream plan is recomputed —
-      checkpoint it first.
-    * ``group_cells='auto'``: the summary collect, plus the hot-set collect
-      when the counts are skewed or ``salt_hot`` is set.
-    * ``haversine`` without ``max_abs_lat``: one max(|lat|) aggregate.
+    * broadcast plan: the one bounded cond collect.
+    * partitioned plan: with ``knn`` set, that collect too (it found cond
+      over the bound) unless the threshold is ≤ 0; then, per skew config:
+
+      - ``group_cells`` int, no ``salt_hot``: none.
+      - ``group_cells`` int + ``salt_hot``: the hot-set collect, plus a
+        map-only ``t.count()`` under ``hot_threshold='auto'``.  The
+        targets are then scanned twice (count + counts aggregate): cheap
+        for file-backed sources, but an expensive upstream plan is
+        recomputed — checkpoint it first.
+      - ``group_cells='auto'``: the summary collect, plus the hot-set
+        collect when the counts are skewed or ``salt_hot`` is set.
+    * ``haversine`` without ``max_abs_lat``: one max(|lat|) aggregate
+      (either plan).
     """
     if method not in ("simple", "ordinary", "universal"):
         raise ValueError(
@@ -373,6 +456,7 @@ def krige(
     cd_cols = [f"cd{j}" for j in range(ext_n)]
 
     jkeys = [f"jc{k}" for k in range(d_block)]
+    fine = list(jkeys)
     t = targets.select(
         F.col(target_id).alias("tid"),
         *[F.col(c).alias(f"t{k}") for k, c in enumerate(coords)],
@@ -388,21 +472,6 @@ def krige(
         c_cells = geo_cell_exprs("c0", "c1", cell_lat, n_lon, lon_w)
     else:
         c_cells = _grid_cells(tuple(f"c{k}" for k in range(d)), radius)
-    c = _ring_stamp(c_sel, c_cells, wrap_n=wrap_n)
-
-    fine = list(jkeys)
-    spark = targets.sparkSession
-    mult, keep_fine, hot = plan_cells(
-        t,
-        jkeys,
-        spark.sparkContext.defaultParallelism,
-        hot_cap(spark),
-        group_cells,
-        salt_hot,
-        hot_threshold,
-    )
-    if hot is not None:
-        t, c, jkeys = salt_hot_cells(t, c, hot, jkeys, "tid", salt_hot)
 
     nugget = model.nugget
     sill = model.sill
@@ -413,6 +482,14 @@ def krige(
     geo_grid = (cell_lat, lon_w) if haversine else None
     # monomial drift basis: ordinary kriging = constant drift only
     n_drift_order = 0 if method == "ordinary" else drift_order
+    # drift functions bordering the system; a neighborhood with fewer
+    # points is underdetermined and keeps the prior
+    n_basis = 0 if simple else (
+        1
+        + (d if n_drift_order >= 1 else 0)
+        + (d * (d + 1) // 2 if n_drift_order >= 2 else 0)
+        + ext_n
+    )
 
     def drift_basis_b(P: np.ndarray, D: np.ndarray) -> np.ndarray:
         # (m, n, d) points + (m, n, ext_n) drift columns → (m, nd, n)
@@ -471,8 +548,8 @@ def krige(
             np.putmask(dxt, ~valid, np.inf)
             sel = np.argsort(dxt, axis=0, kind="stable")[:knn]
             for q in np.unique(counts):
-                if q == 0:
-                    continue
+                if q < max(n_basis, 1):
+                    continue  # no point in reach, or underdetermined
                 S = np.nonzero(counts == q)[0]
                 idx = sel[:q, S].T
                 yield lo + S, idx, dxt[idx, S[:, None]]
@@ -480,22 +557,23 @@ def krige(
     def krige_cell(key, Y, X, est, kvar, ncond) -> None:
         # one fine cell: targets Y = (coords, drift cols) and the cell
         # ring's cond rows X = (coords, value, drift cols); fills the
-        # cell's slices of the group outputs, which hold the prior
-        # (mean, sill) for targets no cond point reaches.
+        # cell's slices of the outputs, which hold the prior (mean, sill)
+        # for targets no cond point reaches.
         # Canonical cond order — coords, then value, then the drift
-        # columns: within-group row order is shuffle-arrival order, so two
-        # plans computing the same cell (plain vs salted, fine vs grouped)
-        # deliver the same cond SET in different orders, and a permuted
-        # Gram matrix shifts the LU solve by ulps.  Sorting on every
-        # column makes the solve a pure function of the set (rows tying
-        # on coords and value but not on drift would otherwise permute
-        # the bordered Fd rows between plans).
+        # columns: the rows of a ring arrive in an order that depends on
+        # the plan (shuffle arrival, salting, grouping, broadcast index),
+        # and a permuted Gram matrix shifts the LU solve by ulps.  Sorting
+        # on every column makes the solve a pure function of the set
+        # (rows tying on coords and value but not on drift would
+        # otherwise permute the bordered Fd rows between plans).
         X = X[np.lexsort(X.T[::-1])]
         if knn is None and len(X) > max_cond:
             X = X[nearest_center(key, X[:, :d])]
         P, cv, Pe = X[:, :d], X[:, d], X[:, d + 1 :]
         T, Te = Y[:, :d], Y[:, d:]
         if knn is None:
+            if len(X) < n_basis:
+                return  # underdetermined drift: keep the prior
             C, Fd, Ft = assemble(P[None], Pe[None], T[None], Te[None])
             V = mcov(_pw(P, T))[None]
             e, k = K.krige_batch(C, V, cv[None], Fd, Ft, mu, sill, 512)
@@ -506,6 +584,118 @@ def krige(
             V = mcov(dist)[:, :, None]
             e, k = K.krige_batch(C, V, cv[idx], Fd, Ft, mu, sill, 1)
             est[G], kvar[G], ncond[G] = e[:, 0], k[:, 0], idx.shape[1]
+
+    t_cols = [f"t{k}" for k in range(d)]
+    y_cols = [*t_cols, *td_cols]
+    x_cols = [*(f"c{k}" for k in range(d)), "cval", *cd_cols]
+    t_names = ["tid", *y_cols, *fine]
+    out_schema = (
+        "tid long, "
+        + ", ".join(f"{tc} double" for tc in t_cols)
+        + ", krige_mean double, krige_var double, n_cond long"
+    )
+
+    # Arrow-native plumbing: one Arrow→numpy conversion per Arrow frame
+    # and numpy slicing per fine cell (no per-cell pandas frames, no
+    # pd.concat — at ~0.5-1 ms/cell those were a measurable serial term).
+
+    def _cell_slices(dd: dict):
+        # stable lexsort by the fine keys: cells ascend by key, rows keep
+        # arrival order within a cell → (order, cell bounds in it)
+        order = np.lexsort(tuple(dd[f] for f in reversed(fine)))
+        edge = np.zeros(len(order) + 1, dtype=bool)
+        edge[[0, -1]] = True
+        for f in fine:
+            kf = dd[f][order]
+            edge[1:-1] |= kf[1:] != kf[:-1]
+        return order, np.flatnonzero(edge)
+
+    def _cell_index(dd: dict) -> dict:
+        # fine cell key → the rows of ``dd`` in that cell
+        order, b = _cell_slices(dd)
+        return {
+            tuple(int(dd[f][order[lo]]) for f in fine): order[lo:hi]
+            for lo, hi in zip(b[:-1], b[1:])
+        }
+
+    def solve_targets(tdat: dict, ring):
+        # krige one Arrow frame of targets cell by cell; ``ring(key)`` →
+        # the cond rows of fine cell ``key``'s 3^d ring (None when empty).
+        # Identical (cell, targets, ring set) triples reach krige_cell in
+        # every plan, and a knn target's solve does not depend on the
+        # other targets beside it, so per-target outputs are bitwise
+        # invariant under grouping, salting and the choice of plan.
+        import pyarrow as pa
+
+        t_ord, t_b = _cell_slices(tdat)
+        Y = _stack(tdat, y_cols)[t_ord]
+        n = len(Y)
+        est, kvar, ncond = np.full(n, mu), np.full(n, sill), np.zeros(n, np.int64)
+        for lo, hi in zip(t_b[:-1], t_b[1:]):
+            kk = tuple(int(tdat[f][t_ord[lo]]) for f in fine)
+            X = ring(kk)
+            if X is not None:
+                s = slice(lo, hi)
+                krige_cell(kk, Y[s], X, est[s], kvar[s], ncond[s])
+        cols = [tdat["tid"][t_ord].astype(np.int64), *Y[:, :d].T, est, kvar, ncond]
+        return pa.Table.from_arrays(
+            [pa.array(np.ascontiguousarray(a)) for a in cols],
+            names=["tid", *t_cols, "krige_mean", "krige_var", "n_cond"],
+        )
+
+    out_cols = [
+        F.col("tid").alias(target_id),
+        *[F.col(f"t{k}").alias(c) for k, c in enumerate(coords)],
+        "krige_mean",
+        "krige_var",
+        "n_cond",
+    ]
+    spark = targets.sparkSession
+    par = spark.sparkContext.defaultParallelism
+    cdat = _small_cond(c_sel, x_cols, c_cells, fine, wrap_n) if knn is not None else None
+    if cdat is not None:
+        # BROADCAST plan: the cond columns ride in the UDF closure and
+        # every target is solved where it sits — no planner jobs, no ring
+        # stamp, no cond exchange, no cogroup.  A cell's ring is the union
+        # of its 3^d neighbor cells in the index: exactly the rows
+        # _ring_stamp delivers to it (cond keys on the wrapped lon axis
+        # are already taken mod wrap_n; a target key outside [0, wrap_n)
+        # matches no stamped key).
+        offsets = list(itertools.product((-1, 0, 1), repeat=d_block))
+
+        def solve_batches(batches):
+            X = _stack(cdat, x_cols)
+            index = _cell_index(cdat)
+
+            def ring(kk):
+                if wrap_n is not None and not 0 <= kk[-1] < wrap_n:
+                    return None
+                rows = []
+                for o in offsets:
+                    nb = [k - ok for k, ok in zip(kk, o)]
+                    if wrap_n is not None:
+                        nb[-1] %= wrap_n
+                    r = index.get(tuple(nb))
+                    if r is not None:
+                        rows.append(r)
+                return X[np.concatenate(rows)] if rows else None
+
+            for rb in batches:
+                yield from solve_targets(_tbl_cols(rb, t_names), ring).to_batches()
+
+        # one round-robin exchange: an under-partitioned target frame (one
+        # small file) would otherwise krige in a single task
+        out = t.repartition(par).mapInArrow(solve_batches, out_schema)
+        return out.select(*out_cols)
+
+    # PARTITIONED plan: cond rows ring-stamped and cogrouped with the
+    # targets by blocking cell, skew-planned by plan_cells
+    c = _ring_stamp(c_sel, c_cells, wrap_n=wrap_n)
+    mult, keep_fine, hot = plan_cells(
+        t, jkeys, par, hot_cap(spark), group_cells, salt_hot, hot_threshold
+    )
+    if hot is not None:
+        t, c, jkeys = salt_hot_cells(t, c, hot, jkeys, "tid", salt_hot)
 
     group_keys = jkeys  # fine cells (+ _salt): one cell per group
     if mult > 1:
@@ -546,84 +736,23 @@ def krige(
             skeys + (["_scf"] if flag_cols else []) + jkeys[d_block:]
         )
 
-    t_cols = [f"t{k}" for k in range(d)]
-    y_cols = [*t_cols, *td_cols]
-    x_cols = [*(f"c{k}" for k in range(d)), "cval", *cd_cols]
-    out_schema = (
-        "tid long, "
-        + ", ".join(f"{tc} double" for tc in t_cols)
-        + ", krige_mean double, krige_var double, n_cond long"
-    )
-
-    # Arrow-native cogroup plumbing: one Arrow→numpy conversion per GROUP
-    # and numpy slicing per fine cell (no per-cell pandas frames, no
-    # pd.concat — at ~0.5-1 ms/cell those were a measurable serial term).
-
-    def _tbl_cols(tbl, cols) -> dict:
-        out = {}
-        for cn in cols:
-            col = tbl.column(cn)
-            if hasattr(col, "combine_chunks"):  # ChunkedArray → Array
-                col = col.combine_chunks()
-            out[cn] = col.to_numpy(zero_copy_only=False)
-        return out
-
-    def _stack(dd: dict, cols) -> np.ndarray:
-        return np.stack([dd[cn].astype(np.float64, copy=False) for cn in cols], axis=1)
-
-    def _cell_slices(dd: dict):
-        # stable lexsort by the fine keys: cells ascend by key, rows keep
-        # arrival order within a cell → (order, cell bounds in it)
-        order = np.lexsort(tuple(dd[f] for f in reversed(fine)))
-        edge = np.zeros(len(order) + 1, dtype=bool)
-        edge[[0, -1]] = True
-        for f in fine:
-            kf = dd[f][order]
-            edge[1:-1] |= kf[1:] != kf[:-1]
-        return order, np.flatnonzero(edge)
-
     def solve_cells(key, t_tbl, c_tbl):
         # iterate the fine blocking cells inside ONE cogroup group (one
-        # cell when mult == 1): identical (cell, targets, ring) triples
-        # reach krige_cell under any grouping or salting, so the per-cell
-        # outputs are bitwise invariant.  Cond rows are sliced lazily,
-        # only for cells that have targets.
-        import pyarrow as pa
+        # cell when mult == 1); the group's cond rows are already the
+        # rings of its cells
+        cdat = _tbl_cols(c_tbl, [*x_cols, *fine])
+        X = _stack(cdat, x_cols)
+        index = _cell_index(cdat)
 
-        tdat = _tbl_cols(t_tbl, ["tid", *y_cols, *fine])
-        t_ord, t_b = _cell_slices(tdat)
-        Y = _stack(tdat, y_cols)[t_ord]
-        n = len(Y)
-        est, kvar, ncond = np.full(n, mu), np.full(n, sill), np.zeros(n, np.int64)
-        c_rows: dict = {}
-        if c_tbl.num_rows:
-            cdat = _tbl_cols(c_tbl, [*x_cols, *fine])
-            X = _stack(cdat, x_cols)
-            c_ord, c_b = _cell_slices(cdat)
-            for lo, hi in zip(c_b[:-1], c_b[1:]):
-                r = c_ord[lo]
-                c_rows[tuple(int(cdat[f][r]) for f in fine)] = c_ord[lo:hi]
-        for lo, hi in zip(t_b[:-1], t_b[1:]):
-            kk = tuple(int(tdat[f][t_ord[lo]]) for f in fine)
-            rows = c_rows.get(kk)
-            if rows is not None:
-                s = slice(lo, hi)
-                krige_cell(kk, Y[s], X[rows], est[s], kvar[s], ncond[s])
-        cols = [tdat["tid"][t_ord].astype(np.int64), *Y[:, :d].T, est, kvar, ncond]
-        return pa.Table.from_arrays(
-            [pa.array(np.ascontiguousarray(a)) for a in cols],
-            names=["tid", *t_cols, "krige_mean", "krige_var", "n_cond"],
-        )
+        def ring(kk):
+            rows = index.get(kk)
+            return None if rows is None else X[rows]
+
+        return solve_targets(_tbl_cols(t_tbl, t_names), ring)
 
     out = (
         t.groupBy(*group_keys)
         .cogroup(c.groupBy(*group_keys))
         .applyInArrow(solve_cells, out_schema)
     )
-    return out.select(
-        F.col("tid").alias(target_id),
-        *[F.col(f"t{k}").alias(c) for k, c in enumerate(coords)],
-        "krige_mean",
-        "krige_var",
-        "n_cond",
-    )
+    return out.select(*out_cols)

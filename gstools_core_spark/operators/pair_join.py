@@ -34,6 +34,19 @@ Haversine blocking (lat/lon degrees, max_dist a central angle in radians):
   bound degenerates (near-polar data or huge θ → n_lon < 3, where modular
   adjacency would double-generate pairs) longitude blocking is disabled
   entirely — a single planet-wide lon cell, still exact, just unpruned.
+* a CHORD pre-filter runs ahead of the exact ``dist < max_dist``: each
+  point carries its unit vector u = (cos φ cos λ, cos φ sin λ, sin φ),
+  computed once per point, and a candidate must pass
+  |u_a − u_b|² < (2 sin(θ/2)·(1 + 1e-9) + 1e-12)² (θ = max_dist < π)
+  before the haversine tree is evaluated on it.  It cannot drop a kept
+  pair: |u_a − u_b| = 2 sin(θ_ab/2) exactly (1 − u_a·u_b is twice the
+  haversine argument, for any φ and λ), and for lat/lon in the grid's
+  domain the computed chord and the computed haversine are each within
+  ~1e-15 of their exact values while 2 sin(θ/2) moves by at most |dθ|, so
+  a pair whose computed dist is below max_dist has a computed chord far
+  inside the 1e-9 relative / 1e-12 absolute margin.  Kept pairs and their
+  ``dist`` bits are therefore unchanged; only the haversine evaluations
+  on far candidates are saved.
 
 Skew: hot cells (the north rule's dense pages) are handled by (a) AQE skew
 join splitting — the join is a plain shuffle equi-join, so AQE can split
@@ -106,6 +119,12 @@ def geo_cell_exprs(
         # lon == 180.0 exactly lands in cell n_lon → clamp to the seam cell
         cells.append(F.least(cy, F.lit(n_lon - 1)))
     return cells
+
+
+def _unit_vector(lat_col: str, lon_col: str) -> list[Column]:
+    """(cos φ cos λ, cos φ sin λ, sin φ) of (lat, lon) degree columns."""
+    lat, lon = F.radians(F.col(lat_col)), F.radians(F.col(lon_col))
+    return [F.cos(lat) * F.cos(lon), F.cos(lat) * F.sin(lon), F.sin(lat)]
 
 
 def hot_cap(spark) -> int:
@@ -252,8 +271,13 @@ def pair_join(
     jkeys = [f"jc{k}" for k in range(d)]
 
     base_cols = [F.col(id_col), *[F.col(c) for c in coords], *[F.col(c) for c in payload_cols]]
+    # haversine: per-point unit vectors on the sphere, for the chord
+    # pre-filter in front of the exact distance test
+    unit = _unit_vector(coords[0], coords[1]) if haversine else []
     pts = points.select(
-        *base_cols, *[e.alias(n) for e, n in zip(cell_exprs, cell_names)]
+        *base_cols,
+        *[e.alias(n) for e, n in zip(cell_exprs, cell_names)],
+        *[u.alias(f"_u{k}") for k, u in enumerate(unit)],
     )
 
     offsets = F.array(
@@ -280,11 +304,13 @@ def pair_join(
             *[F.col(c).alias(f"a_{c}") for c in [id_col, *coords, *payload_cols]],
             *[stamped(k).alias(jkeys[k]) for k in range(d)],
             same_cell.alias("_same_cell"),
+            *[F.col(f"_u{k}").alias(f"_au{k}") for k in range(len(unit))],
         )
     )
     right = pts.select(
         *[F.col(c).alias(f"b_{c}") for c in [id_col, *coords, *payload_cols]],
         *[F.col(cell_names[k]).alias(jkeys[k]) for k in range(d)],
+        *[F.col(f"_u{k}").alias(f"_bu{k}") for k in range(len(unit))],
     )
 
     join_keys = list(jkeys)
@@ -311,6 +337,15 @@ def pair_join(
     )
 
     if haversine:
+        if max_dist < math.pi:  # beyond π every pair qualifies
+            # chord pre-filter (module docstring): Catalyst evaluates it
+            # ahead of the haversine tree, conjunct order is kept
+            chord2 = None
+            for k in range(3):
+                dk = F.col(f"_au{k}") - F.col(f"_bu{k}")
+                chord2 = dk * dk if chord2 is None else chord2 + dk * dk
+            bound = 2.0 * math.sin(max_dist / 2.0) * (1.0 + 1e-9) + 1e-12
+            joined = joined.where(chord2 < F.lit(bound * bound))
         dist = D.haversine(
             F.col(f"a_{coords[0]}"), F.col(f"a_{coords[1]}"),
             F.col(f"b_{coords[0]}"), F.col(f"b_{coords[1]}"),

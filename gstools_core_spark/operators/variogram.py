@@ -53,6 +53,15 @@ def bin_id_col(dist, bin_edges: Sequence[float]):
     return expr
 
 
+def _from_first_edge(pairs: DataFrame, bin_edges: Sequence[float]) -> DataFrame:
+    """Drop pairs closer than the first bin edge.  No filter at all when
+    that edge is ≤ 0: ``dist`` is never negative, and a NaN distance has
+    already failed pair_join's ``dist < max_dist``."""
+    if bin_edges[0] <= 0:
+        return pairs
+    return pairs.where(F.col("dist") >= F.lit(float(bin_edges[0])))
+
+
 def _diffs_exploded(
     pairs: DataFrame, val_cols: Sequence[str], vals_array: bool = False
 ) -> DataFrame:
@@ -112,7 +121,8 @@ def variogram_unstructured(
         haversine=haversine,
         max_abs_lat=max_abs_lat,
         salt_partitions=salt_partitions,
-    ).where(F.col("dist") >= F.lit(float(bin_edges[0])))
+    )
+    pairs = _from_first_edge(pairs, bin_edges)
 
     binned = pairs.withColumn("bin_id", bin_id_col(F.col("dist"), bin_edges))
     per_field = _diffs_exploded(binned, val_cols, vals_array)
@@ -216,7 +226,8 @@ def variogram_directional(
         id_col=id_col,
         coords=coords,
         payload_cols=val_cols,
-    ).where(F.col("dist") >= F.lit(float(bin_edges[0])))
+    )
+    pairs = _from_first_edge(pairs, bin_edges)
 
     passing = F.array(
         *[

@@ -240,19 +240,28 @@ def test_stable_solve_width_and_position_independent():
     """Same property as stable_matmul, for the bordered kriging solve:
     plain np.linalg.solve(A, B) drifts by ulps for the same column at
     different RHS widths (LAPACK getrs/trsm blocking); stable_solve's
-    fixed-width padded calls do not."""
+    fixed-width padded calls do not — at every column position of a call,
+    including the last 8-column panel of a 512-wide call, whose bits
+    differ for some n (483-511, 513, 1025, …) unless padded away.  Swept
+    over n in [1, 1100]: densely around the panel window, strided beyond.
+    Runs under one BLAS thread, as the workers do (tests/conftest.py)."""
     rng = np.random.default_rng(7)
-    for n in (65, 268, 513):
+    sizes = sorted({*range(1, 1101, 37), *range(480, 516), 1025, 1100})
+    for n in sizes:
         A = rng.normal(size=(n, n))
         A = A @ A.T + n * np.eye(n)
-        B = rng.normal(size=(n, 801))
+        B = rng.normal(size=(n, 540))
         ref = K.stable_solve(A, B)
-        np.testing.assert_allclose(ref, np.linalg.solve(A, B), rtol=1e-9)
-        for width in (1, *rng.integers(1, 801, size=4)):
-            idx = rng.permutation(801)[:width]
-            got = K.stable_solve(A, B[:, idx])
-            for k, j in enumerate(idx[:50]):
-                np.testing.assert_array_equal(got[:, k], ref[:, j])
+        if n % 37 == 1:
+            np.testing.assert_allclose(ref, np.linalg.solve(A, B), rtol=1e-9)
+        # every column at another position of its call (a full 512-wide
+        # call and a 28-wide tail), and one column alone
+        perm = np.concatenate([rng.permutation(512), 512 + rng.permutation(28)])
+        np.testing.assert_array_equal(
+            K.stable_solve(A, B[:, perm]), ref[:, perm], err_msg=f"n={n}"
+        )
+        j = int(rng.integers(540))
+        np.testing.assert_array_equal(K.stable_solve(A, B[:, j : j + 1])[:, 0], ref[:, j])
 
 
 def _krige_system(rng, n, t, nd, nugget=0.01):

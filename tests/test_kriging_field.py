@@ -84,7 +84,8 @@ def test_krige_simple_and_ordinary(spark):
 
 def _local_krige_knn(model, method, mean, tx, ty, cx, cy, cv, radius, k):
     """Brute-force moving-window reference: per target, the k nearest
-    in-radius cond points (ties by (x, y) ascending), one bordered solve."""
+    in-radius cond points (ties by (x, y) ascending), one bordered solve;
+    the prior when no point is in reach or fewer than the drift functions."""
     out_mean = np.empty(len(tx))
     out_var = np.empty(len(tx))
     for t in range(len(tx)):
@@ -114,6 +115,9 @@ def _local_krige_knn(model, method, mean, tx, ty, cx, cy, cv, radius, k):
             Fd = np.stack(drift)
             Ft = np.stack(driftT)[:, 0]
             nd = Fd.shape[0]
+            if nc < nd:  # underdetermined drift: the prior
+                out_mean[t], out_var[t] = mean, model.sill
+                continue
             A = np.zeros((nc + nd, nc + nd))
             A[:nc, :nc] = C
             A[nc:, :nc] = Fd

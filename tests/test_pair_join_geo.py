@@ -239,3 +239,52 @@ if _HAS_HYPOTHESIS:
         }
         want = _brute_pairs_hav(lat, lon, max_dist)
         assert got == want
+
+
+def test_chord_prefilter_keeps_every_pair_and_dist_bit(spark):
+    """The haversine pair join's chord pre-filter is conservative: against
+    an UNFILTERED brute-force cross join through the same D.haversine
+    expression, the pair set and every ``dist`` bit agree — over random
+    radii and latitude bounds, antimeridian and near-polar clusters, and
+    partners placed within 1e-12 rad of max_dist on either side."""
+    from gstools_core_spark.functions import distance as D
+
+    rng = np.random.default_rng(2024)
+    for max_lat, theta in ((30.0, 0.3), (61.0, 0.05), (89.5, 0.01), (75.0, 1e-4)):
+        theta = float(theta * rng.uniform(0.8, 1.2))
+        n = 120
+        lat = rng.uniform(-max_lat, max_lat, n)
+        lon = rng.uniform(-180.0, 180.0, n)
+        lon[:30] = ((rng.uniform(-2.0, 2.0, 30) + 180.0) % 360.0) - 180.0  # seam
+        lat[30:45] = np.sign(lat[30:45]) * rng.uniform(max_lat - 0.5, max_lat, 15)
+        # partners at theta ± k·1e-13 rad, along a meridian and a parallel
+        # at the equator (both arcs are exactly the degree offset)
+        edge_lat, edge_lon = [], []
+        for k in (-10, -3, -1, 0, 1, 3, 10):
+            deg = math.degrees(theta + k * 1e-13)
+            a_lat = float(rng.uniform(-max_lat / 2, max_lat / 2))
+            a_lon = float(rng.uniform(-170.0, 170.0))
+            edge_lat += [a_lat, a_lat + deg, 0.0, 0.0]
+            edge_lon += [a_lon, a_lon, a_lon, a_lon + deg]
+        lat = np.concatenate([lat, edge_lat])
+        lon = np.concatenate([lon, edge_lon])
+        rows = [(i, float(lat[i]), float(lon[i])) for i in range(len(lat))]
+        df = spark.createDataFrame(rows, "id long, lat double, lon double")
+        got = {
+            (r["a_id"], r["b_id"], r["dist"])
+            for r in pair_join(
+                df, theta, coords=("lat", "lon"), payload_cols=(), haversine=True
+            ).collect()
+        }
+        a, b = df.alias("a"), df.alias("b")
+        dist = D.haversine(F.col("a.lat"), F.col("a.lon"), F.col("b.lat"), F.col("b.lon"))
+        brute = (
+            a.crossJoin(b)
+            .where(F.col("a.id") < F.col("b.id"))
+            .select(F.col("a.id"), F.col("b.id"), dist.alias("dist"))
+            .where(F.col("dist") < F.lit(theta))
+        )
+        want = {tuple(r) for r in brute.collect()}
+        near = [d for _, _, d in want if abs(d - theta) < 1e-11]
+        assert near, "no pair within 1e-11 rad of max_dist"
+        assert got == want, (max_lat, theta)

@@ -171,3 +171,25 @@ def test_small_literal_tables_are_jvm_side(spark, sf_dir):
     assert "_salt" in plan  # the hot set is non-empty: salting engaged
     served = _python_served_scans(salted)
     assert served and all("FlatMapCoGroupsInArrow" in ln for ln in served), served
+
+
+def test_krige_knn_small_cond_is_broadcast_plan(spark, sf_dir, partitioned_plan):
+    """knn kriging with a cond set under the broadcast bound solves the
+    targets where they sit: one mapInArrow behind a round-robin exchange —
+    no cogroup, no hash exchange, no ring-stamp explode.  Forcing the
+    partitioned plan brings the cogroup back."""
+    from gstools_core_spark.operators.kriging import GaussianModel, krige
+
+    pts = _pts(spark, sf_dir)
+    model = GaussianModel(var=1.0, len_scale=1.0)
+
+    def build():
+        return krige(pts, pts.where(F.col("id") % 3 == 0), model, radius=2.0, knn=8)
+
+    plan = build()._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "FlatMapCoGroupsInArrow" not in plan
+    assert "hashpartitioning" not in plan and "Generate" not in plan
+    assert "RoundRobinPartitioning" in plan
+    with partitioned_plan():
+        plan = build()._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInArrow" in plan and "hashpartitioning" in plan

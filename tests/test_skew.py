@@ -86,22 +86,24 @@ def _collect_krige(out):
     ]
 
 
-def test_krige_salting_bitwise_invariant(spark):
+def test_krige_salting_bitwise_invariant(spark, partitioned_plan):
     """salt_hot splits the hot cell's cogroup key without changing a bit of
     the kriged output (every target still sees its cell's full cond ring;
-    per-group orders are canonicalized)."""
+    per-group orders are canonicalized).  Salting is a partitioned-plan
+    knob, so the knn case forces that plan."""
     from gstools_core_spark.operators.kriging import GaussianModel, krige
 
     df, _, _ = _skewed_points(spark)
     cond = df.where(F.col("id") % 3 == 0)
     model = GaussianModel(var=1.0, len_scale=0.4, nugget=0.01)
-    for knn in (None, 8):
-        plain = krige(df, cond, model, radius=1.0, method="ordinary", knn=knn)
-        salted = krige(
-            df, cond, model, radius=1.0, method="ordinary", knn=knn,
-            salt_hot=8, hot_threshold=300,
-        )
-        assert _collect_krige(plain) == _collect_krige(salted)
+    with partitioned_plan():
+        for knn in (None, 8):
+            plain = krige(df, cond, model, radius=1.0, method="ordinary", knn=knn)
+            salted = krige(
+                df, cond, model, radius=1.0, method="ordinary", knn=knn,
+                salt_hot=8, hot_threshold=300,
+            )
+            assert _collect_krige(plain) == _collect_krige(salted)
 
 
 def test_krige_salting_bitwise_invariant_simple_universal(spark):
@@ -163,40 +165,42 @@ def test_krige_salting_geo_bitwise_invariant(spark):
     assert _collect_krige(plain) == _collect_krige(salted)
 
 
-def test_krige_super_grouping_bitwise_invariant(spark):
+def test_krige_super_grouping_bitwise_invariant(spark, partitioned_plan):
     """group_cells coalesces fine blocking cells into one cogroup group
     (per-group dispatch is near-serial — thousands of tiny cells WERE the
     headline krige's cost); every grouping must produce bit-identical
-    output, including combined with salting."""
+    output, including combined with salting — on the partitioned plan,
+    the only one that groups."""
     from gstools_core_spark.operators.kriging import GaussianModel, krige
 
     df, _, _ = _skewed_points(spark)
     cond = df.where(F.col("id") % 3 == 0)
     model = GaussianModel(var=1.0, len_scale=0.4, nugget=0.01)
-    for knn in (None, 8):
-        plain = krige(
-            df, cond, model, radius=1.0, method="ordinary", knn=knn,
-            group_cells=1,
+    with partitioned_plan():
+        for knn in (None, 8):
+            plain = krige(
+                df, cond, model, radius=1.0, method="ordinary", knn=knn,
+                group_cells=1,
+            )
+            grouped = krige(
+                df, cond, model, radius=1.0, method="ordinary", knn=knn,
+                group_cells=4,
+            )
+            auto = krige(
+                df, cond, model, radius=1.0, method="ordinary", knn=knn,
+                group_cells="auto",
+            )
+            want = _collect_krige(plain)
+            assert _collect_krige(grouped) == want
+            assert _collect_krige(auto) == want
+        both = krige(
+            df, cond, model, radius=1.0, method="ordinary", knn=8,
+            group_cells=4, salt_hot=8, hot_threshold=300,
         )
-        grouped = krige(
-            df, cond, model, radius=1.0, method="ordinary", knn=knn,
-            group_cells=4,
+        base = krige(
+            df, cond, model, radius=1.0, method="ordinary", knn=8, group_cells=1
         )
-        auto = krige(
-            df, cond, model, radius=1.0, method="ordinary", knn=knn,
-            group_cells="auto",
-        )
-        want = _collect_krige(plain)
-        assert _collect_krige(grouped) == want
-        assert _collect_krige(auto) == want
-    both = krige(
-        df, cond, model, radius=1.0, method="ordinary", knn=8,
-        group_cells=4, salt_hot=8, hot_threshold=300,
-    )
-    base = krige(
-        df, cond, model, radius=1.0, method="ordinary", knn=8, group_cells=1
-    )
-    assert _collect_krige(both) == _collect_krige(base)
+        assert _collect_krige(both) == _collect_krige(base)
 
 
 def test_auto_group_factor_skew_guard(spark):
@@ -294,7 +298,7 @@ def test_hot_set_caps_bounded(spark):
     assert salted_cells == cap
 
 
-def test_krige_hot_cap_bitwise_invariant(spark, monkeypatch):
+def test_krige_hot_cap_bitwise_invariant(spark, monkeypatch, partitioned_plan):
     """Capping which cells are salted / kept fine must not change a bit of
     the kriged output (it only moves cells between the split/fine and
     grouped treatments, both output-invariant)."""
@@ -308,21 +312,25 @@ def test_krige_hot_cap_bitwise_invariant(spark, monkeypatch):
         radius=1.0, method="ordinary", knn=8, group_cells="auto",
         salt_hot=4, hot_threshold=300,
     )
-    want = _collect_krige(
-        krige(df, cond, model, radius=1.0, method="ordinary", knn=8,
-              group_cells=1)
-    )
-    for cap in (None, 1, 4):  # uncapped / tighter-than-hot-set / roomy
-        monkeypatch.setattr(KM, "hot_cap", lambda spark, cap=cap: cap)
-        got = _collect_krige(krige(df, cond, model, **kw))
-        assert got == want, f"hot_cap={cap}"
+    with partitioned_plan():
+        want = _collect_krige(
+            krige(df, cond, model, radius=1.0, method="ordinary", knn=8,
+                  group_cells=1)
+        )
+        for cap in (None, 1, 4):  # uncapped / tighter-than-hot-set / roomy
+            monkeypatch.setattr(KM, "hot_cap", lambda spark, cap=cap: cap)
+            got = _collect_krige(krige(df, cond, model, **kw))
+            assert got == want, f"hot_cap={cap}"
 
 
-def test_krige_plan_time_jobs(spark):
+def test_krige_plan_time_jobs(spark, partitioned_plan):
     """krige's plan-time Spark jobs per skew config, counted by the status
     tracker around construction: explicit ints run only what they need,
     and 'auto' serves grouping and both hot sets from one summary collect
-    plus one hot-set collect (7 / 8 / 10 jobs before the single planner)."""
+    plus one hot-set collect (7 / 8 / 10 jobs before the single planner).
+    Those configs run the partitioned plan; a small knn cond set takes the
+    broadcast plan, whose one job is the bounded cond collect — whatever
+    the skew knobs say."""
     from gstools_core_spark.operators.kriging import GaussianModel, krige
 
     df, _, _ = _skewed_points(spark)
@@ -336,20 +344,28 @@ def test_krige_plan_time_jobs(spark):
         ("gc1_salt8", dict(group_cells=1, salt_hot=8), 4),
         ("gc2", dict(group_cells=2), 0),
     ]
+    broadcast = [("bcast", {}, 1), ("bcast_gc1_salt8", dict(group_cells=1, salt_hot=8), 1)]
     got = {}
+
+    def count(name, kw):
+        group = f"krige-plan-jobs-{name}"
+        sc.setJobGroup(group, group)
+        krige(df, cond, model, radius=1.0, method="ordinary", knn=8, **kw)
+        got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+
     try:
-        for name, kw, _ in configs:
-            group = f"krige-plan-jobs-{name}"
-            sc.setJobGroup(group, group)
-            krige(df, cond, model, radius=1.0, method="ordinary", knn=8, **kw)
-            got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        with partitioned_plan():
+            for name, kw, _ in configs:
+                count(name, kw)
+        for name, kw, _ in broadcast:
+            count(name, kw)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert got == {name: n for name, _, n in configs}
+    assert got == {name: n for name, _, n in configs + broadcast}
 
 
-def test_krige_salting_skipped_when_no_hot_cells(spark):
+def test_krige_salting_skipped_when_no_hot_cells(spark, partitioned_plan):
     """Plan-time hot-set detection: when no cell clears hot_threshold the
     salting machinery (cond-ring explode, broadcast joins, _salt key)
     must not appear in the plan at all — it cost ~35% of the sphere bench
@@ -361,9 +377,10 @@ def test_krige_salting_skipped_when_no_hot_cells(spark):
     cond = df.where(F.col("id") % 3 == 0)
     model = GaussianModel(var=1.0, len_scale=0.4, nugget=0.01)
     kw = dict(radius=1.0, method="ordinary", knn=8, group_cells=1)
-    plain = krige(df, cond, model, **kw)
-    skipped = krige(df, cond, model, salt_hot=8, hot_threshold=10_000, **kw)
-    engaged = krige(df, cond, model, salt_hot=8, hot_threshold=300, **kw)
+    with partitioned_plan():
+        plain = krige(df, cond, model, **kw)
+        skipped = krige(df, cond, model, salt_hot=8, hot_threshold=10_000, **kw)
+        engaged = krige(df, cond, model, salt_hot=8, hot_threshold=300, **kw)
     assert "_salt" not in skipped._jdf.queryExecution().toString()
     assert "_salt" in engaged._jdf.queryExecution().toString()
     want = _collect_krige(plain)
@@ -371,7 +388,7 @@ def test_krige_salting_skipped_when_no_hot_cells(spark):
     assert _collect_krige(engaged) == want
 
 
-def test_krige_hot_threshold_auto_fair_share(spark):
+def test_krige_hot_threshold_auto_fair_share(spark, partitioned_plan):
     """hot_threshold='auto' (default): a cell above one shuffle
     partition's fair share of targets is a straggler task by construction
     (one cogroup task per key), so it must be salted — the 800-target
@@ -383,8 +400,9 @@ def test_krige_hot_threshold_auto_fair_share(spark):
     cond = df.where(F.col("id") % 3 == 0)
     model = GaussianModel(var=1.0, len_scale=0.4, nugget=0.01)
     kw = dict(radius=1.0, method="ordinary", knn=8, group_cells=1)
-    plain = krige(df, cond, model, **kw)
-    auto = krige(df, cond, model, salt_hot=4, **kw)  # hot_threshold='auto'
+    with partitioned_plan():
+        plain = krige(df, cond, model, **kw)
+        auto = krige(df, cond, model, salt_hot=4, **kw)  # hot_threshold='auto'
     assert "_salt" in auto._jdf.queryExecution().toString()
     assert _collect_krige(auto) == _collect_krige(plain)
 
@@ -423,3 +441,134 @@ def test_krige_salting_splits_hot_cell(spark):
 def test_aqe_skew_configs_active(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
+
+
+def _both_plans(partitioned_plan, build):
+    """``build()`` under the broadcast plan and under the forced
+    partitioned plan → the two collected outputs."""
+    bcast = _collect_krige(build())
+    with partitioned_plan():
+        part = _collect_krige(build())
+    return bcast, part
+
+
+def test_krige_knn_broadcast_plan_bitwise_equals_partitioned(spark, partitioned_plan):
+    """A small knn cond set is broadcast (collected once, captured in the
+    UDF closure; targets solved where they sit): every output bit equals
+    the partitioned plan's — planar, 3-D and sphere (antimeridian) data,
+    all four solve kinds, the hot cell, targets with an empty ring, an
+    empty cond frame and a single-partition target frame."""
+    from gstools_core_spark.operators.kriging import GaussianModel, krige
+
+    df, _, _ = _skewed_points(spark)
+    df = df.withColumn("elev", F.sin(F.col("x")) + 0.1 * F.col("y"))
+    far = spark.createDataFrame(
+        [(5000 + i, 40.0 + i, -40.0, 0.0, 0.0) for i in range(3)],
+        "id long, x double, y double, val double, elev double",
+    )
+    targets = df.unionByName(far)  # three targets with an empty ring
+    cond = df.where(F.col("id") % 3 == 0)
+    model = GaussianModel(var=1.0, len_scale=0.4, nugget=0.01)
+    cases = {
+        "simple": dict(method="simple", mean=0.3),
+        "ordinary": dict(method="ordinary"),
+        "universal": dict(method="universal", drift_order=1),
+        "ked": dict(method="ordinary", drift_cols=("elev",)),
+    }
+    for name, kw in cases.items():
+        b, p = _both_plans(
+            partitioned_plan,
+            lambda: krige(targets, cond, model, radius=1.0, knn=8, **kw),
+        )
+        assert b == p, name
+        assert {r[0] for r in b if r[3] == 0} >= {5000, 5001, 5002}
+
+    # empty cond frame: every target keeps the prior in both plans
+    b, p = _both_plans(
+        partitioned_plan,
+        lambda: krige(df, cond.where(F.lit(False)), model, radius=1.0, knn=8),
+    )
+    assert b == p and all(r[3] == 0 for r in b)
+    # one-partition targets: the round-robin exchange spreads them
+    one = df.coalesce(1)
+    b, p = _both_plans(
+        partitioned_plan, lambda: krige(one, cond, model, radius=1.0, knn=8)
+    )
+    assert b == p
+
+    # 3-D
+    rng = np.random.default_rng(5)
+    P = rng.uniform(0.0, 4.0, size=(300, 3))
+    d3 = spark.createDataFrame(
+        [(i, *map(float, P[i]), float(np.sin(P[i]).sum())) for i in range(300)],
+        "id long, x double, y double, z double, val double",
+    )
+    b, p = _both_plans(
+        partitioned_plan,
+        lambda: krige(
+            d3, d3.where(F.col("id") % 2 == 0), model, radius=1.0,
+            coords=("x", "y", "z"), knn=6,
+        ),
+    )
+    assert b == p
+
+    # sphere: a third of the points straddle the antimeridian
+    lat = rng.uniform(-50.0, 50.0, 300)
+    lon = rng.uniform(-180.0, 180.0, 300)
+    lon[:100] = ((rng.uniform(-3.0, 3.0, 100) + 180.0) % 360.0) - 180.0
+    geo = spark.createDataFrame(
+        [(i, float(lat[i]), float(lon[i]), float(np.cos(lat[i]))) for i in range(300)],
+        "id long, lat double, lon double, val double",
+    )
+    gmodel = GaussianModel(var=1.0, len_scale=0.05, nugget=0.01)
+    b, p = _both_plans(
+        partitioned_plan,
+        lambda: krige(
+            geo, geo.where(F.col("id") % 3 == 0), gmodel, radius=0.08,
+            coords=("lat", "lon"), haversine=True, knn=5,
+        ),
+    )
+    assert b == p
+    seam = {r[0] for r in b if r[3] > 0 and abs(lon[r[0]]) > 177.0}
+    assert seam, "no kriged target at the seam"
+
+
+def test_krige_underdetermined_drift_keeps_prior(spark, partitioned_plan):
+    """Universal/KED neighborhoods with fewer points than drift functions
+    are underdetermined: they keep the prior (mean, sill) with n_cond 0,
+    like an empty ring, instead of a pinv solution whose bits swing with
+    last-bit changes of the Gram matrix.  drift_order=2 (6 functions) with
+    3-5 points, and KED + universal (4 functions) with 3 points — same
+    rows on the broadcast and partitioned plans, salted or not."""
+    from gstools_core_spark.operators.kriging import GaussianModel, krige
+
+    df, _, _ = _skewed_points(spark)
+    df = df.withColumn("elev", F.cos(F.col("x")) + 0.2 * F.col("y"))
+    cond = df.where(F.col("id") % 3 == 0)
+    model = GaussianModel(var=1.0, len_scale=0.4, nugget=0.01)
+    q = {r[0]: r[3] for r in _collect_krige(
+        krige(df, cond, model, radius=1.0, method="ordinary", knn=8)
+    )}
+    cases = [
+        (dict(method="universal", drift_order=2), 6, {3, 4, 5}),
+        (dict(method="universal", drift_order=1, drift_cols=("elev",)), 4, {3}),
+    ]
+    for kw, n_basis, sizes in cases:
+        small = {i for i, n in q.items() if n in sizes}
+        assert small, kw
+        for knn in (8, None):
+            plain, part = _both_plans(
+                partitioned_plan,
+                lambda: krige(df, cond, model, radius=1.0, knn=knn, **kw),
+            )
+            assert plain == part, kw
+            with partitioned_plan():
+                salted = _collect_krige(krige(
+                    df, cond, model, radius=1.0, knn=knn, salt_hot=8,
+                    hot_threshold=300, **kw,
+                ))
+            assert salted == plain, kw
+            assert all(n == 0 or n >= n_basis for _, _, _, n in plain), kw
+            if knn is not None:
+                prior = {r[0] for r in plain if r[1:] == (0.0, model.sill, 0)}
+                assert small <= prior, kw

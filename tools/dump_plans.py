@@ -44,7 +44,7 @@ def main():
         "krige ordinary (cogroup applyInArrow per cell)":
             krige(pts, pts.where(F.col("id") % 5 == 0),
                   GaussianModel(1.0, 2.0, 0.01), radius=3.0),
-        "krige moving-window (knn=8: same cogroup shape, per-target batched solves)":
+        "krige moving-window (knn=8, small cond: broadcast plan — cond in the UDF closure, one mapInArrow over round-robin targets, no cogroup)":
             krige(pts, pts.where(F.col("id") % 5 == 0),
                   GaussianModel(1.0, 2.0, 0.01), radius=3.0, knn=8),
         "filter pushdown + column pruning (lineitem scan)":
