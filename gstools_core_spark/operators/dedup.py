@@ -198,9 +198,11 @@ def minhash_dedup(
     ``transitive=True`` resolves the verified-pair graph to CONNECTED
     COMPONENTS first (operators/graph.py star contraction) and keeps only
     each component's minimum id: docs similar only THROUGH an intermediate
-    (A~C, B~C, A≁B) collapse to one survivor instead of two.  Costs
-    O(log²) extra rounds over the (small) duplicate-pair edge list only —
-    the corpus-sized tables are untouched."""
+    (A~C, B~C, A≁B) collapse to one survivor instead of two.  Costs one
+    checkpoint of the duplicate-pair edge list, then either one collect
+    and a driver-side contraction (an edge list under the broadcast
+    bound) or O(log² n) distributed star rounds over that edge list only
+    — the corpus-sized tables are untouched."""
     from gstools_core_spark.operators.cache import track
 
     if not 1 <= bands <= num_hashes:

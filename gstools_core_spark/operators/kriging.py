@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gstools_core_spark import kernels as K
+from gstools_core_spark.session import broadcast_threshold
 from gstools_core_spark.operators.pair_join import (
     check_int,
     geo_cell_exprs,
@@ -131,10 +132,7 @@ def _small_cond(
     ``spark.sql.autoBroadcastJoinThreshold`` at 8 bytes per value; else
     None.  One bounded collect (``limit(bound + 1)``); a threshold ≤ 0
     disables broadcasting and runs no job."""
-    spark = c_sel.sparkSession
-    # the typed accessor: the string form of the setting varies ("10MB",
-    # "10485760b", "-1")
-    thresh = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    thresh = broadcast_threshold(c_sel.sparkSession)
     if thresh <= 0:
         return None
     cells = list(cell_exprs)

@@ -22,7 +22,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegralType
+from pyspark.sql.types import IntegralType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 
@@ -71,19 +71,26 @@ def cosine_topk_sql(
 
 def _arrow_vec_matrix(data, id_name: str, vec_name: str):
     """(ids int64, matrix float64) from an Arrow Table/RecordBatch with a
-    list<float> column — vectorized flatten+reshape instead of np.stack
-    over n Python objects (the per-row stack was the SERIAL term that
-    capped ann strong scaling: ~7 s of driver/worker time at 200k rows
-    regardless of core count)."""
-    vec = data.column(vec_name)
+    list<float> column — see ``_arrow_matrix``."""
     ids = data.column(id_name)
-    if hasattr(vec, "combine_chunks"):  # Table columns are ChunkedArrays
-        vec, ids = vec.combine_chunks(), ids.combine_chunks()
-    if vec.null_count:
-        raise ValueError(f"{vec_name} contains nulls")
+    if hasattr(ids, "combine_chunks"):  # Table columns are ChunkedArrays
+        ids = ids.combine_chunks()
     if ids.null_count:
         # NaN→int64 is an undefined cast (INT64_MIN garbage ids)
         raise ValueError(f"{id_name} contains nulls")
+    return ids.to_numpy(zero_copy_only=False).astype(np.int64), _arrow_matrix(data, vec_name)
+
+
+def _arrow_matrix(data, vec_name: str) -> np.ndarray:
+    """float64 matrix from an Arrow Table/RecordBatch list<float> column —
+    vectorized flatten+reshape instead of np.stack over n Python objects
+    (the per-row stack was the SERIAL term that capped ann strong scaling:
+    ~7 s of driver/worker time at 200k rows regardless of core count)."""
+    vec = data.column(vec_name)
+    if hasattr(vec, "combine_chunks"):
+        vec = vec.combine_chunks()
+    if vec.null_count:
+        raise ValueError(f"{vec_name} contains nulls")
     n = len(vec)
     if n == 0:
         raise ValueError(f"empty {vec_name} batch")
@@ -96,7 +103,7 @@ def _arrow_vec_matrix(data, id_name: str, vec_name: str):
             f"ragged {vec_name} lists (widths {sorted(set(widths.tolist()))})"
         )
     flat = vec.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-    return ids.to_numpy(zero_copy_only=False).astype(np.int64), flat.reshape(n, -1)
+    return flat.reshape(n, -1)
 
 
 def cosine_topk(
@@ -196,7 +203,7 @@ def _assign_clusters_np(df: DataFrame, id_name: str, vec_col: str, centroids: np
     """mapInArrow: nearest ``n_probe`` centroid ids per vector (cosine) —
     one BLAS matmul per Arrow batch, list column flattened vectorized
     (same no-object-conversion rule as cosine_topk); the wide-quantizer
-    path."""
+    path.  Ids pass through as Arrow values, so any id type works."""
     import pyarrow as pa
 
     C = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
@@ -208,13 +215,14 @@ def _assign_clusters_np(df: DataFrame, id_name: str, vec_col: str, centroids: np
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            ids, V = _arrow_vec_matrix(batch, id_name, vec_col)
+            V = _arrow_matrix(batch, vec_col)
             V /= np.linalg.norm(V, axis=1, keepdims=True)
             sims = V @ C.T
             order = np.argsort(-sims, axis=1, kind="stable")[:, :npb]
+            ids = batch.column(id_name)
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(np.repeat(ids, npb), type=pa.int64()),
+                    ids.take(np.repeat(np.arange(len(ids)), npb)),
                     pa.array(order.reshape(-1).astype(np.int64), type=pa.int64()),
                     pa.array(
                         np.tile(np.arange(npb, dtype=np.int64), len(ids)),
@@ -224,7 +232,14 @@ def _assign_clusters_np(df: DataFrame, id_name: str, vec_col: str, centroids: np
                 names=[id_name, "cluster", "probe_rank"],
             )
 
-    return df.mapInArrow(gen, f"{id_name} long, cluster long, probe_rank long")
+    schema = StructType(
+        [
+            StructField(id_name, df.schema[id_name].dataType),
+            StructField("cluster", LongType()),
+            StructField("probe_rank", LongType()),
+        ]
+    )
+    return df.mapInArrow(gen, schema)
 
 
 def _assign_clusters_expr(df: DataFrame, id_name: str, vec_col: str, centroids: np.ndarray, n_probe: int):
@@ -494,13 +509,30 @@ def ivf_index_write(
         .partitionBy("cluster")
         .parquet(f"{path}/lists")
     )
-    cent_df = spark.createDataFrame(
-        [(i, centroids[i].tolist()) for i in range(n_clusters)],
-        "cluster long, centroid array<double>",
+    _centroid_table(spark, centroids).coalesce(1).write.mode("overwrite").parquet(
+        f"{path}/centroids"
     )
-    cent_df.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
     b.unpersist(blocking=False)
     return {"n_clusters": n_clusters, "n_vectors": n_vectors}
+
+
+def _centroid_table(spark, centroids: np.ndarray) -> DataFrame:
+    """(cluster, centroid) rows of a quantizer matrix as a JVM-side local
+    table: ``createDataFrame(pyarrow.Table)`` plans a LocalTableScan, where
+    ``createDataFrame(list)`` would be a Python RDD."""
+    import pyarrow as pa
+
+    n, dim = centroids.shape
+    offsets = pa.array(np.arange(0, n * dim + 1, dim, dtype=np.int32))
+    tbl = pa.table(
+        {
+            "cluster": pa.array(np.arange(n, dtype=np.int64)),
+            "centroid": pa.ListArray.from_arrays(
+                offsets, pa.array(centroids.astype(np.float64).ravel())
+            ),
+        }
+    )
+    return spark.createDataFrame(tbl, "cluster long, centroid array<double>")
 
 
 def ivf_ann_from_index(

@@ -18,6 +18,7 @@ from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
@@ -390,11 +391,7 @@ def point_in_polygon(
     # cover membership via a BROADCAST join, not isin literal lists — a
     # fine cell_size would otherwise inflate the plan with thousands of
     # 64-bit literals (the blowup pair_join's salting explicitly avoids)
-    spark = points.sparkSession
-    cover_rows = [(enc(c), True) for c in interior] + [
-        (enc(c), False) for c in boundary
-    ]
-    if not cover_rows:  # degenerate polygon: nothing interior or boundary
+    if not (interior or boundary):  # degenerate polygon: no cover cells
         return points.withColumn(out_col, F.lit(False))
     clash = {"_pipck", "_pipint"} & set(points.columns)
     if clash:  # a silent collision would mis-route rows between branches
@@ -402,7 +399,17 @@ def point_in_polygon(
             f"input columns {sorted(clash)} collide with point_in_polygon's "
             "internal temp columns — rename them first"
         )
-    cover = spark.createDataFrame(cover_rows, "_pipck long, _pipint boolean")
+    # a pyarrow table plans a JVM-side LocalTableScan; createDataFrame(list)
+    # would be a Python RDD that Python workers serve on every execution
+    cover = points.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "_pipck": pa.array([enc(c) for c in [*interior, *boundary]], pa.int64()),
+                "_pipint": pa.array([True] * len(interior) + [False] * len(boundary)),
+            }
+        ),
+        "_pipck long, _pipint boolean",
+    )
     tagged = points.withColumn("_pipck", key).join(
         F.broadcast(cover), "_pipck", "left"
     )

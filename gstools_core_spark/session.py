@@ -83,3 +83,11 @@ def get_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def broadcast_threshold(spark: SparkSession) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes through the typed
+    accessor (the string form of the setting varies: "10MB",
+    "10485760b", "-1").  Operators that choose a small-input plan at run
+    time bound their collect by it; a value ≤ 0 turns those plans off."""
+    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()

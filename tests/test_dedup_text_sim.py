@@ -180,6 +180,31 @@ def test_ivf_ann_full_probe_is_exact(spark):
     assert e == i  # probing every cluster = exact
 
 
+def test_ivf_ann_string_ids_on_numpy_assignment(spark):
+    """Past ``_EXPR_MAX_CLUSTERS`` clusters the centroid assignment is a
+    mapInArrow; it carries the id column's own type, so string ids give
+    the same neighbours as integer ids (regression: it declared long ids
+    and failed inside a Python worker)."""
+    rng = np.random.default_rng(27)
+    base_v = rng.normal(size=(150, 8))
+    base = _emb_df(spark, base_v)
+    queries = _emb_df(spark, base_v[:6])
+
+    def as_str(df):  # zero-padded, so string order is id order
+        return df.select(F.format_string("v%03d", "vec_id").alias("vec_id"), "embedding")
+
+    kw = dict(
+        k=3, query_id="vec_id", base_id="vec_id",
+        n_clusters=SIM._EXPR_MAX_CLUSTERS + 1, n_probe=4, iters=1,
+    )
+    want = {
+        (f"v{r['qid']:03d}", f"v{r['bid']:03d}", r["rank"])
+        for r in SIM.ivf_ann(queries, base, **kw).collect()
+    }
+    got = SIM.ivf_ann(as_str(queries), as_str(base), **kw).collect()
+    assert {(r["qid"], r["bid"], r["rank"]) for r in got} == want
+
+
 def test_ivf_rerank_arrow_matches_expr(spark):
     """rerank='arrow' (vectorized numpy row-dots, round-6 optimization —
     the expr fold is an interpreted higher-order lambda that breaks
@@ -466,6 +491,26 @@ def test_minhash_dedup_transitive_components(spark):
 
     trans = DD.minhash_dedup(df, "text", "doc_id", transitive=True, **kw)
     assert {r["doc_id"] for r in trans.collect()} == {0}
+
+
+def test_minhash_dedup_transitive_plans_agree(spark, partitioned_plan):
+    """transitive=True keeps the same documents whether the components of
+    its duplicate-pair edge list are contracted locally (small edge list)
+    or by the distributed star rounds (broadcast threshold -1)."""
+    rng = np.random.default_rng(41)
+    rows, doc_ids = [], rng.permutation(1000)[:32].tolist()
+    for chain in range(4):  # neighbours in a chain share 9 of 10 tokens
+        for i in range(8):
+            toks = " ".join(f"t{chain * 100 + i + j}" for j in range(10))
+            rows.append((doc_ids[chain * 8 + i], toks))
+    df = _docs(spark, rows)
+    kw = dict(threshold=0.7, num_hashes=64, bands=32, shingle_k=1, transitive=True)
+
+    local = {r["doc_id"] for r in DD.minhash_dedup(df, "text", "doc_id", **kw).collect()}
+    with partitioned_plan():
+        dist = DD.minhash_dedup(df, "text", "doc_id", **kw)
+    assert {r["doc_id"] for r in dist.collect()} == local
+    assert 4 <= len(local) < len(rows) // 2
 
 
 def test_simhash_combination_banding_worst_case(spark):

@@ -2,6 +2,7 @@
 actually in the executed plans (broadcasts, pushdown, pruning, no cartesian
 products, whole-stage codegen)."""
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from gstools_core_spark import plans as PL
@@ -193,3 +194,29 @@ def test_krige_knn_small_cond_is_broadcast_plan(spark, sf_dir, partitioned_plan)
     with partitioned_plan():
         plan = build()._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapCoGroupsInArrow" in plan and "hashpartitioning" in plan
+
+
+def test_small_result_tables_are_local_table_scans(spark, sf_dir, tmp_path):
+    """Driver-built tables come from ``createDataFrame(pyarrow.Table)``, a
+    JVM-side LocalTableScan, never a Python-served ``ExistingRDD``:
+    point_in_polygon's cell cover, ivf_index_write's centroid table and
+    the local plan of connected_components."""
+    from gstools_core_spark.operators.graph import connected_components
+    from gstools_core_spark.operators.similarity import _centroid_table
+    from gstools_core_spark.operators.spatial import point_in_polygon
+
+    pip = point_in_polygon(
+        _pts(spark, sf_dir), [(-5.0, -5.0), (5.0, -5.0), (5.0, 5.0), (-5.0, 5.0)],
+        cell_size=2.0,
+    )
+    cents = _centroid_table(spark, np.arange(12.0).reshape(4, 3))
+    assert [r["centroid"] for r in cents.orderBy("cluster").collect()] == [
+        [0.0, 1.0, 2.0], [3.0, 4.0, 5.0], [6.0, 7.0, 8.0], [9.0, 10.0, 11.0]
+    ]
+    edges = spark.range(20).select(
+        F.col("id").alias("a_id"), (F.col("id") + 1).alias("b_id")
+    )
+    comp = connected_components(edges)
+    for df in (pip, cents, comp):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
