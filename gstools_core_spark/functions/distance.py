@@ -1,4 +1,9 @@
-"""Distance column expressions (JVM-side, whole-stage-codegen friendly).
+"""Distance formulas as SQL text (JVM-side, whole-stage-codegen friendly).
+
+Each formula is written once and rendered per dialect (functions/sqltext):
+``SPARK`` for ``selectExpr``/``F.expr`` in the operators, ``ORACLE`` for
+the DuckDB oracle queries.  Arguments are SQL fragments (quoted column
+names, ``a.lat``, ...).
 
 Euclid uses mul/add/sqrt only — identical IEEE results in Spark, DuckDB and
 numpy, which keeps half-open bin assignment deterministic across engines
@@ -9,48 +14,32 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from gstools_core_spark.functions.sqltext import SPARK, Dialect
 
 
-def euclid(a_coords: Sequence[Column], b_coords: Sequence[Column]) -> Column:
-    """sqrt(Σ Δc²) for any dimension; squares via multiplication, not pow."""
-    acc = None
-    for ca, cb in zip(a_coords, b_coords):
-        d = ca - cb
-        term = d * d
-        acc = term if acc is None else acc + term
-    return F.sqrt(acc)
+def euclid(a: Sequence[str], b: Sequence[str]) -> str:
+    """sqrt(Σ Δc²) for any dimension; squares via multiplication, not pow.
+    No literals, so both dialects render the same text."""
+    terms = " + ".join(f"({x} - {y}) * ({x} - {y})" for x, y in zip(a, b))
+    return f"sqrt({terms})"
 
 
-def haversine(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
+def haversine(
+    lat1: str, lon1: str, lat2: str, lon2: str, dialect: Dialect = SPARK
+) -> str:
     """Great-circle central angle in RADIANS (no Earth-radius scaling),
     matching variogram.rs:107-118.  Inputs in degrees.
 
     ``arg`` is clamped to 1: rounding can push it one ulp above 1 for
     near-antipodal pairs, where sqrt(1 − arg) would be NaN and the pair
     would silently vanish from every range predicate.  The identical
-    least/minimum clamp is applied in sql_haversine and
-    kernels.haversine_dist so all three engines stay bitwise-matched."""
-    rlat1, rlat2 = F.radians(lat1), F.radians(lat2)
-    sdlat = F.sin(F.radians(lat1 - lat2) / 2.0)
-    sdlon = F.sin(F.radians(lon1 - lon2) / 2.0)
-    arg = F.least(
-        sdlat * sdlat + F.cos(rlat1) * F.cos(rlat2) * sdlon * sdlon, F.lit(1.0)
-    )
-    return 2.0 * F.atan2(F.sqrt(arg), F.sqrt(1.0 - arg))
-
-
-def sql_euclid(ax: str, ay: str, bx: str, by: str) -> str:
-    """Oracle-side SQL with the identical operation order."""
-    return f"sqrt(({ax} - {bx}) * ({ax} - {bx}) + ({ay} - {by}) * ({ay} - {by}))"
-
-
-def sql_haversine(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
-    sdlat = f"sin(radians({lat1} - {lat2}) / 2.0)"
-    sdlon = f"sin(radians({lon1} - {lon2}) / 2.0)"
+    least/minimum clamp is applied in kernels.haversine_dist, so the
+    engines stay bitwise-matched."""
+    two, one = dialect.num(2.0), dialect.num(1.0)
+    sdlat = f"sin(radians({lat1} - {lat2}) / {two})"
+    sdlon = f"sin(radians({lon1} - {lon2}) / {two})"
     arg = (
         f"least({sdlat} * {sdlat} + cos(radians({lat1})) * cos(radians({lat2}))"
-        f" * {sdlon} * {sdlon}, 1.0)"
+        f" * {sdlon} * {sdlon}, {one})"
     )
-    return f"2.0 * atan2(sqrt({arg}), sqrt(1.0 - {arg}))"
+    return dialect.mul(2.0, f"atan2(sqrt({arg}), sqrt({one} - {arg}))")

@@ -1,40 +1,35 @@
-"""Matheron / Cressie estimator column expressions (variogram.rs:41-65).
+"""Matheron / Cressie estimators as SQL text (variogram.rs:41-65).
 
 Both estimators decompose into (Σ per-pair term, pair count), so Catalyst's
 partial+final HashAggregate is exact; normalization happens once, in a final
-select (SURVEY.md §2.2).
+select (SURVEY.md §2.2).  Each formula is written once and rendered per
+dialect (functions/sqltext): ``SPARK`` for the operators, ``ORACLE`` for
+the DuckDB oracle queries.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from gstools_core_spark.functions.sqltext import SPARK, Dialect
 
 
-def estimate(diff: Column, estimator: str = "m") -> Column:
-    if estimator == "c":
-        return F.sqrt(F.abs(diff))
-    return diff * diff
-
-
-def normalize(sum_col: Column, count_col: Column, estimator: str = "m") -> Column:
-    """Final-select normalization; count 0 guarded to 1 (variogram.rs:48-51)."""
-    cf = F.greatest(count_col.cast("double"), F.lit(1.0))
-    if estimator == "c":
-        r = sum_col / cf
-        return 0.5 * (r * r * r * r) / (0.457 + 0.494 / cf + 0.045 / (cf * cf))
-    return sum_col / (2.0 * cf)
-
-
-def sql_estimate(diff: str, estimator: str = "m") -> str:
+def estimate(diff: str, estimator: str = "m") -> str:
+    """Per-pair term; no literals, so both dialects render the same text."""
     if estimator == "c":
         return f"sqrt(abs({diff}))"
     return f"({diff}) * ({diff})"
 
 
-def sql_normalize(sum_expr: str, cnt_expr: str, estimator: str = "m") -> str:
-    cf = f"greatest(CAST({cnt_expr} AS DOUBLE), 1.0)"
+def normalize(
+    sum_expr: str, cnt_expr: str, estimator: str = "m", dialect: Dialect = SPARK
+) -> str:
+    """Final-select normalization; count 0 guarded to 1 (variogram.rs:48-51)."""
+    d = dialect
+    cf = f"greatest(CAST({cnt_expr} AS DOUBLE), {d.num(1.0)})"
     if estimator == "c":
         r = f"({sum_expr} / {cf})"
-        return f"0.5 * ({r} * {r} * {r} * {r}) / (0.457 + 0.494 / {cf} + 0.045 / ({cf} * {cf}))"
-    return f"{sum_expr} / (2.0 * {cf})"
+        den = d.add(0.457, f"{d.num(0.494)} / {cf}")
+        return (
+            f"{d.mul(0.5, f'({r} * {r} * {r} * {r})')}"
+            f" / ({den} + {d.num(0.045)} / ({cf} * {cf}))"
+        )
+    return f"{sum_expr} / ({d.mul(2.0, cf)})"

@@ -92,7 +92,7 @@ def haversine_dist(pos_a: np.ndarray, pos_b: np.ndarray) -> np.ndarray:
     sdlon = np.sin(dlon / 2.0)
     # clamp: rounding can push arg one ulp above 1 for near-antipodal
     # pairs (sqrt(1-arg) = NaN); same least/minimum clamp in
-    # functions/distance.py and sql_haversine — all engines bitwise-match
+    # functions/distance.py (Spark and oracle SQL) — all engines bitwise-match
     arg = np.minimum(
         sdlat * sdlat + np.cos(lat1) * np.cos(lat2) * sdlon * sdlon, 1.0
     )

@@ -35,7 +35,6 @@ drift) kriging are provided; anisotropy via functions.models.isotropize.
 from __future__ import annotations
 
 import itertools
-import math
 import numbers
 from collections.abc import Sequence
 
@@ -45,11 +44,15 @@ from pyspark.sql import functions as F
 
 from gstools_core_spark import kernels as K
 from gstools_core_spark.session import broadcast_threshold
+from gstools_core_spark.functions.sqltext import lit, q
 from gstools_core_spark.operators.pair_join import (
     check_int,
-    geo_cell_exprs,
+    check_positive,
+    geo_cell_sql,
+    grid_cell_sql,
     haversine_grid,
     hot_cap,
+    offsets_sql,
     salt_hot_cells,
     top_hot_cells,
 )
@@ -65,30 +68,29 @@ from gstools_core_spark.functions.models import (  # noqa: F401 — re-exported 
 
 
 def _ring_stamp(
-    df: DataFrame, cell_exprs: Sequence, wrap_n: int | None = None
+    df: DataFrame,
+    cols: Sequence[str],
+    cell_exprs: Sequence[str],
+    wrap_n: int | None = None,
 ) -> DataFrame:
-    """Stamp each row onto the full 3^d ring of its blocking cell
-    (``cell_exprs`` = one cell-index Column per axis); the LAST axis wraps
-    mod ``wrap_n`` when given (longitude at the antimeridian)."""
+    """Stamp each row of ``df`` (columns ``cols``) onto the full 3^d ring
+    of its blocking cell (``cell_exprs`` = one cell-index SQL expression
+    per axis) → ``cols`` + jc0..; the LAST axis wraps mod ``wrap_n`` when
+    given (longitude at the antimeridian)."""
     d = len(cell_exprs)
-    cells = [e.alias(f"_c{k}") for k, e in enumerate(cell_exprs)]
-    offsets = F.array(
-        *[
-            F.struct(*[F.lit(o[k]).alias(f"d{k}") for k in range(d)])
-            for o in itertools.product((-1, 0, 1), repeat=d)
-        ]
-    )
-    out = df.select("*", *cells).withColumn("_off", F.explode(offsets))
-    for k in range(d):
-        e = F.col(f"_c{k}") + F.col(f"_off.d{k}")
+    offsets = offsets_sql(list(itertools.product((-1, 0, 1), repeat=d)))
+
+    def stamped(k: int) -> str:
+        e = f"_c{k} + _off.d{k}"
         if wrap_n is not None and k == d - 1:
-            e = F.pmod(e, F.lit(wrap_n))
-        out = out.withColumn(f"jc{k}", e)
-    return out.drop(*[f"_c{k}" for k in range(d)], "_off")
+            e = f"pmod({e}, {wrap_n})"
+        return e
 
-
-def _grid_cells(coords: Sequence[str], radius: float) -> list:
-    return [F.floor(F.col(c) / F.lit(radius)).cast("long") for c in coords]
+    return (
+        df.selectExpr("*", *[f"{e} AS _c{k}" for k, e in enumerate(cell_exprs)])
+        .selectExpr("*", f"explode({offsets}) AS _off")
+        .selectExpr(*cols, *[f"{stamped(k)} AS jc{k}" for k in range(d)])
+    )
 
 
 def _literal_cells(spark, rows: list, cols: Sequence[str]) -> DataFrame | None:
@@ -98,10 +100,11 @@ def _literal_cells(spark, rows: list, cols: Sequence[str]) -> DataFrame | None:
     workers serve on every execution)."""
     if not rows:
         return None
-    structs = [
-        F.struct(*(F.lit(r[c]).cast("long").alias(c) for c in cols)) for r in rows
-    ]
-    return spark.range(1).select(F.inline(F.array(*structs)))
+    structs = ", ".join(
+        "struct(" + ", ".join(f"CAST({lit(r[c])} AS BIGINT) AS {c}" for c in cols) + ")"
+        for r in rows
+    )
+    return spark.range(1).selectExpr(f"inline(array({structs}))")
 
 
 def _tbl_cols(tbl, cols) -> dict:
@@ -120,33 +123,37 @@ def _stack(dd: dict, cols) -> np.ndarray:
 
 
 def _small_cond(
-    c_sel: DataFrame,
-    x_cols: Sequence[str],
-    cell_exprs: Sequence,
+    cond: DataFrame,
+    x_exprs: dict,
+    cell_exprs: Sequence[str],
     keys: Sequence[str],
     wrap_n: int | None,
 ) -> dict | None:
-    """The conditioning rows as numpy columns — ``x_cols`` plus their
-    blocking-cell ``keys`` (the last one taken mod ``wrap_n`` when given) —
+    """The conditioning rows as numpy columns — ``x_exprs`` (name → SQL
+    over ``cond``) plus their blocking-cell ``keys`` (the last one taken
+    mod ``wrap_n`` when given) —
     when they fit under Spark's own broadcast bound,
     ``spark.sql.autoBroadcastJoinThreshold`` at 8 bytes per value; else
     None.  One bounded collect (``limit(bound + 1)``); a threshold ≤ 0
     disables broadcasting and runs no job."""
-    thresh = broadcast_threshold(c_sel.sparkSession)
+    thresh = broadcast_threshold(cond.sparkSession)
     if thresh <= 0:
         return None
     cells = list(cell_exprs)
     if wrap_n is not None:
-        cells[-1] = F.pmod(cells[-1], F.lit(wrap_n))
-    bound = thresh // (8 * (len(x_cols) + len(keys)))
+        cells[-1] = f"pmod({cells[-1]}, {wrap_n})"
+    bound = thresh // (8 * (len(x_exprs) + len(keys)))
     tbl = (
-        c_sel.select(*x_cols, *[e.alias(k) for e, k in zip(cells, keys)])
+        cond.selectExpr(
+            *[f"{e} AS {n}" for n, e in x_exprs.items()],
+            *[f"{e} AS {k}" for e, k in zip(cells, keys)],
+        )
         .limit(bound + 1)
         .toArrow()
     )
     if tbl.num_rows > bound:
         return None
-    return _tbl_cols(tbl, [*x_cols, *keys])
+    return _tbl_cols(tbl, [*x_exprs, *keys])
 
 
 def plan_cells(
@@ -191,15 +198,17 @@ def plan_cells(
     of the two thresholds; each set is the part above its own threshold
     (a prefix of the count-descending order, so identical to a separate
     ``top_hot_cells`` per set)."""
+    if group_cells != "auto" and not salt_hot:
+        return group_cells, None, None  # no decision to make: no job
     spark = t.sparkSession
-    counts = t.groupBy(*keys).agg(F.count(F.lit(1)).alias("_hot_n"))
+    counts = t.groupBy(*keys).agg(F.expr("count(1) AS _hot_n"))
     skew_t = hot_t = None
     if group_cells == "auto":
-        row = counts.agg(
-            F.count(F.lit(1)).alias("cells"),
-            F.max("_hot_n").alias("mx"),
-            F.avg("_hot_n").alias("av"),
-            F.sum("_hot_n").alias("total"),
+        row = counts.selectExpr(
+            "count(1) AS cells",
+            "max(_hot_n) AS mx",
+            "avg(_hot_n) AS av",
+            "sum(_hot_n) AS total",
         ).collect()[0]
         n_cells = row["cells"] or 1
         av = row["av"] or 1.0
@@ -420,10 +429,7 @@ def krige(
         or drift_order not in (0, 1, 2)
     ):
         raise ValueError(f"drift_order must be 0, 1 or 2, got {drift_order!r}")
-    if not (
-        isinstance(radius, numbers.Real) and math.isfinite(radius) and radius > 0
-    ):
-        raise ValueError(f"radius must be finite and > 0, got {radius!r}")
+    check_positive("radius", radius)
     d = len(coords)
     wrap_n: int | None = None
     if haversine:
@@ -432,19 +438,19 @@ def krige(
         lat_c, lon_c = coords
         if max_abs_lat is None:
             row = (
-                targets.select(F.col(lat_c).alias("_l"))
-                .union(cond.select(F.col(lat_c).alias("_l")))
-                .agg(F.max(F.abs(F.col("_l"))))
+                targets.selectExpr(f"{q(lat_c)} AS _l")
+                .union(cond.selectExpr(f"{q(lat_c)} AS _l"))
+                .agg(F.expr("max(abs(_l))"))
                 .first()
             )
             max_abs_lat = float(row[0]) if row and row[0] is not None else 0.0
         cell_lat, n_lon, lon_w = haversine_grid(radius, max_abs_lat)
         if n_lon > 1:
             wrap_n = n_lon
-        t_cells = geo_cell_exprs(lat_c, lon_c, cell_lat, n_lon, lon_w)
+        t_cells = geo_cell_sql(lat_c, lon_c, cell_lat, n_lon, lon_w)
         d_block = len(t_cells)  # 1 when lon blocking is disabled
     else:
-        t_cells = _grid_cells(coords, radius)
+        t_cells = grid_cell_sql(coords, radius)
         d_block = d
 
     if drift_cols and method == "simple":
@@ -455,21 +461,18 @@ def krige(
 
     jkeys = [f"jc{k}" for k in range(d_block)]
     fine = list(jkeys)
-    t = targets.select(
-        F.col(target_id).alias("tid"),
-        *[F.col(c).alias(f"t{k}") for k, c in enumerate(coords)],
-        *[F.col(dc).alias(td_cols[j]) for j, dc in enumerate(drift_cols)],
-        *[e.alias(jkeys[k]) for k, e in enumerate(t_cells)],
+    t = targets.selectExpr(
+        f"{q(target_id)} AS tid",
+        *[f"{q(c)} AS t{k}" for k, c in enumerate(coords)],
+        *[f"{q(dc)} AS {td_cols[j]}" for j, dc in enumerate(drift_cols)],
+        *[f"{e} AS {jkeys[k]}" for k, e in enumerate(t_cells)],
     )
-    c_sel = cond.select(
-        *[F.col(cc).alias(f"c{k}") for k, cc in enumerate(coords)],
-        *[F.col(dc).alias(cd_cols[j]) for j, dc in enumerate(drift_cols)],
-        F.col(cond_val).alias("cval"),
-    )
-    if haversine:
-        c_cells = geo_cell_exprs("c0", "c1", cell_lat, n_lon, lon_w)
-    else:
-        c_cells = _grid_cells(tuple(f"c{k}" for k in range(d)), radius)
+    # cond's columns: name → SQL over cond
+    c_proj = {
+        **{f"c{k}": q(cc) for k, cc in enumerate(coords)},
+        **{cd_cols[j]: q(dc) for j, dc in enumerate(drift_cols)},
+        "cval": q(cond_val),
+    }
 
     nugget = model.nugget
     sill = model.sill
@@ -642,15 +645,19 @@ def krige(
         )
 
     out_cols = [
-        F.col("tid").alias(target_id),
-        *[F.col(f"t{k}").alias(c) for k, c in enumerate(coords)],
+        f"tid AS {q(target_id)}",
+        *[f"t{k} AS {q(c)}" for k, c in enumerate(coords)],
         "krige_mean",
         "krige_var",
         "n_cond",
     ]
     spark = targets.sparkSession
     par = spark.sparkContext.defaultParallelism
-    cdat = _small_cond(c_sel, x_cols, c_cells, fine, wrap_n) if knn is not None else None
+    cdat = None
+    if knn is not None:
+        # cond shares the targets' coordinate names, so t_cells apply
+        x_exprs = {n: c_proj[n] for n in x_cols}
+        cdat = _small_cond(cond, x_exprs, t_cells, fine, wrap_n)
     if cdat is not None:
         # BROADCAST plan: the cond columns ride in the UDF closure and
         # every target is solved where it sits — no planner jobs, no ring
@@ -684,13 +691,18 @@ def krige(
         # one round-robin exchange: an under-partitioned target frame (one
         # small file) would otherwise krige in a single task
         out = t.repartition(par).mapInArrow(solve_batches, out_schema)
-        return out.select(*out_cols)
+        return out.selectExpr(*out_cols)
 
     # PARTITIONED plan: cond rows ring-stamped and cogrouped with the
     # targets by blocking cell, skew-planned by plan_cells
-    c = _ring_stamp(c_sel, c_cells, wrap_n=wrap_n)
+    c_sel = cond.selectExpr(*[f"{e} AS {n}" for n, e in c_proj.items()])
+    if haversine:
+        c_cells = geo_cell_sql("c0", "c1", cell_lat, n_lon, lon_w)
+    else:
+        c_cells = grid_cell_sql([f"c{k}" for k in range(d)], radius)
+    c = _ring_stamp(c_sel, list(c_proj), c_cells, wrap_n=wrap_n)
     mult, keep_fine, hot = plan_cells(
-        t, jkeys, par, hot_cap(spark), group_cells, salt_hot, hot_threshold
+        t, jkeys, par, hot_cap(par), group_cells, salt_hot, hot_threshold
     )
     if hot is not None:
         t, c, jkeys = salt_hot_cells(t, c, hot, jkeys, "tid", salt_hot)
@@ -698,7 +710,7 @@ def krige(
     group_keys = jkeys  # fine cells (+ _salt): one cell per group
     if mult > 1:
         skeys = [f"sc{k}" for k in range(d_block)]
-        sexprs = [F.floor(F.col(f) / F.lit(mult)) for f in fine]
+        sexprs = [f"FLOOR({f} / {mult})" for f in fine]
         flag_cols = []
         if keep_fine is not None:
             # HYBRID grouping (auto under skew): the skew-causing cells —
@@ -711,24 +723,24 @@ def krige(
             # two cogroup inputs makes _gfine's attribute id ambiguous at
             # the cogroup analysis (self-join lineage)
             t = t.join(
-                F.broadcast(keep_fine.withColumn("_gfine", F.lit(True))),
-                fine,
-                "left",
+                F.broadcast(keep_fine.selectExpr("*", "true AS _gfine")), fine, "left"
             )
             c = c.join(
-                F.broadcast(keep_fine.withColumn("_gfine", F.lit(True))),
-                fine,
-                "left",
+                F.broadcast(keep_fine.selectExpr("*", "true AS _gfine")), fine, "left"
             )
-            flag = F.coalesce(F.col("_gfine"), F.lit(False))
-            sexprs = [F.when(flag, F.col(f)).otherwise(e) for f, e in zip(fine, sexprs)]
-            flag_cols = [flag.alias("_scf")]
+            flag = "coalesce(_gfine, false)"
+            sexprs = [
+                f"CASE WHEN {flag} THEN {f} ELSE {e} END" for f, e in zip(fine, sexprs)
+            ]
+            flag_cols = [f"{flag} AS _scf"]
         # drop the join helper AFTER the select evaluates flag/sexprs: it
         # would otherwise ride into the cogrouped Arrow frames (an extra
         # boolean per row through the exchange, unused by solve_cells)
-        scols = [e.cast("long").alias(s) for e, s in zip(sexprs, skeys)]
-        t = t.select("*", *scols, *flag_cols).drop("_gfine")
-        c = c.select("*", *scols, *flag_cols).drop("_gfine")
+        scols = [f"CAST({e} AS BIGINT) AS {s}" for e, s in zip(sexprs, skeys)]
+        t = t.selectExpr("*", *scols, *flag_cols)
+        c = c.selectExpr("*", *scols, *flag_cols)
+        if keep_fine is not None:
+            t, c = t.drop("_gfine"), c.drop("_gfine")
         # _salt (and the fine/super disambiguation flag) stay group keys
         group_keys = (
             skeys + (["_scf"] if flag_cols else []) + jkeys[d_block:]
@@ -753,4 +765,4 @@ def krige(
         .cogroup(c.groupBy(*group_keys))
         .applyInArrow(solve_cells, out_schema)
     )
-    return out.select(*out_cols)
+    return out.selectExpr(*out_cols)

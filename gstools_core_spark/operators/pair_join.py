@@ -46,7 +46,10 @@ Haversine blocking (lat/lon degrees, max_dist a central angle in radians):
   a pair whose computed dist is below max_dist has a computed chord far
   inside the 1e-9 relative / 1e-12 absolute margin.  Kept pairs and their
   ``dist`` bits are therefore unchanged; only the haversine evaluations
-  on far candidates are saved.
+  on far candidates are saved — provided the chord conjunct stays AHEAD
+  of the haversine tree in the join condition.  It is its own ``where``
+  before the distance filter, and Catalyst keeps that conjunct order when
+  it merges both into the join; the plan pins (PLANS.md) show it.
 
 Skew: hot cells (the north rule's dense pages) are handled by (a) AQE skew
 join splitting — the join is a plain shuffle equi-join, so AQE can split
@@ -66,6 +69,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gstools_core_spark.functions import distance as D
+from gstools_core_spark.functions.sqltext import lit, q
 
 
 def half_stencil(d: int) -> list[tuple[int, ...]]:
@@ -79,6 +83,14 @@ def half_stencil(d: int) -> list[tuple[int, ...]]:
     return [zero] + [
         o for o in itertools.product((-1, 0, 1), repeat=d) if o > zero
     ]
+
+
+def offsets_sql(offsets: Sequence[tuple[int, ...]]) -> str:
+    """Literal array of stencil offsets as structs (d0, d1, …)."""
+    return "array(" + ", ".join(
+        "struct(" + ", ".join(f"{v} AS d{k}" for k, v in enumerate(o)) + ")"
+        for o in offsets
+    ) + ")"
 
 
 def haversine_grid(
@@ -107,34 +119,46 @@ def haversine_grid(
     return cell_lat, n_lon, 360.0 / n_lon
 
 
-def geo_cell_exprs(
+def geo_cell_sql(
     lat_col: str, lon_col: str, cell_lat: float, n_lon: int, lon_w: float
-) -> list[Column]:
-    """Blocking-cell index Columns for the wrapped haversine grid — the ONE
-    definition of geo blocking cells (pair join, geo kNN, geo kriging all
-    share it; the lon==180.0 seam clamp lives only here)."""
-    cells = [F.floor(F.col(lat_col) / F.lit(cell_lat)).cast("long")]
+) -> list[str]:
+    """Blocking-cell index expressions (SQL text) for the wrapped haversine
+    grid — the ONE definition of geo blocking cells (pair join, geo kNN,
+    geo kriging all share it; the lon==180.0 seam clamp lives only here)."""
+    cells = [f"CAST(FLOOR({q(lat_col)} / {lit(cell_lat)}) AS BIGINT)"]
     if n_lon > 1:
-        cy = F.floor((F.col(lon_col) + F.lit(180.0)) / F.lit(lon_w)).cast("long")
+        cy = f"CAST(FLOOR(({q(lon_col)} + 180.0D) / {lit(lon_w)}) AS BIGINT)"
         # lon == 180.0 exactly lands in cell n_lon → clamp to the seam cell
-        cells.append(F.least(cy, F.lit(n_lon - 1)))
+        cells.append(f"least({cy}, {n_lon - 1})")
     return cells
 
 
-def _unit_vector(lat_col: str, lon_col: str) -> list[Column]:
+def geo_cell_exprs(
+    lat_col: str, lon_col: str, cell_lat: float, n_lon: int, lon_w: float
+) -> list[Column]:
+    """``geo_cell_sql`` as Columns."""
+    return [F.expr(e) for e in geo_cell_sql(lat_col, lon_col, cell_lat, n_lon, lon_w)]
+
+
+def grid_cell_sql(coords: Sequence[str], width: float) -> list[str]:
+    """Planar blocking-cell index expressions: floor(c / width) per axis."""
+    return [f"CAST(FLOOR({q(c)} / {lit(width)}) AS BIGINT)" for c in coords]
+
+
+def _unit_vector(lat_col: str, lon_col: str) -> list[str]:
     """(cos φ cos λ, cos φ sin λ, sin φ) of (lat, lon) degree columns."""
-    lat, lon = F.radians(F.col(lat_col)), F.radians(F.col(lon_col))
-    return [F.cos(lat) * F.cos(lon), F.cos(lat) * F.sin(lon), F.sin(lat)]
+    lat, lon = f"radians({q(lat_col)})", f"radians({q(lon_col)})"
+    return [f"cos({lat}) * cos({lon})", f"cos({lat}) * sin({lon})", f"sin({lat})"]
 
 
-def hot_cap(spark) -> int:
-    """Bound on every broadcast hot set: the top ``max(64, 16 ×
-    defaultParallelism)`` cells by count.  A heavy-tailed density can push
+def hot_cap(par: int) -> int:
+    """Bound on every broadcast hot set: the top ``max(64, 16 × par)``
+    cells by count (``par`` = defaultParallelism).  A heavy-tailed density can push
     unboundedly many cells over a threshold; the barely-hot tail gains
     nothing from splitting but would ship to every task.  Output is
     invariant under any cap (pinned) — it only moves cells between the
     split and plain treatments."""
-    return max(64, 16 * spark.sparkContext.defaultParallelism)
+    return max(64, 16 * par)
 
 
 def top_hot_cells(
@@ -148,9 +172,9 @@ def top_hot_cells(
     the ONE recipe behind every hot-set selection (pair_join salting,
     kriging salting, auto grouping's keep-fine).  Any change to the
     tie-break or cap semantics happens here and nowhere else."""
-    hot = counts.where(F.col("_hot_n") > threshold)
+    hot = counts.where(f"_hot_n > {lit(threshold)}")
     if cap is not None:
-        hot = hot.orderBy(F.col("_hot_n").desc(), *keys).limit(cap)
+        hot = hot.orderBy(F.desc("_hot_n"), *keys).limit(cap)
     return hot
 
 
@@ -165,6 +189,20 @@ def check_int(name: str, value, lo: int, *allowed) -> None:
             return
     want = " or ".join([*map(repr, allowed), f"an int >= {lo}"])
     raise ValueError(f"{name} must be {want}, got {value!r}")
+
+
+def check_positive(name: str, value) -> None:
+    """Reject ``value`` at the API boundary with a ValueError naming the
+    parameter, unless it is a finite real number > 0 (``dist < NaN`` is
+    true in Spark: a NaN bound would keep every pair)."""
+    if (
+        isinstance(value, numbers.Real)
+        and not isinstance(value, bool)
+        and math.isfinite(value)
+        and value > 0
+    ):
+        return
+    raise ValueError(f"{name} must be finite and > 0, got {value!r}")
 
 
 def salt_hot_cells(
@@ -186,30 +224,18 @@ def salt_hot_cells(
     ``replicated`` rows are copied to all salts, so every hashed row still
     meets its cell's full replicated side exactly once.  Cold cells pay
     nothing (salt 0, no replication)."""
-    hot = hot.select(*keys, F.lit(True).alias("_hot"))
+    hot = hot.selectExpr(*map(q, keys), "true AS _hot")
+    salt = f"pmod(xxhash64({q(id_col)}), {salt_hot})"
     hashed = (
         hashed.join(F.broadcast(hot), keys, "left")
-        .withColumn(
-            "_salt",
-            F.when(
-                F.col("_hot"), F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_hot))
-            )
-            .otherwise(F.lit(0))
-            .cast("long"),
-        )
+        .selectExpr("*", f"CAST(CASE WHEN _hot THEN {salt} ELSE 0 END AS BIGINT) AS _salt")
         .drop("_hot")
     )
+    salts = f"CASE WHEN _hot THEN sequence(0, {salt_hot - 1}) ELSE array(0) END"
     replicated = (
         replicated.join(F.broadcast(hot), keys, "left")
-        .withColumn(
-            "_salt",
-            F.explode(
-                F.when(
-                    F.col("_hot"), F.sequence(F.lit(0), F.lit(salt_hot - 1))
-                ).otherwise(F.array(F.lit(0)))
-            ),
-        )
-        .withColumn("_salt", F.col("_salt").cast("long"))
+        .selectExpr("*", f"explode({salts}) AS _salt")
+        .withColumn("_salt", F.expr("CAST(_salt AS BIGINT)"))
         .drop("_hot")
     )
     return hashed, replicated, [*keys, "_salt"]
@@ -246,6 +272,7 @@ def pair_join(
     still produced exactly once (the left row's salt selects one of the S
     replicas).  Unsalted hot-tail cells are still split by AQE skew join.
     """
+    check_positive("max_dist", max_dist)
     check_int("salt_hot", salt_hot, 2, None)
     wrap_n: int | None = None
     if haversine:
@@ -253,74 +280,59 @@ def pair_join(
         if max_abs_lat is None:
             # one cheap column-pruned aggregate; never silently clamp the
             # secant factor (the round-1 lon-degeneracy bug)
-            row = points.agg(F.max(F.abs(F.col(lat_c)))).first()
+            row = points.agg(F.expr(f"max(abs({q(lat_c)}))")).first()
             max_abs_lat = float(row[0]) if row and row[0] is not None else 0.0
         cell_lat, n_lon, lon_w = haversine_grid(max_dist, max_abs_lat)
-        cell_exprs = geo_cell_exprs(lat_c, lon_c, cell_lat, n_lon, lon_w)
+        cell_exprs = geo_cell_sql(lat_c, lon_c, cell_lat, n_lon, lon_w)
         if n_lon > 1:
             wrap_n = n_lon
     else:
-        cell_exprs = [
-            F.floor(F.col(c) / F.lit(max_dist)).cast("long") for c in coords
-        ]
+        cell_exprs = grid_cell_sql(coords, max_dist)
 
     d = len(cell_exprs)
     # underscore prefix: must never collide with user coordinate/payload
     # names (api.py names its coords c0, c1, ...)
     cell_names = [f"_bc{k}" for k in range(d)]
     jkeys = [f"jc{k}" for k in range(d)]
+    cols = [id_col, *coords, *payload_cols]
+    a_id, b_id = q(f"a_{id_col}"), q(f"b_{id_col}")
 
-    base_cols = [F.col(id_col), *[F.col(c) for c in coords], *[F.col(c) for c in payload_cols]]
     # haversine: per-point unit vectors on the sphere, for the chord
     # pre-filter in front of the exact distance test
-    unit = _unit_vector(coords[0], coords[1]) if haversine else []
-    pts = points.select(
-        *base_cols,
-        *[e.alias(n) for e, n in zip(cell_exprs, cell_names)],
-        *[u.alias(f"_u{k}") for k, u in enumerate(unit)],
+    unit = _unit_vector(lat_c, lon_c) if haversine else []
+    pts = points.selectExpr(
+        *map(q, cols),
+        *[f"{e} AS {n}" for e, n in zip(cell_exprs, cell_names)],
+        *[f"{u} AS _u{k}" for k, u in enumerate(unit)],
     )
 
-    offsets = F.array(
-        *[
-            F.struct(*[F.lit(o[k]).alias(f"d{k}") for k in range(d)])
-            for o in half_stencil(d)
-        ]
-    )
-
-    def stamped(k: int) -> Column:
-        e = F.col(cell_names[k]) + F.col(f"_off.d{k}")
+    def stamped(k: int) -> str:
+        e = f"{cell_names[k]} + _off.d{k}"
         if wrap_n is not None and k == d - 1:
-            e = F.pmod(e, F.lit(wrap_n))  # antimeridian wrap on the lon axis
+            e = f"pmod({e}, {wrap_n})"  # antimeridian wrap on the lon axis
         return e
 
-    same_cell = None
-    for k in range(d):
-        t = F.col(f"_off.d{k}") == 0
-        same_cell = t if same_cell is None else same_cell & t
-
-    left = (
-        pts.withColumn("_off", F.explode(offsets))
-        .select(
-            *[F.col(c).alias(f"a_{c}") for c in [id_col, *coords, *payload_cols]],
-            *[stamped(k).alias(jkeys[k]) for k in range(d)],
-            same_cell.alias("_same_cell"),
-            *[F.col(f"_u{k}").alias(f"_au{k}") for k in range(len(unit))],
-        )
+    same_cell = " AND ".join(f"_off.d{k} = 0" for k in range(d))
+    left = pts.selectExpr("*", f"explode({offsets_sql(half_stencil(d))}) AS _off").selectExpr(
+        *[f"{q(c)} AS {q('a_' + c)}" for c in cols],
+        *[f"{stamped(k)} AS {jkeys[k]}" for k in range(d)],
+        f"{same_cell} AS _same_cell",
+        *[f"_u{k} AS _au{k}" for k in range(len(unit))],
     )
-    right = pts.select(
-        *[F.col(c).alias(f"b_{c}") for c in [id_col, *coords, *payload_cols]],
-        *[F.col(cell_names[k]).alias(jkeys[k]) for k in range(d)],
-        *[F.col(f"_u{k}").alias(f"_bu{k}") for k in range(len(unit))],
+    right = pts.selectExpr(
+        *[f"{q(c)} AS {q('b_' + c)}" for c in cols],
+        *[f"{cell_names[k]} AS {jkeys[k]}" for k in range(d)],
+        *[f"_u{k} AS _bu{k}" for k in range(len(unit))],
     )
 
     join_keys = list(jkeys)
     if salt_hot:
         hot = top_hot_cells(
-            pts.groupBy(*cell_names).agg(F.count(F.lit(1)).alias("_hot_n")),
+            pts.groupBy(*cell_names).agg(F.expr("count(1) AS _hot_n")),
             cell_names,
             hot_threshold,
-            hot_cap(points.sparkSession),
-        ).select(*[F.col(cell_names[k]).alias(jkeys[k]) for k in range(d)])
+            hot_cap(points.sparkSession.sparkContext.defaultParallelism),
+        ).selectExpr(*[f"{cell_names[k]} AS {jkeys[k]}" for k in range(d)])
         left, right, join_keys = salt_hot_cells(
             left, right, hot, join_keys, f"a_{id_col}", salt_hot
         )
@@ -333,42 +345,40 @@ def pair_join(
     # same-cell matches appear in both orientations → keep a < b there;
     # cross-cell matches are generated exactly once by the half-stencil
     joined = left.join(right, on=join_keys, how="inner").where(
-        ~F.col("_same_cell") | (F.col(f"a_{id_col}") < F.col(f"b_{id_col}"))
+        f"NOT _same_cell OR {a_id} < {b_id}"
     )
 
+    a = [q(f"a_{c}") for c in coords]
+    b = [q(f"b_{c}") for c in coords]
     if haversine:
         if max_dist < math.pi:  # beyond π every pair qualifies
-            # chord pre-filter (module docstring): Catalyst evaluates it
-            # ahead of the haversine tree, conjunct order is kept
-            chord2 = None
-            for k in range(3):
-                dk = F.col(f"_au{k}") - F.col(f"_bu{k}")
-                chord2 = dk * dk if chord2 is None else chord2 + dk * dk
+            # chord pre-filter (module docstring).  Its own where, ahead
+            # of the distance filter: Catalyst merges both into the join
+            # condition in this order and keeps the conjunct order, so
+            # the haversine tree runs only on the pairs the chord keeps
+            chord2 = " + ".join(
+                f"(_au{k} - _bu{k}) * (_au{k} - _bu{k})" for k in range(3)
+            )
             bound = 2.0 * math.sin(max_dist / 2.0) * (1.0 + 1e-9) + 1e-12
-            joined = joined.where(chord2 < F.lit(bound * bound))
-        dist = D.haversine(
-            F.col(f"a_{coords[0]}"), F.col(f"a_{coords[1]}"),
-            F.col(f"b_{coords[0]}"), F.col(f"b_{coords[1]}"),
-        )
+            joined = joined.where(f"{chord2} < {lit(bound * bound)}")
+        dist = D.haversine(a[0], a[1], b[0], b[1])
     else:
-        dist = D.euclid(
-            [F.col(f"a_{c}") for c in coords], [F.col(f"b_{c}") for c in coords]
-        )
+        dist = D.euclid(a, b)
 
     # canonicalize: output pair always has a_id < b_id (swap sides if needed)
-    swap = F.col(f"a_{id_col}") > F.col(f"b_{id_col}")
-
-    def pick(col: str, side: str) -> Column:
+    def pick(col: str, side: str) -> str:
         other = "b" if side == "a" else "a"
-        return F.when(swap, F.col(f"{other}_{col}")).otherwise(F.col(f"{side}_{col}")).alias(f"{side}_{col}")
+        return (
+            f"CASE WHEN {a_id} > {b_id} THEN {q(f'{other}_{col}')}"
+            f" ELSE {q(f'{side}_{col}')} END AS {q(f'{side}_{col}')}"
+        )
 
-    out_cols = [
+    return joined.selectExpr(
         pick(id_col, "a"),
         pick(id_col, "b"),
-        dist.alias("dist"),
+        f"{dist} AS dist",
         *[pick(c, "a") for c in coords],
         *[pick(c, "b") for c in coords],
         *[pick(c, "a") for c in payload_cols],
         *[pick(c, "b") for c in payload_cols],
-    ]
-    return joined.select(*out_cols).where(F.col("dist") < F.lit(max_dist))
+    ).where(f"dist < {lit(max_dist)}")

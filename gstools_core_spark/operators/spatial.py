@@ -25,6 +25,7 @@ from pyspark.sql.types import BooleanType
 from pyspark.sql.window import Window
 
 from gstools_core_spark.functions import distance as D
+from gstools_core_spark.functions.sqltext import q as quote
 
 
 def knn_join(
@@ -77,8 +78,8 @@ def knn_join(
         bcx.alias("jcx"),
         bcy.alias("jcy"),
     )
-    dist = D.euclid(
-        [F.col(f"q_{c}") for c in coords], [F.col(f"b_{c}") for c in coords]
+    dist = F.expr(
+        D.euclid([quote(f"q_{c}") for c in coords], [quote(f"b_{c}") for c in coords])
     )
     cand = (
         q.join(b, ["jcx", "jcy"])
@@ -155,9 +156,7 @@ def geo_knn_join(
         lat_cell.alias("jcx"),
         lon_cell.alias("jcy"),
     )
-    dist = D.haversine(
-        F.col("q_lat"), F.col("q_lon"), F.col("b_lat"), F.col("b_lon")
-    )
+    dist = F.expr(D.haversine("q_lat", "q_lon", "b_lat", "b_lon"))
     cand = (
         q.join(b, ["jcx", "jcy"])
         .withColumn("dist", dist)
@@ -238,8 +237,8 @@ def knn_join_bruteforce(
     b = base.select(
         F.col(base_id).alias("bid"), *[F.col(c).alias(f"b_{c}") for c in coords]
     )
-    dist = D.euclid(
-        [F.col(f"q_{c}") for c in coords], [F.col(f"b_{c}") for c in coords]
+    dist = F.expr(
+        D.euclid([quote(f"q_{c}") for c in coords], [quote(f"b_{c}") for c in coords])
     )
     cand = q.crossJoin(b).withColumn("dist", dist)
     w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("bid").asc())

@@ -17,6 +17,7 @@ normalize(0, 0) = 0 matching the reference's count==0 guard.
 from __future__ import annotations
 
 import math
+import numbers
 from collections.abc import Sequence
 
 import numpy as np
@@ -25,31 +26,58 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gstools_core_spark.functions import estimators as E
+from gstools_core_spark.functions.sqltext import lit, q
 from gstools_core_spark.operators.pair_join import pair_join
+
+
+def check_bin_edges(bin_edges: Sequence[float]) -> None:
+    """Reject bad ``bin_edges`` at the API boundary, before any job: they
+    must be finite and strictly increasing, with a last edge > 0 (the last
+    edge is the pair join's ``max_dist``).  Unordered edges would build
+    inverted bins next to overlapping ones; a repeated edge an empty bin."""
+    edges = list(bin_edges)
+    if (
+        edges
+        and all(
+            isinstance(e, numbers.Real) and not isinstance(e, bool) and math.isfinite(e)
+            for e in edges
+        )
+        and all(lo < hi for lo, hi in zip(edges, edges[1:]))
+        and edges[-1] > 0
+    ):
+        return
+    raise ValueError(
+        "bin_edges must be finite and strictly increasing, with a last edge"
+        f" > 0, got {bin_edges!r}"
+    )
 
 
 def bins_df(spark: SparkSession, bin_edges: Sequence[float]) -> DataFrame:
     """(bin_id long, lo double, hi double) built JVM-side from literals:
     ``createDataFrame(list)`` is a Python RDD that Python workers serve on
     every execution of the otherwise pure-JVM variogram plan."""
-    rows = [
-        F.struct(F.lit(i), F.lit(float(lo)), F.lit(float(hi)))
+    rows = ", ".join(
+        f"struct({i}, {lit(float(lo))}, {lit(float(hi))})"
         for i, (lo, hi) in enumerate(zip(bin_edges[:-1], bin_edges[1:]))
-    ]
+    )
     # the cast names the fields and types an empty array (one edge, no bins)
-    bins = F.array(*rows).cast("array<struct<bin_id:bigint,lo:double,hi:double>>")
-    return spark.range(1).select(F.inline(bins))
+    bins = f"CAST(array({rows}) AS array<struct<bin_id:bigint,lo:double,hi:double>>)"
+    return spark.range(1).selectExpr(f"inline({bins})")
 
 
-def bin_id_col(dist, bin_edges: Sequence[float]):
+def bin_id_col(dist: str, bin_edges: Sequence[float]) -> str:
     """Half-open [lo, hi) bin assignment as a codegen'd CASE chain — the
     exact comparison semantics of the reference's bin predicate
     (variogram.rs:517-519) without a nested-loop join against the bins
     table on the (huge) pair stream.  Assumes dist already filtered to
-    [edges[0], edges[-1])."""
-    expr = F.lit(len(bin_edges) - 2).cast("long")
+    [edges[0], edges[-1]).  Nested CASEs, one per edge, as F.when chains
+    built them."""
+    expr = f"CAST({len(bin_edges) - 2} AS BIGINT)"
     for i in range(len(bin_edges) - 2, 0, -1):
-        expr = F.when(dist < F.lit(float(bin_edges[i])), F.lit(i - 1).cast("long")).otherwise(expr)
+        expr = (
+            f"CASE WHEN {dist} < {lit(float(bin_edges[i]))}"
+            f" THEN CAST({i - 1} AS BIGINT) ELSE {expr} END"
+        )
     return expr
 
 
@@ -59,7 +87,7 @@ def _from_first_edge(pairs: DataFrame, bin_edges: Sequence[float]) -> DataFrame:
     already failed pair_join's ``dist < max_dist``."""
     if bin_edges[0] <= 0:
         return pairs
-    return pairs.where(F.col("dist") >= F.lit(float(bin_edges[0])))
+    return pairs.where(f"dist >= {lit(float(bin_edges[0]))}")
 
 
 def _diffs_exploded(
@@ -76,16 +104,35 @@ def _diffs_exploded(
     whole-stage codegen (the 8× directional-variogram lesson; unequal
     lengths pad with null on both forms and are dropped by the filter)."""
     if vals_array:
-        v = val_cols[0]
-        out = pairs.withColumn(
-            "_z", F.explode(F.arrays_zip(F.col(f"a_{v}"), F.col(f"b_{v}")))
-        ).withColumn(
-            "f_diff", F.col(f"_z.a_{v}") - F.col(f"_z.b_{v}")
-        ).drop("_z")
+        a, b = q(f"a_{val_cols[0]}"), q(f"b_{val_cols[0]}")
+        out = (
+            pairs.selectExpr("*", f"explode(arrays_zip({a}, {b})) AS _z")
+            .selectExpr("*", f"_z.{a} - _z.{b} AS f_diff")
+            .drop("_z")
+        )
     else:
-        diffs = F.array(*[F.col(f"a_{v}") - F.col(f"b_{v}") for v in val_cols])
-        out = pairs.withColumn("f_diff", F.explode(diffs))
-    return out.where(F.col("f_diff").isNotNull() & ~F.isnan(F.col("f_diff")))
+        diffs = ", ".join(f"{q(f'a_{v}')} - {q(f'b_{v}')}" for v in val_cols)
+        out = pairs.selectExpr("*", f"explode(array({diffs})) AS f_diff")
+    return out.where("f_diff IS NOT NULL AND NOT isnan(f_diff)")
+
+
+def _binned_gamma(
+    per_field: DataFrame, frame: DataFrame, keys: list[str], estimator: str
+) -> DataFrame:
+    """Per-``keys`` sums and counts of ``per_field``, LEFT-joined onto the
+    dense ``frame`` of bins and normalized in one final select."""
+    agg = per_field.groupBy(*keys).agg(
+        F.expr(f"sum({E.estimate('f_diff', estimator)}) AS vsum"),
+        F.expr("count(1) AS counts"),
+    )
+    gamma = E.normalize("coalesce(vsum, 0.0D)", "coalesce(counts, 0)", estimator)
+    return frame.join(agg, keys, "left").selectExpr(
+        *keys,
+        "lo",
+        "hi",
+        f"{gamma} AS gamma",
+        "CAST(coalesce(counts, 0) AS BIGINT) AS counts",
+    )
 
 
 def variogram_unstructured(
@@ -110,6 +157,7 @@ def variogram_unstructured(
     an array<double> of stacked field realizations (counts include field
     multiplicity, matching the reference).
     """
+    check_bin_edges(bin_edges)
     spark = points.sparkSession
     haversine = distance != "e"
     pairs = pair_join(
@@ -124,28 +172,9 @@ def variogram_unstructured(
     )
     pairs = _from_first_edge(pairs, bin_edges)
 
-    binned = pairs.withColumn("bin_id", bin_id_col(F.col("dist"), bin_edges))
+    binned = pairs.selectExpr("*", f"{bin_id_col('dist', bin_edges)} AS bin_id")
     per_field = _diffs_exploded(binned, val_cols, vals_array)
-    agg = per_field.groupBy("bin_id").agg(
-        F.sum(E.estimate(F.col("f_diff"), estimator)).alias("vsum"),
-        F.count(F.lit(1)).alias("counts"),
-    )
-    bins = bins_df(spark, bin_edges)
-    out = (
-        bins.join(agg, "bin_id", "left")
-        .select(
-            "bin_id",
-            "lo",
-            "hi",
-            E.normalize(
-                F.coalesce(F.col("vsum"), F.lit(0.0)),
-                F.coalesce(F.col("counts"), F.lit(0)),
-                estimator,
-            ).alias("gamma"),
-            F.coalesce(F.col("counts"), F.lit(0)).cast("long").alias("counts"),
-        )
-    )
-    return out
+    return _binned_gamma(per_field, bins_df(spark, bin_edges), ["bin_id"], estimator)
 
 
 def dir_test_col(
@@ -153,8 +182,8 @@ def dir_test_col(
     direction: Sequence[float],
     angles_tol: float,
     bandwidth: float,
-):
-    """Direction-cone pass predicate as a Column (variogram.rs:243-291).
+) -> str:
+    """Direction-cone pass predicate as SQL (variogram.rs:243-291).
 
     ``coords`` are point coord names (a_/b_ prefixed pair columns assumed);
     ``direction`` is one LITERAL unit vector — directions are known at plan
@@ -162,32 +191,22 @@ def dir_test_col(
     arriving via a broadcast nested-loop join (which breaks whole-stage
     codegen and measured 8× slower at sf0.1).
     """
-    s_prod = None
-    for c, dv in zip(coords, direction):
-        term = (F.col(f"a_{c}") - F.col(f"b_{c}")) * F.lit(float(dv))
-        s_prod = term if s_prod is None else s_prod + term
+    delta = [f"({q(f'a_{c}')} - {q(f'b_{c}')})" for c in coords]
+    s_prod = " + ".join(f"{dc} * {lit(float(dv))}" for dc, dv in zip(delta, direction))
 
-    passed = F.lit(True)
+    passed = "true"
     if bandwidth > 0.0:
-        b_acc = None
-        for c, dv in zip(coords, direction):
-            r = (F.col(f"a_{c}") - F.col(f"b_{c}")) - s_prod * F.lit(float(dv))
-            term = r * r
-            b_acc = term if b_acc is None else b_acc + term
-        passed = passed & (F.sqrt(b_acc) < F.lit(bandwidth))
+        r = [f"({dc} - ({s_prod}) * {lit(float(dv))})" for dc, dv in zip(delta, direction)]
+        b_acc = " + ".join(f"{rk} * {rk}" for rk in r)
+        passed = f"{passed} AND sqrt({b_acc}) < {lit(bandwidth)}"
 
     # ANSI-safe denominator: dist == 0 rows are excluded by the reject
     # predicate below, but common-subexpression elimination may hoist the
     # division out of the short-circuit guard — never divide by 0
-    denom = F.when(F.col("dist") > 0.0, F.col("dist")).otherwise(F.lit(1.0))
-    angle = F.abs(s_prod) / denom
+    angle = f"abs({s_prod}) / (CASE WHEN dist > 0.0D THEN dist ELSE 1.0D END)"
     # dist == 0 always passes; angle >= 1 passes (numerical guard)
-    reject = (
-        (F.col("dist") > 0.0)
-        & (angle < 1.0)
-        & (F.acos(angle) >= F.lit(angles_tol))
-    )
-    return passed & ~reject
+    reject = f"dist > 0.0D AND {angle} < 1.0D AND acos({angle}) >= {lit(angles_tol)}"
+    return f"{passed} AND NOT ({reject})"
 
 
 def variogram_directional(
@@ -216,6 +235,7 @@ def variogram_directional(
     nested-loop join, no row_number shuffle.  (The former join-based plan
     measured 29s vs plain variogram 3.5s at sf0.1; this one ~2×.)
     """
+    check_bin_edges(bin_edges)
     if angles_tol <= 0:
         raise ValueError("tolerance for angle search masks must be > 0")
     spark = points.sparkSession
@@ -229,48 +249,39 @@ def variogram_directional(
     )
     pairs = _from_first_edge(pairs, bin_edges)
 
-    passing = F.array(
-        *[
-            F.when(
-                dir_test_col(coords, directions[i], angles_tol, bandwidth),
-                F.lit(i).cast("long"),
-            )
-            for i in range(len(directions))
-        ]
-    )
+    passing = "array(" + ", ".join(
+        f"CASE WHEN {dir_test_col(coords, dv, angles_tol, bandwidth)}"
+        f" THEN CAST({i} AS BIGINT) END"
+        for i, dv in enumerate(directions)
+    ) + ")"
     if separate_dirs:
         # lowest-index passing direction; array_min skips the null (failed)
         # slots — replaces a full row_number window shuffle
-        with_dirs = pairs.withColumn("dir_id", F.array_min(passing)).where(
-            F.col("dir_id").isNotNull()
-        )
+        with_dirs = pairs.selectExpr("*", f"array_min({passing}) AS dir_id")
     else:
-        # explode unconditionally, drop nulls after: F.filter is a
+        # explode unconditionally, drop nulls after: filter() is a
         # higher-order function (interpreted, breaks whole-stage codegen);
         # a plain explode + IsNotNull filter stays fully codegen'd
-        with_dirs = pairs.withColumn("dir_id", F.explode(passing)).where(
-            F.col("dir_id").isNotNull()
-        )
+        with_dirs = pairs.selectExpr("*", f"explode({passing}) AS dir_id")
+    with_dirs = with_dirs.where("dir_id IS NOT NULL")
 
-    binned = with_dirs.withColumn("bin_id", bin_id_col(F.col("dist"), bin_edges))
+    binned = with_dirs.selectExpr("*", f"{bin_id_col('dist', bin_edges)} AS bin_id")
     per_field = _diffs_exploded(binned, val_cols)
-    agg = per_field.groupBy("dir_id", "bin_id").agg(
-        F.sum(E.estimate(F.col("f_diff"), estimator)).alias("vsum"),
-        F.count(F.lit(1)).alias("counts"),
+    frame = (
+        spark.range(len(directions))
+        .selectExpr("id AS dir_id")
+        .crossJoin(bins_df(spark, bin_edges))
     )
-    bins = bins_df(spark, bin_edges)
-    frame = spark.range(len(directions)).select(F.col("id").alias("dir_id")).crossJoin(bins)
-    return frame.join(agg, ["dir_id", "bin_id"], "left").select(
-        "dir_id",
-        "bin_id",
-        "lo",
-        "hi",
-        E.normalize(
-            F.coalesce(F.col("vsum"), F.lit(0.0)),
-            F.coalesce(F.col("counts"), F.lit(0)),
-            estimator,
-        ).alias("gamma"),
-        F.coalesce(F.col("counts"), F.lit(0)).cast("long").alias("counts"),
+    return _binned_gamma(per_field, frame, ["dir_id", "bin_id"], estimator)
+
+
+def _lag_gamma(spark: SparkSession, nx: int, agg: DataFrame, estimator: str) -> DataFrame:
+    """(lag, gamma) dense over lags 0..nx-1 from per-lag (vsum, counts);
+    γ(0) = 0."""
+    gamma = E.normalize("coalesce(vsum, 0.0D)", "coalesce(counts, 0)", estimator)
+    lags = spark.range(int(nx)).selectExpr("id AS lag")
+    return lags.join(agg, "lag", "left").selectExpr(
+        "lag", f"CASE WHEN lag = 0 THEN 0.0D ELSE {gamma} END AS gamma"
     )
 
 
@@ -306,28 +317,16 @@ def variogram_structured(
     if mask_col:
         pairs = pairs.where(~F.col(f"a_{mask_col}") & ~F.col(f"b_{mask_col}"))
 
-    diff = F.col(f"a_{val_col}") - F.col(f"b_{val_col}")
+    diff = f"{q(f'a_{val_col}')} - {q(f'b_{val_col}')}"
     agg = (
-        pairs.select(
-            (F.col(f"b_{i_col}") - F.col(f"a_{i_col}")).cast("long").alias("lag"),
-            E.estimate(diff, estimator).alias("est"),
+        pairs.selectExpr(
+            f"CAST({q(f'b_{i_col}')} - {q(f'a_{i_col}')} AS BIGINT) AS lag",
+            f"{E.estimate(diff, estimator)} AS est",
         )
         .groupBy("lag")
         .agg(F.sum("est").alias("vsum"), F.count(F.lit(1)).alias("counts"))
     )
-    lags = spark.range(int(nx)).select(F.col("id").alias("lag"))
-    return lags.join(agg, "lag", "left").select(
-        "lag",
-        F.when(F.col("lag") == 0, F.lit(0.0))
-        .otherwise(
-            E.normalize(
-                F.coalesce(F.col("vsum"), F.lit(0.0)),
-                F.coalesce(F.col("counts"), F.lit(0)),
-                estimator,
-            )
-        )
-        .alias("gamma"),
-    )
+    return _lag_gamma(spark, nx, agg, estimator)
 
 
 def variogram_structured_fast(
@@ -395,16 +394,4 @@ def variogram_structured_fast(
     agg = partials.groupBy("lag").agg(
         F.sum("vsum").alias("vsum"), F.sum("counts").alias("counts")
     )
-    lags = spark.range(int(nx)).select(F.col("id").alias("lag"))
-    return lags.join(agg, "lag", "left").select(
-        "lag",
-        F.when(F.col("lag") == 0, F.lit(0.0))
-        .otherwise(
-            E.normalize(
-                F.coalesce(F.col("vsum"), F.lit(0.0)),
-                F.coalesce(F.col("counts"), F.lit(0)),
-                estimator,
-            )
-        )
-        .alias("gamma"),
-    )
+    return _lag_gamma(spark, nx, agg, estimator)

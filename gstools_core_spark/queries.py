@@ -25,9 +25,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gstools_core_spark.functions import cells as C
+from gstools_core_spark.functions import distance as D
 from gstools_core_spark.functions import estimators as E
 from gstools_core_spark.functions import points as P
 from gstools_core_spark.functions import text as T
+from gstools_core_spark.functions.sqltext import ORACLE
 from gstools_core_spark.operators import dedup as DD
 from gstools_core_spark.operators import similarity as SIM
 from gstools_core_spark.operators import spatial as S
@@ -117,8 +119,8 @@ SQL_PAIRS = """pairs AS (
 
 
 def _sql_variogram(edges, estimator="m", est_expr=None) -> str:
-    est = est_expr or E.sql_estimate("fd", estimator)
-    gamma = E.sql_normalize("coalesce(vsum, 0.0)", "coalesce(cnt, 0)", estimator)
+    est = est_expr or E.estimate("fd", estimator)
+    gamma = E.normalize("coalesce(vsum, 0.0)", "coalesce(cnt, 0)", estimator, dialect=ORACLE)
     return f"""WITH {SQL_PTS}, {SQL_PAIRS}, {_sql_bins(edges)},
 agg AS (
   SELECT bin_id, sum({est}) AS vsum, count(*) AS cnt
@@ -186,8 +188,8 @@ def q_variogram_3d(spark, sf_dir):
 def _sql_variogram_3d() -> str:
     d3 = ("sqrt((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)"
           " + (a.z - b.z) * (a.z - b.z))")
-    est = E.sql_estimate("fd", "m")
-    gamma = E.sql_normalize("coalesce(vsum, 0.0)", "coalesce(cnt, 0)", "m")
+    est = E.estimate("fd", "m")
+    gamma = E.normalize("coalesce(vsum, 0.0)", "coalesce(cnt, 0)", "m", dialect=ORACLE)
     return f"""WITH pts AS (
   SELECT doc_id AS id, {P.sql_x('doc_id')} AS x, {P.sql_y('doc_id')} AS y,
          {P.sql_z('doc_id')} AS z, {VAL_SQL} AS val
@@ -210,10 +212,9 @@ FROM bins b LEFT JOIN agg ON b.bin_id = agg.bin_id"""
 
 
 def _sql_variogram_haversine() -> str:
-    from gstools_core_spark.functions.distance import sql_haversine
 
-    hav = sql_haversine("a.lat", "a.lon", "b.lat", "b.lon")
-    gamma = E.sql_normalize("coalesce(vsum, 0.0)", "coalesce(cnt, 0)", "m")
+    hav = D.haversine("a.lat", "a.lon", "b.lat", "b.lon", ORACLE)
+    gamma = E.normalize("coalesce(vsum, 0.0)", "coalesce(cnt, 0)", "m", dialect=ORACLE)
     return f"""WITH pts AS (
   SELECT doc_id AS id, {P.sql_lat('doc_id')} AS lat, {P.sql_lon('doc_id')} AS lon,
          {VAL_SQL} AS val
@@ -292,7 +293,7 @@ def _sql_dir_test(angles_tol: float, bandwidth: float) -> str:
 
 
 def _sql_variogram_directional(directions, angles_tol, bandwidth, separate) -> str:
-    gamma = E.sql_normalize("coalesce(vsum, 0.0)", "coalesce(cnt, 0)", "m")
+    gamma = E.normalize("coalesce(vsum, 0.0)", "coalesce(cnt, 0)", "m", dialect=ORACLE)
     sep_filter = (
         "QUALIFY row_number() OVER (PARTITION BY a_id, b_id ORDER BY dir_id) = 1"
         if separate
@@ -341,7 +342,7 @@ def q_variogram_directional_3d(spark, sf_dir):
 
 
 def _sql_variogram_directional_3d() -> str:
-    gamma = E.sql_normalize("coalesce(vsum, 0.0)", "coalesce(cnt, 0)", "m")
+    gamma = E.normalize("coalesce(vsum, 0.0)", "coalesce(cnt, 0)", "m", dialect=ORACLE)
     dir_rows = ", ".join(
         f"({i}, CAST({dx!r} AS DOUBLE), CAST({dy!r} AS DOUBLE), CAST({dz!r} AS DOUBLE))"
         for i, (dx, dy, dz) in enumerate(DIRECTIONS_3D)
@@ -417,7 +418,7 @@ def q_variogram_ma_structured(spark, sf_dir):
 
 
 def _sql_variogram_structured(masked: bool) -> str:
-    gamma = E.sql_normalize("coalesce(vsum, 0.0)", "coalesce(cnt, 0)", "m")
+    gamma = E.normalize("coalesce(vsum, 0.0)", "coalesce(cnt, 0)", "m", dialect=ORACLE)
     mask_pred = "AND NOT a.masked AND NOT b.masked" if masked else ""
     return f"""WITH {SQL_GRID},
 agg AS (
@@ -452,7 +453,7 @@ def q_variogram_multifield(spark, sf_dir):
 
 
 def _sql_variogram_multifield() -> str:
-    gamma = E.sql_normalize("coalesce(vsum, 0.0)", "coalesce(cnt, 0)", "m")
+    gamma = E.normalize("coalesce(vsum, 0.0)", "coalesce(cnt, 0)", "m", dialect=ORACLE)
     return f"""WITH pts AS (
   SELECT doc_id AS id, {P.sql_x('doc_id')} AS x, {P.sql_y('doc_id')} AS y,
          {VAL_SQL} AS val, {VAL2_SQL} AS val2
@@ -582,9 +583,8 @@ def q_geo_knn(spark, sf_dir):
 
 
 def _sql_geo_knn() -> str:
-    from gstools_core_spark.functions.distance import sql_haversine
 
-    hav = sql_haversine("q.lat", "q.lon", "b.lat", "b.lon")
+    hav = D.haversine("q.lat", "q.lon", "b.lat", "b.lon", ORACLE)
     return f"""WITH geo AS (
   SELECT doc_id AS id, {P.sql_lat('doc_id')} AS lat, {P.sql_lon('doc_id')} AS lon
   FROM documents
@@ -1055,15 +1055,14 @@ def _sql_krige_geo_small() -> str:
     flaps on another host, coarsen the rounding quantum rather than
     patching one engine (same policy as ADVICE round-2 on
     krige_raster_small)."""
-    from gstools_core_spark.functions.distance import sql_haversine
 
     sig = 1.01
     ls = GEO_SMALL_LS
     cov = f"exp(-((({{d}}) / {ls!r}) * (({{d}}) / {ls!r})))"
-    c1 = cov.format(d=sql_haversine("x", "y", "px1", "py1"))
-    c2 = cov.format(d=sql_haversine("x", "y", "px2", "py2"))
-    c12 = cov.format(d=sql_haversine("px1", "py1", "px2", "py2"))
-    dist = sql_haversine("t.lat", "t.lon", "c.lat", "c.lon")
+    c1 = cov.format(d=D.haversine("x", "y", "px1", "py1", ORACLE))
+    c2 = cov.format(d=D.haversine("x", "y", "px2", "py2", ORACLE))
+    c12 = cov.format(d=D.haversine("px1", "py1", "px2", "py2", ORACLE))
+    dist = D.haversine("t.lat", "t.lon", "c.lat", "c.lon", ORACLE)
     return f"""WITH pts0 AS (
   SELECT doc_id AS id,
          {P.sql_x('doc_id')} * 6.0 AS lat,

@@ -12,6 +12,16 @@ first task, so ``get_session`` puts the package's parent directory on
 ``PYTHONPATH`` before the JVM launches; the engine's own UDF closures need
 it too when the driver's cwd is not the checkout.  A caller can still
 override the daemon through ``extra_conf``.
+
+``spark.python.sql.dataFrameDebugging.enabled`` is off.  When it is on,
+PySpark wraps every ``Column`` method and function call to capture its
+Python call site: about 5 extra py4j round trips per call
+(``getActiveSession``, a conf read, ``PySparkCurrentOrigin.set``/``clear``,
+``isDefined``) plus a stack walk, and the captured site points inside
+this package, not at the caller's code.  A plan of a few hundred Column
+calls paid more for the capture than for the calls.  ``extra_conf`` can
+turn it back on, but PySpark reads the setting once per process, at the
+first Column call made under an active session.
 """
 
 from __future__ import annotations
@@ -79,6 +89,7 @@ def get_session(
         .config("spark.driver.memory", f"{memory_gb}g")
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "gstools_core_spark.worker_daemon")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -102,9 +102,7 @@ def streaming_variogram(
         F.col("cx").alias("jcx"),
         F.col("cy").alias("jcy"),
     )
-    dist = D.euclid(
-        [F.col("a_x"), F.col("a_y")], [F.col("b_x"), F.col("b_y")]
-    )
+    dist = F.expr(D.euclid(["a_x", "a_y"], ["b_x", "b_y"]))
     pairs = (
         left.join(right, ["jcx", "jcy", "w"])
         .where(~F.col("_same_cell") | (F.col("a_id") < F.col("b_id")))
@@ -116,7 +114,7 @@ def streaming_variogram(
             (F.col("dist") >= F.lit(float(bin_edges[0])))
             & (F.col("dist") < F.lit(max_dist))
         )
-        .withColumn("bin_id", bin_id_col(F.col("dist"), list(bin_edges)))
+        .withColumn("bin_id", F.expr(bin_id_col("dist", list(bin_edges))))
         .where(F.col("bin_id").isNotNull())
     )
     diff = F.col("a_val") - F.col("b_val")

@@ -277,7 +277,7 @@ def test_chord_prefilter_keeps_every_pair_and_dist_bit(spark):
             ).collect()
         }
         a, b = df.alias("a"), df.alias("b")
-        dist = D.haversine(F.col("a.lat"), F.col("a.lon"), F.col("b.lat"), F.col("b.lon"))
+        dist = F.expr(D.haversine("a.lat", "a.lon", "b.lat", "b.lon"))
         brute = (
             a.crossJoin(b)
             .where(F.col("a.id") < F.col("b.id"))

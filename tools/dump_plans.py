@@ -1,10 +1,15 @@
 """Dump the physical plans of the headline operators to PLANS.md —
 reviewable evidence that the plans are the intended ones (ring equi-join,
-broadcast dims, partial aggregation, pushdown, no cartesian products)."""
+broadcast dims, partial aggregation, pushdown, no cartesian products).
+
+Expression ids (``#80L``) and exchange plan ids are normalized to ``#`` and
+``plan_id=``: any rebuild renumbers them, and a diff between two trees
+should show plan changes only."""
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 from pathlib import Path
 
@@ -35,6 +40,13 @@ def main():
     sections = {
         "variogram_unstructured (cell-blocked pair join → CASE binning → partial+final agg)":
             V.variogram_unstructured(pts, [0.0, 1.0, 2.0, 3.0]),
+        "variogram_unstructured haversine (wrapped lon cells, chord pre-filter ahead of the haversine tree)":
+            V.variogram_unstructured(
+                pts.select("id", (F.col("y") * 3.0).alias("lat"),
+                           (F.col("x") * 9.0).alias("lon"), "val"),
+                [0.0, 0.01, 0.02, 0.03], coords=("lat", "lon"), distance="h",
+                max_abs_lat=60.0,
+            ),
         "knn_join (ring candidates → per-query top-k window)":
             S.knn_join(pts.where(F.col("id") % 10 == 0), pts, k=5, radius=3.0,
                        query_id="id", base_id="id"),
@@ -88,7 +100,9 @@ def main():
 
     out = ["# PLANS — physical plans of the headline operators", ""]
     for title, df in sections.items():
-        out += [f"## {title}", "", "```", PL.plan_string(df).strip(), "```", ""]
+        plan = re.sub(r"#\d+L?", "#", PL.plan_string(df).strip())
+        plan = re.sub(r"plan_id=\d+", "plan_id=", plan)
+        out += [f"## {title}", "", "```", plan, "```", ""]
     Path("PLANS.md").write_text("\n".join(out))
     print("wrote PLANS.md", sum(len(s) for s in out))
     spark.stop()
