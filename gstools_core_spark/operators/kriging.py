@@ -41,6 +41,7 @@ from collections.abc import Sequence
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from gstools_core_spark import kernels as K
 from gstools_core_spark.session import broadcast_threshold
@@ -590,10 +591,15 @@ def krige(
     y_cols = [*t_cols, *td_cols]
     x_cols = [*(f"c{k}" for k in range(d)), "cval", *cd_cols]
     t_names = ["tid", *y_cols, *fine]
-    out_schema = (
-        "tid long, "
-        + ", ".join(f"{tc} double" for tc in t_cols)
-        + ", krige_mean double, krige_var double, n_cond long"
+    # a StructType, not DDL text: PySpark parses DDL with one more JVM call
+    out_schema = StructType(
+        [
+            StructField("tid", LongType()),
+            *[StructField(tc, DoubleType()) for tc in t_cols],
+            StructField("krige_mean", DoubleType()),
+            StructField("krige_var", DoubleType()),
+            StructField("n_cond", LongType()),
+        ]
     )
 
     # Arrow-native plumbing: one Arrow→numpy conversion per Arrow frame

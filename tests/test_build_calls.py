@@ -101,7 +101,14 @@ CASES = {
         ),
         284,
     ),
-    # 311, its cond collect included
+    # 311, its cond collect included.  The build makes 61 calls, every one
+    # on a fixed path with no data-dependent count: the target and cond
+    # selects (7 each: one list element per column, toSeq, selectExpr),
+    # the parallelism and broadcast-threshold reads (2 + 3), limit (1),
+    # PySpark's toArrow (10), repartition (1), PySpark's mapInArrow with
+    # its UDF (22) and the output select (8).  The bound is the 5× ceiling
+    # (311 / 5); a PySpark upgrade that adds a call to toArrow or
+    # mapInArrow shows up here first.
     "krige knn broadcast": (
         lambda f: krige(
             f["geo"], f["geo_cond"], GaussianModel(1.0, 0.05, 0.01), radius=0.05,
